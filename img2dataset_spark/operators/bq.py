@@ -47,10 +47,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from img2dataset_spark.operators.ivf_search import Codec, search
 from img2dataset_spark.operators.similarity import (
     _QUANT,
     _as_double,
-    collect_query_rows as _collect_query_rows,
+    long_array_sql,
 )
 
 
@@ -140,48 +141,40 @@ def encode_query_bits(
     return _pack_bits(bits)[0]
 
 
-def _hamming_expr(qw: np.ndarray, num_planes: int):
-    """The popcount scan expression: ceil(p/32) JVM ``bit_count(codes[w]
-    ^ literal)`` terms summed — whole-stage codegen.  Guarded: a codes
-    table encoded with a DIFFERENT num_planes yields null array reads
-    -> null hamming, and Spark's default asc ordering is NULLS FIRST —
-    misconfigured rows would silently rank top-k.  Fail loudly naming
-    the mismatch instead."""
-    dist = None
-    for w, val in enumerate(qw):
-        term = F.bit_count(
-            F.col("codes")[w].bitwiseXOR(F.lit(int(val)).cast("long"))
-        ).cast("long")
-        dist = term if dist is None else dist + term
-    # NULL codes must hit the error branch too: size(NULL) is NULL under
-    # default sizeOfNull=false, the != predicate would evaluate NULL, the
-    # when() would fall through, and the NULL hamming would rank top-k
-    # under asc NULLS FIRST — the exact hazard this guard exists for.
-    return F.when(
-        F.col("codes").isNull() | (F.size(F.col("codes")) != len(qw)),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"bq: codes width != {len(qw)} words "
-                    f"(num_planes={num_planes}) — got "
-                ),
-                # coalesce: concat(NULL) would null the whole message
-                # and raise_error(NULL) reports nothing useful
-                F.coalesce(
-                    F.size(F.col("codes")).cast("string"), F.lit("NULL")
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(dist)
+class _BQCodec(Codec):
+    """The BQ codec of the IVF search core: the query's packed sign-bit
+    words are plan literals and each row costs ceil(p/32) JVM
+    ``bit_count(codes[w] ^ word)`` popcounts summed — the cheapest scan
+    of the three families.  Hamming estimates the ANGLE, so the angle
+    probe (``"cosine"``) is this family's assignment-consistent rule."""
 
+    out_col = "hamming"
+    probe_metric = "cosine"
 
-def _query_words(query_df: DataFrame, num_planes: int, dim: int) -> np.ndarray:
-    qrow = _collect_query_rows(query_df, ("query_vec",))
-    if len(qrow) != 1:
-        raise ValueError(f"query_df must have exactly 1 row, got {len(qrow)}")
-    return encode_query_bits(
-        [float(x) for x in qrow[0]["query_vec"]], num_planes, dim
-    )
+    def __init__(self, num_planes: int, dim: int):
+        self.num_planes, self.dim = num_planes, dim
+        self.n_words = (num_planes + 31) // 32
+
+    def dist_sql(self, book, qvecs, qid_sql):
+        words = [encode_query_bits(qv, self.num_planes, self.dim)
+                 for qv in qvecs]
+        terms = []
+        for w in range(self.n_words):
+            if qid_sql is None:
+                qw = f"{int(words[0][w])}L"
+            else:
+                qw = f"element_at({long_array_sql(q[w] for q in words)}, {qid_sql})"
+            terms.append(f"CAST(bit_count((`codes`[{w}] ^ {qw})) AS BIGINT)")
+        return "(" + " + ".join(terms) + ")"
+
+    def literals(self, nq, n_tables):
+        return nq * self.n_words, f"{nq} queries x {self.n_words} packed words"
+
+    def width(self):
+        return (
+            self.n_words,
+            f"{self.n_words} words (num_planes={self.num_planes})",
+        )
 
 
 def bq_topk(
@@ -196,11 +189,8 @@ def bq_topk(
     plan literals and each row is ceil(p/32) JVM popcounts —
     whole-stage codegen, no UDF, no join, no vector read.  Returns
     (id, hamming), (hamming asc, id asc), limit k."""
-    qw = _query_words(query_df, num_planes, dim)
-    scored = codes_df.select(
-        F.col(id_col), _hamming_expr(qw, num_planes).alias("hamming")
-    )
-    return scored.orderBy(F.asc("hamming"), F.asc(id_col)).limit(k)
+    return search(_BQCodec(num_planes, dim), "bq_topk", codes_df, None,
+                  query_df, k=k, id_col=id_col)
 
 
 def bq_refine_topk(
@@ -224,7 +214,6 @@ def bq_refine_topk(
     full vector scan.  Output (id, cos_sim) follows cosine_topk's
     convention (round6 quantized cosine, desc, id-asc ties), directly
     comparable to the brute-force baseline and to ivfpq_refine_topk.
-    Mirrors pq.ivfpq_refine_topk:294-341.
 
     ``refine_factor=None`` (the default since round 13) sizes the
     candidate pool from the CORPUS: a flat screen scans all n rows —
@@ -236,34 +225,10 @@ def bq_refine_topk(
     at 256; exact recall is monotone in rf (the re-rank is exact over
     a superset), so the auto size can only match or beat the old
     fixed 4.  Pass an int to pin the pre-r13 behavior."""
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(codes_df),
-            1,
-            target_occupancy=refine_target_occupancy,
-        )
-    cand = bq_topk(
-        codes_df, query_df, k=k * refine_factor,
-        num_planes=num_planes, dim=dim, id_col=id_col,
-    )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    pruned = e.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    q = F.broadcast(query_df.select("query_vec"))
-    scored = pruned.crossJoin(q).select(
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return search(_BQCodec(num_planes, dim), "bq_refine_topk", codes_df,
+                  None, query_df, k=k, id_col=id_col, vectors_df=vectors_df,
+                  vec_col=vec_col, refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
 
 
 def ivfbq_index(
@@ -292,6 +257,26 @@ def ivfbq_index(
     )
 
 
+def ivfbq_topk(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    query_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    num_planes: int = 64,
+    dim: int = 64,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """IVF-pruned Hamming search (FAISS ``IndexBinaryIVF``): rank coarse
+    cells by cosine(query, centroid) (the shared probe rule — 6-dp
+    rounded, cell-ascending ties), keep the top ``nprobe``, and
+    popcount-scan ONLY those cells' packed words (a static ``cell IN``
+    prune).  Returns (id, hamming), (asc, id asc), top k.
+    ``nprobe=None`` auto-sizes ceil(sqrt(num_cells))."""
+    return search(_BQCodec(num_planes, dim), "ivfbq_topk", index_df,
+                  ivf_codebook, query_df, k=k, nprobe=nprobe, id_col=id_col)
+
+
 def ivfbq_refine_topk(
     index_df: DataFrame,
     ivf_codebook: DataFrame,
@@ -307,89 +292,14 @@ def ivfbq_refine_topk(
     refine_target_occupancy: int = 1024,
 ) -> DataFrame:
     """The full binary composition — coarse probe × popcount screen ×
-    exact re-rank (FAISS IndexBinaryIVF + RefineFlat): stage 1 takes
-    the top ``k·refine_factor`` Hamming candidates from the probed
-    cells' 8-byte words (partition-pruned scan), stage 2 re-ranks ONLY
-    those rows by exact cosine via a broadcast semi-join into the raw
-    vector table.  Completes the IVF × {PQ, SQ8, BQ} × refine matrix.
-    Output (id, cos_sim), cosine_topk's convention.
-    ``refine_factor=None`` sizes the candidate multiplier from cell
-    occupancy (similarity.recommended_refine_factor — the r12
-    production default; two memoized counts, no extra jobs on reused
-    frames)."""
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    cand = ivfbq_topk(
-        index_df, ivf_codebook, query_df, k=k * refine_factor,
-        nprobe=nprobe, num_planes=num_planes, dim=dim, id_col=id_col,
-    )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    pruned = e.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    q = F.broadcast(query_df.select("query_vec"))
-    scored = pruned.crossJoin(q).select(
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
-
-
-def ivfbq_topk(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    query_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    num_planes: int = 64,
-    dim: int = 64,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF-pruned Hamming search: rank coarse cells by cosine(query,
-    centroid) (the shared probe rule — 6-dp rounded, cell-ascending
-    ties), keep the top ``nprobe``, and popcount-scan ONLY those cells'
-    packed words.  The cell filter is a broadcast join that becomes
-    partition pruning over a cell-partitioned index; the scan is
-    ceil(p/32) JVM popcounts in whole-stage codegen.  Returns
-    (id, hamming), (asc, id asc), top k.  ``nprobe=None`` auto-sizes
-    ceil(sqrt(num_cells)) via similarity.recommended_nprobe (the
-    measured sf1 probe-loss fix, SCALE.md §10)."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        probe_cells,
-        recommended_nprobe,
-    )
-
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    from img2dataset_spark.operators.similarity import (
-        _collect_flat_codebook,
-        static_prune_cells,
-    )
-
-    # probe_cells is the SAME round6-cosine-desc/cell-asc rule this
-    # function previously inlined — flat codebooks rank on the driver
-    # (r14); the probed cells become a STATIC IN-list predicate
-    # (planning-time partition pruning over a cell-partitioned index)
-    probed = probe_cells(ivf_codebook, query_df, nprobe, "cosine")
-    pruned = static_prune_cells(
-        index_df, (c for c, _ in _collect_flat_codebook(probed))
-    )
-    return bq_topk(pruned, query_df, k=k, num_planes=num_planes,
-                   dim=dim, id_col=id_col)
+    exact re-rank (FAISS IndexBinaryIVF + RefineFlat): the top
+    ``k·refine_factor`` Hamming candidates of :func:`ivfbq_topk`,
+    re-ranked by exact cosine.  Output (id, cos_sim)."""
+    return search(_BQCodec(num_planes, dim), "ivfbq_refine_topk", index_df,
+                  ivf_codebook, query_df, k=k, nprobe=nprobe, id_col=id_col,
+                  vectors_df=vectors_df, vec_col=vec_col,
+                  refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
 
 
 def ivfbq_multi_topk(
@@ -405,104 +315,13 @@ def ivfbq_multi_topk(
     probe_metric: str = "cosine",
 ) -> DataFrame:
     """Batch IVF+BQ search — every probe vector answered from ONE pass
-    over the packed words (pq.ivfpq_multi_topk's one-scan shape for
-    the binary family; the popcount scan amortizes identically, r11
-    verdict item 7):
-
-    - probe: :func:`similarity.multi_probe_cells` per qid —
-      ``"cosine"`` is the DEFAULT here, unlike the L2 families: BQ's
-      Hamming estimates the ANGLE, so the angle probe is this
-      family's assignment-consistent rule;
-    - scan: index ⋈ broadcast (qid, cell) pairs, distance = ceil(p/32)
-      JVM popcounts of ``codes[w] XOR lit[qid][w]`` — per-word
-      constant-folded literal arrays indexed by qid (q longs each);
-      the bq width/NULL raise_error guard applies per row;
-    - top-k: one row_number window per qid.
-
-    ``queries_df`` is (qid, query_vec) with qid DENSE 0..q-1.
-    Returns (qid, id, hamming), per-qid (hamming asc, id asc) top-k."""
-    from pyspark.sql import Window
-
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        collect_dense_qids,
-        flat_multi_probe_pairs,
-        multi_probe_cells,
-        recommended_nprobe,
-        static_prune_cells,
-    )
-
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    qrows = collect_dense_qids(queries_df, qid_col)
-    qwords = {
-        int(r[qid_col]): encode_query_bits(
-            [float(x) for x in r["query_vec"]], num_planes, dim
-        )
-        for r in qrows
-    }
-    n_words = len(next(iter(qwords.values())))
-    # q packed words per per-word literal array × n_words arrays ride
-    # the plan — priced against the shared budget with a named remedy
-    # (r13 verdict item 2: the ceiling was PQ-only).  BQ's literals are
-    # the smallest of the three families (p/32 longs per query), so
-    # this fires only at genuinely plan-breaking batch sizes.
-    from img2dataset_spark.operators.pq import _check_plan_literal_budget
-
-    _check_plan_literal_budget(
-        len(qrows) * n_words,
-        f"ivfbq_multi_topk: {len(qrows)} queries x {n_words} packed "
-        "words",
-        "chunk the probe set into smaller dense-qid batches (each "
-        "chunk is still answered from one scan; the PQ/SQ chunked "
-        "wrappers are the shape to mirror)",
-    )
-    # flat codebooks: driver-ranked probe pairs + STATIC IN-list prune
-    # (planning-time partition pruning); hierarchical: distributed
-    # probe, broadcast join only (r14)
-    pairs = flat_multi_probe_pairs(
-        ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-    )
-    if pairs is not None:
-        probed = ivf_codebook.sparkSession.createDataFrame(
-            pairs, schema=f"{qid_col} bigint, cell bigint"
-        )
-        pre = static_prune_cells(index_df, (c for _, c in pairs))
-    else:
-        probed = multi_probe_cells(
-            ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-        )
-        pre = index_df
-    pruned = pre.join(F.broadcast(probed), "cell")
-    dist = None
-    for w in range(n_words):
-        from img2dataset_spark.operators.similarity import lit_long_array
-
-        lit_w = lit_long_array(qwords[qi][w] for qi in range(len(qrows)))
-        term = F.bit_count(
-            F.col("codes")[w].bitwiseXOR(
-                F.element_at(lit_w, F.col(qid_col).cast("int") + F.lit(1))
-            )
-        ).cast("long")
-        dist = term if dist is None else dist + term
-    dist = F.when(
-        F.col("codes").isNull() | (F.size(F.col("codes")) != n_words),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"ivfbq_multi_topk: codes width != {n_words} words "
-                    f"(num_planes={num_planes}) — got "
-                ),
-                F.coalesce(
-                    F.size(F.col("codes")).cast("string"), F.lit("NULL")
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(dist)
-    scored = pruned.select(qid_col, F.col(id_col), dist.alias("hamming"))
-    wk = Window.partitionBy(qid_col).orderBy(F.asc("hamming"), F.asc(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    over the packed words: index ⋈ broadcast (qid, cell) probe pairs,
+    distance = ceil(p/32) JVM popcounts of ``codes[w] XOR lit[qid][w]``
+    (one literal array of q words per packed word), one row_number
+    window per qid.  ``probe_metric`` defaults to ``"cosine"`` here,
+    unlike the L2 families: Hamming estimates the ANGLE.
+    ``queries_df`` is (qid, query_vec) with qid DENSE 0..q-1.  Returns
+    (qid, id, hamming), per-qid (hamming asc, id asc) top-k."""
+    return search(_BQCodec(num_planes, dim), "ivfbq_multi_topk", index_df,
+                  ivf_codebook, queries_df, k=k, nprobe=nprobe, id_col=id_col,
+                  qid_col=qid_col, probe_metric=probe_metric)

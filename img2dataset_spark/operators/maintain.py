@@ -706,7 +706,7 @@ def sq_distortion_ledger(
     Exactness: per-row error is an exact int64 SSE between the 2^-20
     fixed-point quantized vector and the floor-quantized reconstruction
     ``floor((lo + c·span/255)·2^20 + 0.5)`` — the
-    :func:`operators.sq._asym_dist_expr` arithmetic against the row's
+    ``operators.sq._SQAsymCodec`` arithmetic against the row's
     OWN vector — summed per cell as exact DECIMAL(38,0) (a CLIPPED
     cell's per-row error is O(offset²·d·2^40): at a +25-per-dim drift
     that is ~4.4e16 per row, so a few hundred rows overflow int64 —

@@ -68,7 +68,7 @@ def with_global_cumsum(
     )
     sums: dict[int, int] = {r[_BUCKET_COL]: int(r["_t"]) for r in totals}
     nbuckets = max(1, len(boundaries) + 1)
-    # dense literal ARRAY indexed by bucket id (the _adc_expr lesson:
+    # dense literal ARRAY indexed by bucket id (the ADC-table lesson:
     # Catalyst folds CreateArray of literals, never CreateMap — the
     # map was rebuilt per row); empty buckets keep offset 0, never read
     offsets = [0] * nbuckets

@@ -47,11 +47,23 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from img2dataset_spark.operators.ivf_search import (
+    Codec,
+    assignment,
+    chunk_kw,
+    chunk_size,
+    collect_overrides,
+    empty_overrides_frame as _empty_overrides_frame,
+    fine_cells,
+    group_override_rows,
+    query_table_sql,
+    search,
+)
 from img2dataset_spark.operators.similarity import (
     _QUANT,
     _as_double,
-    _collect_flat_codebook,
-    collect_query_rows as _collect_query_rows,
+    _memo_get,
+    _memo_put,
     ivf_fit,
 )
 
@@ -122,20 +134,7 @@ def pq_fit(
         # rows are driver-local: pre-seed the codebook memo so the
         # assignment pass (pq_encode) and every later search skip the
         # m·k-row collect job
-        cells, QC, nc = [], [], []
-        for book in bks:
-            ids = np.array(sorted(c for c, _ in book), dtype=np.int64)
-            by_id = {int(c): cent for c, cent in book}
-            C = np.stack(
-                [np.asarray(by_id[int(c)], dtype=np.float64) for c in ids]
-            )
-            Q = np.floor(C * _QUANT + 0.5).astype(np.int64)
-            cells.append(ids)
-            QC.append(Q)
-            nc.append((Q * Q).sum(axis=1))
-        from img2dataset_spark.operators.similarity import _memo_put
-
-        _memo_put(_CODEBOOK_MEMO, cb, (cells, QC, nc))
+        _memo_put(_CODEBOOK_MEMO, cb, _quantized_books([dict(b) for b in bks]))
         return cb
 
     cb = _literal_book(books)
@@ -205,36 +204,47 @@ def _collect_codebook(
     back through cells_j, the ADC lookup is a map (not an indexed
     array), and the SQL twin joins by cell — all gap-safe.
     Memoized per codebook-DataFrame object."""
-    from img2dataset_spark.operators.similarity import _memo_get
-
     hit = _memo_get(_CODEBOOK_MEMO, codebook)
     if hit is not None:
         return hit
     rows = codebook.select("subspace", "cell", "centroid").collect()
+    books = _parse_book(rows, "cell", "codebook")
+    # LRU-evicting, lock-guarded put (shared helper, r15): a long
+    # session cycling many models keeps its hot codebooks
+    # collected-once (r10 verdict nit)
+    _memo_put(_CODEBOOK_MEMO, codebook, books)
+    return books
+
+
+def _parse_book(rows, code_col: str, what: str) -> tuple[list, list, list]:
+    """(cells, QC, nc) from (subspace, ``code_col``, centroid) rows —
+    the parse of the global codebook and of each override cell's book:
+    the subspaces must be exactly 0..m-1 and every centroid one width."""
     by_sub: dict[int, dict[int, list[float]]] = {}
     for r in rows:
-        by_sub.setdefault(r["subspace"], {})[r["cell"]] = r["centroid"]
+        by_sub.setdefault(int(r["subspace"]), {})[int(r[code_col])] = (
+            r["centroid"]
+        )
     if sorted(by_sub) != list(range(len(by_sub))):
-        raise ValueError(f"missing subspaces: have {sorted(by_sub)}")
+        raise ValueError(f"{what} missing subspaces: have {sorted(by_sub)}")
     dims = {len(c) for v in by_sub.values() for c in v.values()}
     if len(dims) != 1:
-        raise ValueError(f"inconsistent centroid dims {sorted(dims)}")
+        raise ValueError(f"{what}: inconsistent centroid dims {sorted(dims)}")
+    return _quantized_books([by_sub[j] for j in range(len(by_sub))])
+
+
+def _quantized_books(by_sub) -> tuple[list, list, list]:
+    """(cells, QC, nc) from per-subspace {cell: centroid} maps:
+    ascending cell-id arrays, 2^-20 fixed-point centroid matrices and
+    their squared norms."""
     cells, QC, nc = [], [], []
-    for j in range(len(by_sub)):
-        ids = np.array(sorted(by_sub[j]), dtype=np.int64)
-        C = np.stack(
-            [np.asarray(by_sub[j][int(c)], dtype=np.float64) for c in ids]
-        )
+    for book in by_sub:
+        ids = np.array(sorted(book), dtype=np.int64)
+        C = np.stack([np.asarray(book[int(c)], dtype=np.float64) for c in ids])
         Q = np.floor(C * _QUANT + 0.5).astype(np.int64)
         cells.append(ids)
         QC.append(Q)
         nc.append((Q * Q).sum(axis=1))
-    from img2dataset_spark.operators.similarity import _memo_put
-
-    # LRU-evicting, lock-guarded put (shared helper, r15): a long
-    # session cycling many models keeps its hot codebooks
-    # collected-once (r10 verdict nit)
-    _memo_put(_CODEBOOK_MEMO, codebook, (cells, QC, nc))
     return cells, QC, nc
 
 
@@ -336,72 +346,6 @@ def pq_adc_distances(
     return cells, _adc_table(QC, nc, query_vec)
 
 
-def pq_topk(
-    codes_df: DataFrame,
-    codebook: DataFrame,
-    query_df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    packed: bool = False,
-) -> DataFrame:
-    """ADC top-k over a PQ-encoded corpus: the query's m×k distance
-    table rides the PLAN as constant-folded literal ARRAYS (dense,
-    sentinel-filled — _adc_expr) and each row's approximate distance
-    is m array lookups summed — whole-stage codegen, no UDF, no join,
-    no vector column.  Returns (id, adc_dist) with
-    adc_dist the exact int64 sum of quantized subspace distances,
-    ranked (adc_dist asc, id asc), limit ``k``.  The query side is a
-    1-row frame with a `query_vec` column (cosine_topk convention);
-    the table is computed once on the driver from the k·m-row
-    codebook — the one collect, bounded by the codebook size."""
-    qrow = _collect_query_rows(query_df, ("query_vec",))
-    if len(qrow) != 1:
-        raise ValueError(f"query_df must have exactly 1 row, got {len(qrow)}")
-    cells, dt = pq_adc_distances(
-        codebook, [float(x) for x in qrow[0]["query_vec"]]
-    )
-    scored = codes_df.select(
-        F.col(id_col), _adc_expr(cells, dt, packed=packed).alias("adc_dist")
-    )
-    return scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(k)
-
-
-# Practical ceiling on the literal values a multi-query scan may
-# inline into ONE plan (the 2-level folded ADC tables / quantized
-# query tables / per-branch bounds): past it, plan serialization/
-# codegen cost dominates the scan it was amortizing.  ~250 queries at
-# FAISS-like m=16, k=256.  ONE budget for every family (PQ ADC longs,
-# SQ quantized queries + per-branch bounds doubles, BQ packed words) —
-# the cost being priced is plan size, which does not care which
-# family minted the literals (r13 verdict item 2).
-_MULTI_TOPK_MAX_LITERALS = 1_000_000
-
-
-def _check_plan_literal_budget(count: int, name: str, remedy: str) -> None:
-    """The family-generic named-ceiling guard: a batch searcher whose
-    plan would carry ``count`` literal values past the shared budget
-    must fail NAMING the sanctioned chunked route, not opaquely in
-    codegen/plan serialization (the r12 PQ precedent, generalized to
-    SQ/BQ in r14)."""
-    if count > _MULTI_TOPK_MAX_LITERALS:
-        raise ValueError(
-            f"{name}: {count} plan literals > "
-            f"{_MULTI_TOPK_MAX_LITERALS} — {remedy}"
-        )
-
-
-def _check_multi_literals(num_queries: int, pq_codebook: DataFrame) -> None:
-    cells, _, _ = _collect_codebook(pq_codebook)
-    n = num_queries * sum(int(c.max()) + 1 for c in cells)
-    _check_plan_literal_budget(
-        n,
-        f"ivfpq_multi_topk: {num_queries} queries x this codebook",
-        "chunk the probe set into smaller batches with "
-        "ivfpq_multi_topk_chunked (each chunk is still answered from "
-        "one scan)",
-    )
-
-
 # Sentinel distance for code ids the book never minted (Lloyd gap ids,
 # or a foreign/corrupt code): large enough to rank the row LAST —
 # never silently into the top-k, unlike a NULL under NULLS-FIRST asc —
@@ -410,80 +354,155 @@ def _check_multi_literals(num_queries: int, pq_codebook: DataFrame) -> None:
 _ADC_SENTINEL = 1 << 55
 
 
-def _adc_expr(cells: list[np.ndarray], dt: list[np.ndarray], packed: bool = False):
-    """The ADC scan expression: sum over subspaces of a dense literal
-    ARRAY lookup on the j-th code.  ARRAY, not map — measured why
-    (SCALE.md §11): Catalyst constant-folds a CreateArray of literals
-    into one Literal, but does NOT fold CreateMap, so the previous
-    ``map_from_arrays`` was rebuilt PER ROW and scan cost grew with k
-    (7.6 s vs 0.8 s at k=256 vs 16 on the same 2k-row corpus); the
-    folded array is materialized once and the lookup is O(1)
-    regardless of k.  Gap-safe: Lloyd-dropped ids hold
-    :data:`_ADC_SENTINEL` (rank-last, not silently-top via NULL), and
-    ANY out-of-range code reads the same sentinel — over-range codes
-    fall off the array and coalesce, NEGATIVE codes are caught by an
-    explicit branch (they must not reach ``element_at``, whose negative
-    indices legally read from the array's END — a corrupt code of −2
-    would silently score as a real distance — and whose index 0 raises
-    instead of returning NULL).
-    With ``packed`` codes the j-th code is a byte slice of word
-    j div 8: ``shiftright(word, 8·(j mod 8)) & 255`` — the arithmetic
-    shift's sign-extension only touches bits the mask drops, so byte 7
-    of a negative word still reads correctly."""
-    return F.expr(_adc_expr_sql(cells, dt, packed=packed))
-
-
 def _code_sql(j: int, packed: bool) -> str:
     """SQL for the j-th code: the array element, or the byte slice of
-    word j div 8 in packed mode — exactly the Column forms the r15 SQL
-    generators replaced (`codes[j]` is the same 0-based GetArrayItem)."""
+    word j div 8 in packed mode — ``shiftright(word, 8·(j mod 8)) &
+    255``; the arithmetic shift's sign-extension only touches bits the
+    mask drops, so byte 7 of a negative word still reads correctly."""
     if packed:
         return f"(shiftright(`codes`[{j // 8}], {8 * (j % 8)}) & 255)"
     return f"`codes`[{j}]"
 
 
-def _adc_term_sql(table_sql: str, code_sql: str) -> str:
-    """One subspace's guarded lookup: element_at is 1-based; over-range
-    yields NULL -> sentinel via coalesce, and the explicit branch keeps
-    negative codes away from element_at's from-the-end indexing /
-    index-0 error."""
-    return (
-        f"(CASE WHEN {code_sql} < 0 THEN {_ADC_SENTINEL}L ELSE "
-        f"coalesce(element_at({table_sql}, CAST({code_sql} AS INT) + 1), "
-        f"{_ADC_SENTINEL}L) END)"
-    )
+def _adc_sql(code_ids, tables, qid_sql: str | None, packed: bool) -> str:
+    """The ADC scan as ONE SQL string: the sum over subspaces of a dense
+    literal ARRAY lookup on the j-th code — ``lit[code]`` for one query
+    (``tables`` = [per-subspace distances aligned with ``code_ids``]),
+    ``lit[qid][code]`` for a batch (one table per qid, indexed by the
+    SQL expression ``qid_sql``).
 
-
-def _adc_expr_sql(
-    cells: list[np.ndarray], dt: list[np.ndarray], packed: bool = False
-) -> str:
-    """The ADC sum as ONE SQL string (r15): building the same tree
-    through the Column API cost hundreds of Py4J gateway round trips
-    per search (a cProfile read ~0.24 s per _adc_expr build); the JVM
-    parses this string in one round trip into the IDENTICAL expression
-    — CASE WHEN is CaseWhen, `...L` literals are the same int64s,
-    element_at/coalesce/cast are the same functions (value-equivalence
-    pinned in tests/test_r15_optimizations.py and by every ADC
-    oracle row)."""
+    ARRAY, not map — measured why (SCALE.md §11): Catalyst
+    constant-folds a CreateArray of literals into one Literal but does
+    NOT fold CreateMap, so a map was rebuilt PER ROW and scan cost grew
+    with k (7.6 s vs 0.8 s at k=256 vs 16).  Gap-safe: Lloyd-dropped ids
+    hold :data:`_ADC_SENTINEL`; over-range codes fall off the array and
+    coalesce to it; NEGATIVE codes take an explicit branch (element_at
+    reads negative indices from the array's END, and index 0 raises).
+    One string, not a Column tree: the Column API cost hundreds of Py4J
+    round trips per search (r15)."""
     terms = []
-    for j in range(len(dt)):
-        dense = np.full(int(cells[j].max()) + 1, _ADC_SENTINEL,
-                        dtype=np.int64)
-        dense[cells[j]] = dt[j]
-        table = "array(" + ",".join(f"{int(v)}L" for v in dense) + ")"
-        terms.append(_adc_term_sql(table, _code_sql(j, packed)))
+    for j in range(len(code_ids)):
+        size = int(code_ids[j].max()) + 1
+        rows = []
+        for t in tables:
+            dense = np.full(size, _ADC_SENTINEL, dtype=np.int64)
+            dense[code_ids[j]] = t[j]
+            rows.append(dense)
+        table = query_table_sql(rows, qid_sql)
+        code = _code_sql(j, packed)
+        terms.append(
+            f"(CASE WHEN {code} < 0 THEN {_ADC_SENTINEL}L ELSE "
+            f"coalesce(element_at({table}, CAST({code} AS INT) + 1), "
+            f"{_ADC_SENTINEL}L) END)"
+        )
     return "(" + " + ".join(terms) + ")"
 
 
-def _cell_case_sql(branches: list[tuple[int, str]], else_sql: str | None) -> str:
-    """``CASE WHEN cell = c THEN <branch> ... [ELSE <else>] END`` over
-    per-probed-cell distance strings — the one-round-trip form of the
-    former F.when chains."""
-    body = " ".join(
-        f"WHEN `cell` = {int(c)} THEN {sql}" for c, sql in branches
+class _PQCodec(Codec):
+    """The PQ codec of the IVF search core: ADC over the global book or
+    a cell's override book, on raw codes or (``residual``) on codes of
+    v − centroid[cell], whose tables therefore differ per probed cell."""
+
+    out_col = "adc_dist"
+    probe_metric = "l2"
+    chunked = "ivfpq_multi_topk_chunked"
+    override_cols = ("cell", "subspace", "code", "centroid")
+
+    def __init__(self, codebook: DataFrame, packed: bool = False,
+                 residual: bool = False):
+        self.codebook, self.packed, self.residual = codebook, packed, residual
+
+    def book(self):
+        return _collect_codebook(self.codebook)
+
+    def dist_sql(self, book, qvecs, qid_sql):
+        code_ids, QC, nc = book
+        tables = [_adc_table(QC, nc, qv) for qv in qvecs]
+        return _adc_sql(code_ids, tables, qid_sql, self.packed)
+
+    def literals(self, nq, n_tables):
+        per_q = sum(int(c.max()) + 1 for c in self.book()[0])
+        return nq * n_tables * per_q, f"{nq} queries x this codebook"
+
+    def fallback_sql(self):
+        return f"{len(self.book()[0]) * _ADC_SENTINEL}L"
+
+    @staticmethod
+    def parse_overrides(rows) -> dict:
+        """{cell: (code_ids, QC, nc)} — the _collect_codebook artifact
+        keyed by cell.  Gap-safe exactly like the global book: codes
+        are the actual surviving Lloyd ids per (cell, subspace), kept
+        ascending so first-minimum argmin ties resolve to the smallest
+        code."""
+        return {
+            cell: _parse_book(cell_rows, "code", f"override cell {cell}")
+            for cell, cell_rows in group_override_rows(rows).items()
+        }
+
+
+def _collect_overrides(overrides: DataFrame, cells=None) -> dict:
+    """{cell: (code_ids, QC, nc)} of a per-cell override relation
+    (cell, subspace, code, centroid), parsed by the PQ codec — see
+    :func:`ivf_search.collect_overrides` for the collect and memo rules."""
+    return collect_overrides(overrides, _PQCodec, cells)
+
+
+def empty_overrides_frame(spark) -> DataFrame:
+    """The canonical EMPTY per-cell override relation, memo-seeded so
+    the version-0 side of a versioned search runs no collect job."""
+    return _empty_overrides_frame(
+        spark, "cell long, subspace long, code long, centroid array<double>"
     )
-    tail = f" ELSE {else_sql}" if else_sql is not None else ""
-    return f"(CASE {body}{tail} END)"
+
+
+def pq_topk(
+    codes_df: DataFrame,
+    codebook: DataFrame,
+    query_df: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    packed: bool = False,
+) -> DataFrame:
+    """ADC top-k over a whole PQ-encoded corpus (no coarse probe): the
+    query's m×k distance table rides the PLAN as constant-folded literal
+    arrays and each row's approximate distance is m array lookups summed
+    — whole-stage codegen, no UDF, no join, no vector column.  Returns
+    (id, adc_dist), the exact int64 sum of quantized subspace distances,
+    ranked (adc_dist asc, id asc), limit ``k``.  The query side is a
+    1-row frame with a `query_vec` column (cosine_topk convention)."""
+    return search(_PQCodec(codebook, packed), "pq_topk", codes_df, None,
+                  query_df, k=k, id_col=id_col)
+
+
+def ivfpq_topk(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    query_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    id_col: str = "vec_id",
+    residual: bool = False,
+    packed: bool = False,
+    probe_metric: str | None = None,
+) -> DataFrame:
+    """IVF-pruned ADC search — the standard large-corpus composition:
+    rank coarse cells by the probe metric, keep the top ``nprobe``, and
+    ADC-scan ONLY those cells' PQ codes (partition pruning over a
+    cell-partitioned index; the scan reads m-byte codes, not vectors).
+    Returns (id, adc_dist), exact int64 sums, (adc_dist asc, id asc)
+    top-k.  ``nprobe=None`` / ``probe_metric=None``: the corpus-aware
+    defaults of :func:`ivf_search.search` (ceil(sqrt(cells)), ``"l2"``);
+    pass an explicit nprobe for a fully static configuration (the
+    oracle registry does).
+
+    ``residual=True`` (index built with residual codes): the query's
+    residual — and therefore its ADC table — differs per probed cell,
+    so the scan is an nprobe-way CASE over per-cell literal tables,
+    nprobe·m·k literal longs in the plan."""
+    return search(_PQCodec(pq_codebook, packed, residual), "ivfpq_topk",
+                  index_df, ivf_codebook, query_df, k=k, nprobe=nprobe,
+                  id_col=id_col, probe_metric=probe_metric)
 
 
 def ivfpq_refine_topk(
@@ -502,61 +521,200 @@ def ivfpq_refine_topk(
     probe_metric: str | None = None,
     refine_target_occupancy: int = 1024,
 ) -> DataFrame:
-    """Two-stage refine search — the standard FAISS ``IndexRefineFlat``
-    composition that recovers exact ranking from a lossy index: stage 1
-    takes the top ``k·refine_factor`` candidates by compressed ADC
-    (:func:`ivfpq_topk` — probe-pruned, codes-only scan), stage 2
-    re-ranks ONLY those candidates by exact cosine against their raw
-    vectors and returns the top ``k``.
+    """Two-stage refine search — FAISS ``IndexRefineFlat`` over
+    :func:`ivfpq_topk`: the top ``k·refine_factor`` ADC candidates,
+    re-ranked by exact cosine (:func:`ivf_search.search`'s refine
+    stage; ``refine_factor=None`` sizes the pool from cell occupancy —
+    the clustered residual recall fell 0.4 → 0.175 at 10× occupancy
+    with the pool fixed, SCALE.md §11).  Output (id, cos_sim)."""
+    return search(_PQCodec(pq_codebook, packed, residual),
+                  "ivfpq_refine_topk", index_df, ivf_codebook, query_df,
+                  k=k, nprobe=nprobe, id_col=id_col,
+                  probe_metric=probe_metric, vectors_df=vectors_df,
+                  vec_col=vec_col, refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
 
-    ``refine_factor=None`` (the production default since round 12)
-    sizes the multiplier from cell occupancy via
-    :func:`similarity.recommended_refine_factor` — base 4 up to
-    ``refine_target_occupancy`` rows/cell, then growing as
-    ceil(sqrt(occupancy overshoot)): the measured clustered decay
-    (residual recall 0.4 → 0.175 at 10× occupancy with the POOL fixed,
-    SCALE.md §11) is the fixed knob silently shrinking relative to the
-    ADC tie mass.  Two memoized counts (index rows, codebook cells),
-    zero extra jobs on reused frames.
 
-    100 TB shape: the corpus-sized pass stays compressed (nprobe cells'
-    code files); the exact pass touches k·refine_factor rows via a
-    BROADCAST semi-join of the candidate ids into the vector table —
-    never a full vector scan, and with the vector table sorted/bucketed
-    by id the broadcast filter prunes row groups too.  Output
-    (id, cos_sim) follows cosine_topk's convention (round6 quantized
-    cosine, desc, id-asc ties), so refine results are directly
-    comparable to the brute-force baseline's."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
+def ivfpq_multi_topk(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    queries_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    id_col: str = "vec_id",
+    qid_col: str = "qid",
+    packed: bool = False,
+    probe_metric: str | None = None,
+    residual: bool = False,
+) -> DataFrame:
+    """Batch IVF+PQ search — EVERY probe vector answered from ONE pass
+    over the codes: q single searches cost q scans of the probed cells,
+    and at 100 TB the scan is the cost.  Each row reads the 2-level
+    literal table ``lit[qid][code]`` per subspace (q·m·k longs riding
+    the plan once — ~250 queries at FAISS-like m=16, k=256 fit the
+    literal budget; past it the call names
+    :func:`ivfpq_multi_topk_chunked`).  ``residual=True``: a CASE over
+    the probed cells of per-cell tables, probed_cells·q·m·k literals.
+    ``queries_df`` is (qid, query_vec) with qid DENSE 0..q-1.  Returns
+    (qid, id, adc_dist), per-qid (adc_dist asc, id asc) top-k."""
+    return search(_PQCodec(pq_codebook, packed, residual),
+                  "ivfpq_multi_topk", index_df, ivf_codebook, queries_df,
+                  k=k, nprobe=nprobe, id_col=id_col, qid_col=qid_col,
+                  probe_metric=probe_metric)
 
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    cand = ivfpq_topk(
-        index_df, ivf_codebook, pq_codebook, query_df,
-        k=k * refine_factor, nprobe=nprobe,
-        id_col=id_col, residual=residual, packed=packed,
-        probe_metric=probe_metric,
-    )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    pruned = e.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    q = F.broadcast(query_df.select("query_vec"))
-    scored = pruned.crossJoin(q).select(
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+
+def ivfpq_multi_topk_versioned(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    overrides: DataFrame,
+    queries_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    id_col: str = "vec_id",
+    qid_col: str = "qid",
+    packed: bool = False,
+    probe_metric: str | None = None,
+    residual: bool = False,
+) -> DataFrame:
+    """Batch search over a SELECTIVELY-REFIT index
+    (:func:`maintain.pq_refit_cells` + rewrite): one pass over the mixed
+    codes, each probed override cell CASE-dispatched to the per-cell
+    book that MINTED its codes, every other cell to the frozen global
+    book.  ``residual=True`` serves the true-LOPQ variant (every probed
+    cell's tables derive from each query's residual against it).
+    Returns (qid, id, adc_dist), per-qid (adc_dist asc, id asc) top-k."""
+    return search(_PQCodec(pq_codebook, packed, residual),
+                  "ivfpq_multi_topk_versioned", index_df, ivf_codebook,
+                  queries_df, k=k, nprobe=nprobe, id_col=id_col,
+                  qid_col=qid_col, probe_metric=probe_metric,
+                  overrides=overrides)
+
+
+def ivfpq_multi_topk_chunked(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    queries_df: DataFrame,
+    k: int = 10,
+    max_queries_per_scan: int | None = None,
+    qid_col: str = "qid",
+    overrides: DataFrame | None = None,
+    **kw,
+) -> DataFrame:
+    """The route past the plan-literal budget: dense-qid chunks of the
+    probe set, each answered from ONE scan (:func:`ivfpq_multi_topk`,
+    or :func:`ivfpq_multi_topk_versioned` with ``overrides``; ``kw``
+    takes their other arguments: nprobe, id_col, probe_metric, packed,
+    residual).  ``max_queries_per_scan=None`` sizes chunks from the
+    budget (raw mode only, ivf_search.chunk_size)."""
+    name = "ivfpq_multi_topk_chunked"
+    kw = chunk_kw(name, kw, packed=False, residual=False)
+    codec = _PQCodec(pq_codebook, kw.pop("packed"), kw.pop("residual"))
+    if max_queries_per_scan is None:
+        max_queries_per_scan = chunk_size(codec, name, overrides)
+    return search(codec, name, index_df, ivf_codebook, queries_df, k=k,
+                  qid_col=qid_col, overrides=overrides,
+                  max_queries_per_scan=max_queries_per_scan, **kw)
+
+
+def ivfpq_multi_refine_topk(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    vectors_df: DataFrame,
+    queries_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    refine_factor: int | None = None,
+    residual: bool = False,
+    packed: bool = False,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    qid_col: str = "qid",
+    probe_metric: str | None = None,
+    refine_target_occupancy: int = 1024,
+    overrides: DataFrame | None = None,
+    max_queries_per_scan: int | None = None,
+) -> DataFrame:
+    """Batch two-stage refine: every query's top ``k·refine_factor``
+    candidates from ONE codes pass (:func:`ivfpq_multi_topk`;
+    ``overrides`` → the versioned scan, ``max_queries_per_scan`` →
+    chunked), re-ranked in ONE pass over the vector table.  Returns
+    (qid, id, cos_sim), per-qid (cos_sim desc, id asc) top-k."""
+    return search(_PQCodec(pq_codebook, packed, residual),
+                  "ivfpq_multi_refine_topk", index_df, ivf_codebook,
+                  queries_df, k=k, nprobe=nprobe, id_col=id_col,
+                  qid_col=qid_col, probe_metric=probe_metric,
+                  overrides=overrides,
+                  max_queries_per_scan=max_queries_per_scan,
+                  vectors_df=vectors_df, vec_col=vec_col,
+                  refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
+
+
+def ivfpq_topk_versioned(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    overrides: DataFrame,
+    query_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    id_col: str = "vec_id",
+    packed: bool = False,
+    probe_metric: str | None = None,
+    residual: bool = False,
+) -> DataFrame:
+    """IVF+PQ search over a SELECTIVELY-REFIT index — what makes
+    :func:`maintain.pq_refit_cells` usable: cells in ``overrides`` were
+    re-encoded with their own per-cell books (version 1), every other
+    cell still carries global-book codes (version 0), and the scan
+    scores each row against the book that MINTED its codes — a CASE
+    over the probed override cells with the global table as ELSE.
+    Probe and defaults as :func:`ivfpq_topk`.
+
+    ``residual=True`` serves a RESIDUAL-coded index maintained by the
+    true-LOPQ refit (``pq_refit_cells(residual=True)``): every probed
+    cell's table comes from the query's residual against that cell —
+    through its override book or the global residual book.  Returns
+    (id, adc_dist), (adc_dist asc, id asc) top-k."""
+    return search(_PQCodec(pq_codebook, packed, residual),
+                  "ivfpq_topk_versioned", index_df, ivf_codebook, query_df,
+                  k=k, nprobe=nprobe, id_col=id_col,
+                  probe_metric=probe_metric, overrides=overrides)
+
+
+def ivfpq_refine_topk_versioned(
+    index_df: DataFrame,
+    ivf_codebook: DataFrame,
+    pq_codebook: DataFrame,
+    overrides: DataFrame,
+    vectors_df: DataFrame,
+    query_df: DataFrame,
+    k: int = 10,
+    nprobe: int | None = None,
+    refine_factor: int | None = None,
+    residual: bool = False,
+    packed: bool = False,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    probe_metric: str | None = None,
+    refine_target_occupancy: int = 1024,
+) -> DataFrame:
+    """Two-stage refine over the MAINTAINED index: the top
+    ``k·refine_factor`` candidates of :func:`ivfpq_topk_versioned`,
+    re-ranked by exact cosine (the engine's 600k ledger put the
+    compressed stage at 0.025-0.16 recall at 10× occupancy even
+    post-refit, the refine stage at 0.65).  Output (id, cos_sim)."""
+    return search(_PQCodec(pq_codebook, packed, residual),
+                  "ivfpq_refine_topk_versioned", index_df, ivf_codebook,
+                  query_df, k=k, nprobe=nprobe, id_col=id_col,
+                  probe_metric=probe_metric, overrides=overrides,
+                  vectors_df=vectors_df, vec_col=vec_col,
+                  refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
 
 
 def residual_vectors(
@@ -578,17 +736,8 @@ def residual_vectors(
     assignment pass; composites that assign once and persist feed the
     same tagged frame to indexing, occupancy and refit (identical
     output, the pass just runs once)."""
-    from img2dataset_spark.operators.similarity import ivf_assign
-
-    tagged = (
-        assigned
-        if assigned is not None
-        else ivf_assign(df, ivf_codebook, vec_col, id_col)
-    )
-    cents = ivf_codebook
-    if "level" in cents.columns:
-        cents = cents.filter(F.col("level") == "fine")
-    cents = F.broadcast(cents.select("cell", "centroid"))
+    tagged = assignment(df, ivf_codebook, vec_col, id_col, assigned)
+    cents = F.broadcast(fine_cells(ivf_codebook).select("cell", "centroid"))
     # LEFT join, deliberately: an inner join makes Catalyst infer
     # isnotnull(cell) and push it below the projection as a Filter that
     # RE-RUNS the assignment UDF (the expensive-subtree double-reference
@@ -627,8 +776,6 @@ def ivfpq_fit(
     (the FAISS IVFPQ recipe — one residual codebook across cells, not
     k of them).  Returns (ivf_codebook, pq_codebook); feed both to
     :func:`ivfpq_index` / :func:`ivfpq_topk` with ``residual=True``."""
-    from img2dataset_spark.operators.similarity import ivf_fit
-
     ivf_cb = ivf_fit(df, num_cells, iters, vec_col, id_col)
     res = residual_vectors(df, ivf_cb, vec_col, id_col)
     pq_cb = pq_fit(
@@ -670,8 +817,6 @@ def ivfpq_index(
     ``assigned`` (r14): a pre-computed ``ivf_assign(df, ivf_codebook)``
     frame to reuse — composites that assign once and persist skip this
     function's own assignment pass (identical output)."""
-    from img2dataset_spark.operators.similarity import ivf_assign
-
     if residual:
         res = residual_vectors(
             df, ivf_codebook, vec_col, id_col, assigned=assigned
@@ -680,942 +825,9 @@ def ivfpq_index(
             res, pq_codebook, vec_col="rvec", id_col=id_col,
             keep_cols=("cell",), packed=packed,
         )
-    tagged = (
-        assigned
-        if assigned is not None
-        else ivf_assign(df, ivf_codebook, vec_col, id_col)
-    )
+    tagged = assignment(df, ivf_codebook, vec_col, id_col, assigned)
     return pq_encode(
         tagged, pq_codebook, vec_col="v", id_col=id_col,
         keep_cols=("cell",), packed=packed,
     )
 
-
-def ivfpq_topk(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    query_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    id_col: str = "vec_id",
-    residual: bool = False,
-    packed: bool = False,
-    probe_metric: str | None = None,
-) -> DataFrame:
-    """IVF-pruned ADC search — the standard large-corpus composition:
-    rank coarse cells by the probe metric, keep the top ``nprobe``,
-    and ADC-scan ONLY those cells' PQ codes.  The cell filter is a
-    broadcast join that becomes partition pruning when the index is
-    written partitioned by cell; the scan itself reads m-byte codes,
-    not vectors.  Returns (id, adc_dist), exact int64 sums,
-    (adc_dist asc, id asc) top-k.
-
-    ``nprobe=None`` (the default) sizes the probe count from the
-    codebook's cell count via :func:`similarity.recommended_nprobe`
-    (ceil(sqrt(k)) — one cell-domain-sized count job), so recall holds
-    as recommended_num_cells grows cells with the corpus (the measured
-    sf1 probe-loss recovery, SCALE.md §10); pass an explicit nprobe
-    for a fully static configuration (the oracle registry does).
-
-    ``residual=True`` (index built with residual codes): the query's
-    residual — and therefore its ADC table — differs per probed cell,
-    so the scan expression is an nprobe-way CASE over per-cell literal
-    tables: still pure codegen, nprobe·m·k literal longs in the plan
-    (a few hundred KB at FAISS-like settings — plan-sized).
-
-    ``probe_metric=None`` (the PRODUCTION default since round 12)
-    resolves to ``"l2"`` — the ASSIGNMENT metric, which is this
-    family's ranking metric too: on clustered corpora a drifted
-    cell's centroid can point away from the query direction even
-    though the query is L2-assigned to that very cell (the cosine
-    probe read recall 0.05 where l2 read 0.20 on the measured drift
-    scenario — similarity.probe_cells, SCALE.md §11), so the right
-    rule must be reachable without reading SCALE.md.  Pass
-    ``"cosine"`` explicitly for the pre-r12 angle probe."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        probe_cells,
-        recommended_nprobe,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        # memoized cell count (codebook_num_cells): repeated searches
-        # over one fitted codebook size the probe without a fresh
-        # count() job per call (r11 advice)
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    if "level" in ivf_codebook.columns:
-        # hierarchical coarse codebook: assignment cells are FINE ids
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    probed = probe_cells(ivf_codebook, query_df, nprobe, probe_metric)
-    # bounded probe rows (job-free for flat codebooks — probe_cells
-    # pre-memoizes its literal output); the probed cells prune the scan
-    # as a STATIC IN-list — planning-time partition pruning (r14)
-    probe_rows = _collect_flat_codebook(probed)
-    from img2dataset_spark.operators.similarity import static_prune_cells
-
-    pruned = static_prune_cells(index_df, (c for c, _ in probe_rows))
-    qrow = _collect_query_rows(query_df, ("query_vec",))
-    if len(qrow) != 1:
-        raise ValueError(f"query_df must have exactly 1 row, got {len(qrow)}")
-    qvec = np.asarray([float(x) for x in qrow[0]["query_vec"]], dtype=np.float64)
-    if residual:
-        if not probe_rows:
-            raise ValueError(
-                "ivfpq_topk: probe returned no cells — is the "
-                "ivf_codebook empty (or all-coarse)?"
-            )
-        cb_cells, QC, nc = _collect_codebook(pq_codebook)
-        # one-string CASE over the probed cells (r15, _adc_expr_sql)
-        branches = [
-            (
-                int(p_cell),
-                _adc_expr_sql(
-                    cb_cells,
-                    _adc_table(
-                        QC, nc, qvec - np.asarray(p_cent, dtype=np.float64)
-                    ),
-                    packed=packed,
-                ),
-            )
-            for p_cell, p_cent in probe_rows
-        ]
-        dist = F.expr(_cell_case_sql(branches, None))
-        scored = pruned.select(F.col(id_col), dist.alias("adc_dist"))
-    else:
-        cb_cells, dt = pq_adc_distances(pq_codebook, qvec)
-        scored = pruned.select(
-            F.col(id_col), _adc_expr(cb_cells, dt, packed=packed).alias("adc_dist")
-        )
-    return scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(k)
-
-
-def ivfpq_multi_topk(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    queries_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    packed: bool = False,
-    probe_metric: str | None = None,
-    residual: bool = False,
-) -> DataFrame:
-    """Batch IVF+PQ search — EVERY probe vector answered from ONE pass
-    over the codes (bm25_multi_topk's shape applied to ANN; the r10
-    'batch probes into one multi-query scan' advice).  Running q
-    single-query searches costs q scans of the probed cells; at 100 TB
-    the scan is the cost, so a probe BATCH (a recall ledger's probe
-    set, a dedup screen's query block) should amortize it.
-
-    Stages:
-    - probe: codebook × queries crossJoin (cells × q rows, both
-      bounded), per-qid ranking by the probe metric
-      (``probe_metric=None`` resolves to ``"l2"``, the assignment
-      metric — the L2-family production default since round 12;
-      ``"cosine"`` is the pre-r12 round6-desc rule), row_number ≤
-      nprobe;
-    - scan: index ⋈ broadcast (qid, cell) pairs — a row probed by two
-      queries is scored once per query, the per-query semantics — with
-      the distance a 2-level constant-folded literal array lookup
-      ``lit[qid][code]`` per subspace (q·m·k longs riding the plan
-      once; CreateArray folds, the _adc_expr lesson), sentinel-filled
-      exactly like the single-query scan;
-    - top-k: one row_number window per qid.
-
-    ``queries_df`` is (qid, query_vec) with qid DENSE 0..q-1 — a
-    bounded probe set (collected once), not a corpus.  The 2-level
-    tables ride the plan as q·m·k longs, so the PRACTICAL q ceiling is
-    :data:`_MULTI_TOPK_MAX_LITERALS` / (m·k) — ~250 queries at
-    FAISS-like m=16, k=256 — enforced with a named error telling the
-    caller to CHUNK the probe set (each chunk is still one scan; the
-    amortization story degrades gracefully, the plan does not).
-    Returns (qid, id, adc_dist), per-qid (adc_dist asc, id asc)
-    top-k.
-
-    ``residual=True`` (index built with residual codes — the family
-    the clustered recall matrix endorses): each query's ADC table
-    differs per probed CELL (the query residual is per-cell), so the
-    scan becomes a CASE over the distinct probed cells whose branches
-    are 2-level ``lit[qid][code]`` tables from each query's residual
-    against that cell — probed_cells·q·m·k literal longs, counted
-    against the same ceiling.  Bounded collects: the probe pairs
-    (q·nprobe rows) and the probed cells' centroids."""
-    from pyspark.sql import Window
-
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        collect_dense_qids,
-        flat_multi_probe_pairs,
-        multi_probe_cells,
-        recommended_nprobe,
-        static_prune_cells,
-    )
-
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    # hierarchical codebooks union coarse rows whose cell ids collide
-    # with fine global ids — the residual centroid collect below must
-    # never pick up a coarse row (multi_probe_cells filters internally,
-    # this body's collect did not — r12 advice, medium)
-    if "level" in ivf_codebook.columns:
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    qrows = collect_dense_qids(queries_df, qid_col)
-    qids = list(range(len(qrows)))
-    if probe_metric is None:
-        probe_metric = "l2"
-    # flat codebooks: driver-ranked probe pairs + STATIC IN-list prune
-    # (planning-time partition pruning); hierarchical: distributed
-    # probe, broadcast join only (r14)
-    pairs = flat_multi_probe_pairs(
-        ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-    )
-    if pairs is not None:
-        probed = ivf_codebook.sparkSession.createDataFrame(
-            pairs, schema=f"{qid_col} bigint, cell bigint"
-        )
-        pre = static_prune_cells(index_df, (c for _, c in pairs))
-    else:
-        probed = multi_probe_cells(
-            ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-        )
-        pre = index_df
-    pruned = pre.join(F.broadcast(probed), "cell")
-    cells, QC, nc = _collect_codebook(pq_codebook)
-    qvecs = {
-        int(r[qid_col]): np.asarray(
-            [float(x) for x in r["query_vec"]], dtype=np.float64
-        )
-        for r in qrows
-    }
-
-    def _sum_terms_sql(by_qid):
-        return _multi_adc_expr_sql(
-            cells, [by_qid[qi] for qi in range(len(qids))], qid_col, packed
-        )
-
-    if residual:
-        # bounded collects: the probe pairs (q·nprobe) name the
-        # distinct probed cells, whose centroids come locally from the
-        # memoized flat codebook rows (or a broadcast cell filter on
-        # the hierarchical path) — never the whole codebook driver-side
-        if pairs is not None:
-            pcells = sorted({int(c) for _, c in pairs})
-        else:
-            pcells = sorted(
-                {int(r["cell"]) for r in probed.select("cell").collect()}
-            )
-        if not pcells:
-            raise ValueError(
-                "ivfpq_multi_topk: probe returned no cells — is the "
-                "ivf_codebook empty (or all-coarse)?"
-            )
-        _check_multi_literals(len(qrows) * len(pcells), pq_codebook)
-        if pairs is not None:
-            from img2dataset_spark.operators.similarity import (
-                _collect_flat_codebook as _cb_rows,
-            )
-
-            want = set(pcells)
-            cents = {
-                int(c): np.asarray(cent, dtype=np.float64)
-                for c, cent in _cb_rows(ivf_codebook)
-                if int(c) in want
-            }
-        else:
-            cents = {
-                int(r["cell"]): np.asarray(r["centroid"], dtype=np.float64)
-                for r in ivf_codebook.filter(
-                    F.col("cell").isin([int(c) for c in pcells])
-                ).select("cell", "centroid").collect()
-            }
-        branches = []
-        for cell in pcells:
-            by_qid = {
-                qi: _adc_table(QC, nc, qvecs[qi] - cents[cell])
-                for qi in range(len(qids))
-            }
-            branches.append((int(cell), _sum_terms_sql(by_qid)))
-        # pruned holds only probed cells; sentinel otherwise keeps an
-        # unknown cell rank-last instead of NULL-first.  One-string
-        # CASE (r15): see _adc_expr_sql.
-        dist = F.expr(
-            _cell_case_sql(branches, f"{len(cells) * _ADC_SENTINEL}L")
-        )
-    else:
-        _check_multi_literals(len(qrows), pq_codebook)
-        by_qid = {
-            qi: _adc_table(QC, nc, qvecs[qi]) for qi in range(len(qids))
-        }
-        dist = F.expr(_sum_terms_sql(by_qid))
-    scored = pruned.select(qid_col, F.col(id_col), dist.alias("adc_dist"))
-    wk = Window.partitionBy(qid_col).orderBy(
-        F.asc("adc_dist"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def _multi_adc_expr(code_ids, tables_by_qid, qid_col: str, packed: bool):
-    """Sum over subspaces of the 2-level ``lit[qid][code]`` lookup for
-    ONE book: ``code_ids`` = per-subspace ascending code-id arrays,
-    ``tables_by_qid[qi][j]`` = distance arrays aligned with
-    ``code_ids[j]``.  Sentinel-filled gaps; qid is validated dense
-    upstream; NEGATIVE codes get the explicit-branch sentinel
-    (element_at would read from the array's END).  The batch-shape
-    sibling of :func:`_adc_expr`, shared by the raw, residual and
-    versioned multi-query scans."""
-    return F.expr(
-        _multi_adc_expr_sql(code_ids, tables_by_qid, qid_col, packed)
-    )
-
-
-def _multi_adc_expr_sql(
-    code_ids, tables_by_qid, qid_col: str, packed: bool
-) -> str:
-    """:func:`_multi_adc_expr` as ONE SQL string — see
-    :func:`_adc_expr_sql` for why (r15 Py4J round-trip cost)."""
-    terms = []
-    for j in range(len(code_ids)):
-        size = int(code_ids[j].max()) + 1
-        rows = []
-        for by_sub in tables_by_qid:
-            dense = np.full(size, _ADC_SENTINEL, dtype=np.int64)
-            dense[code_ids[j]] = by_sub[j]
-            rows.append("array(" + ",".join(f"{int(v)}L" for v in dense) + ")")
-        t2d = "array(" + ",".join(rows) + ")"
-        code = _code_sql(j, packed)
-        terms.append(
-            f"(CASE WHEN {code} < 0 THEN {_ADC_SENTINEL}L ELSE "
-            f"coalesce(element_at(element_at({t2d}, "
-            f"CAST(`{qid_col}` AS INT) + 1), "
-            f"CAST({code} AS INT) + 1), {_ADC_SENTINEL}L) END)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
-def ivfpq_multi_topk_versioned(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    overrides: DataFrame,
-    queries_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    packed: bool = False,
-    probe_metric: str | None = None,
-    residual: bool = False,
-) -> DataFrame:
-    """Batch search over a SELECTIVELY-REFIT index — the maintained
-    index (:func:`maintain.pq_refit_cells` + rewrite) served at batch
-    shape: every probe vector answered from ONE pass over the mixed
-    codes, each probed cell CASE-dispatched to the book that MINTED
-    its codes (override cells → their per-cell book, the rest → the
-    frozen global one), each branch a 2-level ``lit[qid][code]`` table.
-    ``residual=True`` serves the true-LOPQ variant (per-cell residual
-    books; every branch's tables derive from each query's residual
-    against that cell).  Bounded collects: the probe pairs, the
-    probed cells' centroids (residual), and the PROBED cells'
-    override books (broadcast semi-join).  Literals =
-    probed_cells·q·m·k, counted against the enforced ceiling.
-    Returns (qid, id, adc_dist), per-qid (adc_dist asc, id asc)
-    top-k."""
-    from img2dataset_spark.operators.similarity import (
-        _collect_flat_codebook as _cb_rows,
-        codebook_num_cells,
-        collect_dense_qids,
-        flat_multi_probe_pairs,
-        multi_probe_cells,
-        recommended_nprobe,
-        static_prune_cells,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    if "level" in ivf_codebook.columns:
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    qrows = collect_dense_qids(queries_df, qid_col)
-    qvecs = [
-        np.asarray([float(x) for x in r["query_vec"]], dtype=np.float64)
-        for r in sorted(qrows, key=lambda r: int(r[qid_col]))
-    ]
-    # flat codebooks: driver-ranked probe pairs + STATIC IN-list prune
-    # (planning-time partition pruning); hierarchical: distributed
-    # probe, broadcast join only (r14)
-    pairs = flat_multi_probe_pairs(
-        ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-    )
-    if pairs is not None:
-        probed = ivf_codebook.sparkSession.createDataFrame(
-            pairs, schema=f"{qid_col} bigint, cell bigint"
-        )
-        pre = static_prune_cells(index_df, (c for _, c in pairs))
-        pcells = sorted({int(c) for _, c in pairs})
-    else:
-        probed = multi_probe_cells(
-            ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-        )
-        pre = index_df
-        pcells = sorted(
-            int(r["cell"])
-            for r in probed.select("cell").distinct().collect()
-        )
-    pruned = pre.join(F.broadcast(probed), "cell")
-    if not pcells:
-        raise ValueError(
-            "ivfpq_multi_topk_versioned: probe returned no cells — is "
-            "the ivf_codebook empty (or all-coarse)?"
-        )
-    _check_multi_literals(len(qrows) * len(pcells), pq_codebook)
-    probed_books = _collect_overrides(overrides, cells=pcells)
-    g_cells, g_QC, g_nc = _collect_codebook(pq_codebook)
-    cents: dict[int, np.ndarray] = {}
-    if residual:
-        if pairs is not None:
-            want = set(pcells)
-            cents = {
-                int(c): np.asarray(cent, dtype=np.float64)
-                for c, cent in _cb_rows(ivf_codebook)
-                if int(c) in want
-            }
-        else:
-            cents = {
-                int(r["cell"]): np.asarray(r["centroid"], dtype=np.float64)
-                for r in ivf_codebook.filter(
-                    F.col("cell").isin(pcells)
-                ).select("cell", "centroid").collect()
-            }
-    branches = []
-    for cell in pcells:
-        code_ids, QC, nc = probed_books.get(cell, (g_cells, g_QC, g_nc))
-        tables_by_qid = [
-            _adc_table(QC, nc, qv - cents[cell] if residual else qv)
-            for qv in qvecs
-        ]
-        branches.append((
-            int(cell),
-            _multi_adc_expr_sql(code_ids, tables_by_qid, qid_col, packed),
-        ))
-    # one-string CASE (r15): see _adc_expr_sql
-    dist = F.expr(
-        _cell_case_sql(branches, f"{len(g_cells) * _ADC_SENTINEL}L")
-    )
-    scored = pruned.select(qid_col, F.col(id_col), dist.alias("adc_dist"))
-    from pyspark.sql import Window
-
-    wk = Window.partitionBy(qid_col).orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def ivfpq_multi_topk_chunked(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    queries_df: DataFrame,
-    k: int = 10,
-    max_queries_per_scan: int | None = None,
-    qid_col: str = "qid",
-    overrides: DataFrame | None = None,
-    **kw,
-) -> DataFrame:
-    """The sanctioned route past :data:`_MULTI_TOPK_MAX_LITERALS`:
-    split the probe set into dense-qid chunks, answer each chunk from
-    ONE scan, and union with the original qids restored.  Each chunk
-    still amortizes its scan; what is NOT amortized across chunks is
-    the scan count itself — q/chunk_size passes instead of one — which
-    is exactly the plan-size-vs-scans trade the ceiling prices.
-
-    ``overrides`` (a :func:`maintain.pq_refit_cells` relation) routes
-    every chunk through :func:`ivfpq_multi_topk_versioned` instead —
-    the maintained-index batch search at any probe-set size (the r12
-    verdict's versioned-chunking gap: versioned literals compound as
-    probed_cells·q·m·k, ~30 queries per scan at FAISS-like settings,
-    and previously a caller had to hand-chunk).  ``residual=True``
-    composes with both routes.
-
-    ``max_queries_per_scan=None`` sizes chunks from the ceiling and
-    the codebook (raw global-book mode only); the residual and
-    versioned CASEs multiply literals by the probed-cell count, which
-    depends on the probe — pass an explicit chunk size there (the
-    sizing refuses to guess)."""
-    from img2dataset_spark.operators.similarity import collect_dense_qids
-
-    spark = queries_df.sparkSession
-    # collect() returns partition order, NOT qid order — the versioned
-    # searcher sorts for the same reason; without this a multi-partition
-    # queries_df would hand each chunk the wrong query under qid lo+i
-    # (r12 advice, high)
-    qrows = sorted(
-        collect_dense_qids(queries_df, qid_col),
-        key=lambda r: int(r[qid_col]),
-    )
-    if max_queries_per_scan is None:
-        if kw.get("residual") or overrides is not None:
-            raise ValueError(
-                "ivfpq_multi_topk_chunked: residual/versioned modes "
-                "multiply plan literals by the probed-cell count — "
-                "pass an explicit max_queries_per_scan"
-            )
-        cells, _, _ = _collect_codebook(pq_codebook)
-        per_q = sum(int(c.max()) + 1 for c in cells)
-        max_queries_per_scan = max(1, _MULTI_TOPK_MAX_LITERALS // per_q)
-    if overrides is not None and len(qrows) > max_queries_per_scan:
-        # collect the bounded override relation ONCE (memoizing) before
-        # the chunk loop: each chunk's probed-slice lookup becomes a
-        # driver-local dict filter instead of one filter+collect Spark
-        # job per chunk (r15; the relation is flagged-cells × m × k
-        # rows, ceiling-gated in the parse — n_chunks slice jobs cost
-        # more than one full bounded collect as soon as there are 2+)
-        _collect_overrides(overrides)
-    out = None
-    schema = "qid long, query_vec array<double>"
-    for lo in range(0, len(qrows), max_queries_per_scan):
-        chunk = qrows[lo : lo + max_queries_per_scan]
-        cdf = spark.createDataFrame(
-            [(i, [float(x) for x in r["query_vec"]])
-             for i, r in enumerate(chunk)],
-            schema,
-        ).withColumnRenamed("qid", qid_col)
-        if overrides is not None:
-            res = ivfpq_multi_topk_versioned(
-                index_df, ivf_codebook, pq_codebook, overrides, cdf,
-                k=k, qid_col=qid_col, **kw,
-            )
-        else:
-            res = ivfpq_multi_topk(
-                index_df, ivf_codebook, pq_codebook, cdf, k=k,
-                qid_col=qid_col, **kw,
-            )
-        res = res.withColumn(qid_col, F.col(qid_col) + F.lit(lo))
-        out = res if out is None else out.unionByName(res)
-    return out
-
-
-def ivfpq_multi_refine_topk(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    vectors_df: DataFrame,
-    queries_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    refine_factor: int | None = None,
-    residual: bool = False,
-    packed: bool = False,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    probe_metric: str | None = None,
-    refine_target_occupancy: int = 1024,
-    overrides: DataFrame | None = None,
-    max_queries_per_scan: int | None = None,
-) -> DataFrame:
-    """Batch two-stage refine — the full production composition at
-    batch shape: stage 1 answers EVERY query's top ``k·refine_factor``
-    compressed candidates from ONE codes pass
-    (:func:`ivfpq_multi_topk`, residual or raw), stage 2 re-ranks all
-    queries' candidates in ONE pass over the vector table — the
-    (qid, id) candidate pairs broadcast into an id-join (a row fetched
-    by two queries is read once and scored once per query), exact
-    round6 cosine per pair, one window top-k per qid.  Running q
-    single refines costs q compressed scans AND q vector-table
-    semi-joins; both stages amortize here.
-
-    ``refine_factor=None`` sizes the pool from occupancy
-    (similarity.recommended_refine_factor), ``nprobe=None`` from the
-    cell count, ``probe_metric=None`` probes by the assignment metric
-    — the three corpus-aware defaults compose.  Returns
-    (qid, id, cos_sim), per-qid (cos_sim desc, id asc) top-k —
-    directly comparable to cosine_topk / ivfpq_refine_topk.
-
-    ``overrides`` (a :func:`maintain.pq_refit_cells` relation) routes
-    the screen through :func:`ivfpq_multi_topk_versioned` — the
-    maintained-index refine at batch shape (r14: the refine stage is
-    the measured recall remedy for a maintained corpus, SCALE.md §13).
-    ``max_queries_per_scan`` additionally routes the screen through
-    :func:`ivfpq_multi_topk_chunked` (with or without overrides) for
-    probe sets past the plan-literal ceiling; stage 2 is ONE vector
-    pass regardless of chunk count."""
-    from pyspark.sql import Window
-
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    if max_queries_per_scan is not None:
-        cand = ivfpq_multi_topk_chunked(
-            index_df, ivf_codebook, pq_codebook, queries_df,
-            k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-            qid_col=qid_col, packed=packed, probe_metric=probe_metric,
-            residual=residual, overrides=overrides,
-            max_queries_per_scan=max_queries_per_scan,
-        )
-    elif overrides is not None:
-        cand = ivfpq_multi_topk_versioned(
-            index_df, ivf_codebook, pq_codebook, overrides, queries_df,
-            k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-            qid_col=qid_col, packed=packed, probe_metric=probe_metric,
-            residual=residual,
-        )
-    else:
-        cand = ivfpq_multi_topk(
-            index_df, ivf_codebook, pq_codebook, queries_df,
-            k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-            qid_col=qid_col, packed=packed, probe_metric=probe_metric,
-            residual=residual,
-        )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    paired = e.join(F.broadcast(cand.select(qid_col, id_col)), id_col)
-    q = F.broadcast(queries_df.select(qid_col, "query_vec"))
-    scored = paired.join(q, qid_col).select(
-        qid_col,
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    wk = Window.partitionBy(qid_col).orderBy(
-        F.desc("cos_sim"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-# (id(df) -> (df, books)) memo for override-relation collects — the
-# _CODEBOOK_MEMO pattern: one composite computes the override relation,
-# probes it nonempty, re-encodes with it and then searches through it,
-# and each step ran its own collect job over the same bounded frame
-# (r14 opt 2).  Payloads stay gated by FLAT_CODEBOOK_MAX_CELLS inside
-# the parse, so nothing corpus-shaped is memoized.
-_OVERRIDES_MEMO: dict[int, tuple[DataFrame, dict]] = {}
-
-
-def _collect_overrides(
-    overrides: DataFrame,
-    cells=None,
-) -> dict[int, tuple[list[np.ndarray], list[np.ndarray], list[np.ndarray]]]:
-    """{cell: (code_ids, QC, nc)} from a per-cell override codebook
-    relation (cell, subspace, code, centroid) — the _collect_codebook
-    artifact keyed by cell.  Bounded by flagged-cells × m × k rows; the
-    flat-codebook ceiling (similarity.FLAT_CODEBOOK_MAX_CELLS) gates
-    the flagged cell count so this collect can never grow corpus-
-    shaped.  Gap-safe exactly like the global book: codes are actual
-    surviving Lloyd ids per (cell, subspace), kept ascending so
-    first-minimum argmin ties resolve to the smallest code.
-
-    ``cells`` restricts the result to the probed cells (the versioned
-    searchers' bounded-collect contract).  Full-relation collects are
-    memoized per DataFrame object (r14 opt 2): a refit composite's
-    re-encode pass collects the whole bounded relation anyway, so the
-    searcher's probed slice — and every ledger search over the same
-    override frame — becomes a driver-local dict filter instead of one
-    Spark job per search.  On a memo miss with ``cells`` given, only
-    the probed slice is collected, exactly the pre-memo shape."""
-    from img2dataset_spark.operators.similarity import _memo_get, _memo_put
-
-    full = _memo_get(_OVERRIDES_MEMO, overrides)
-    if full is not None:
-        if cells is None:
-            # copy: callers must never be able to mutate the cached
-            # mapping in place (r14 advice); payload arrays are shared
-            # and treated as immutable
-            return dict(full)
-        want = {int(c) for c in cells}
-        return {c: v for c, v in full.items() if c in want}
-    if cells is not None:
-        ids = sorted({int(c) for c in cells})
-        return _parse_override_rows(
-            overrides.filter(F.col("cell").isin(ids))
-            .select("cell", "subspace", "code", "centroid")
-            .collect()
-        )
-    full = _parse_override_rows(
-        overrides.select("cell", "subspace", "code", "centroid").collect()
-    )
-    _memo_put(_OVERRIDES_MEMO, overrides, full)
-    return dict(full)
-
-
-def empty_overrides_frame(spark) -> DataFrame:
-    """The canonical EMPTY per-cell override relation — the version-0
-    ("pre", stale-index) side of every versioned search.  Memo-seeded
-    at creation (the _literal_codebook pattern, r15): the frame is
-    known-empty on the driver, so no searcher ever runs a filter+collect
-    Spark job (~0.3 s each, one per "pre" family search in the refit
-    ledgers) just to discover zero rows."""
-    df = spark.createDataFrame(
-        [], "cell long, subspace long, code long, centroid array<double>"
-    )
-    from img2dataset_spark.operators.similarity import _memo_put
-
-    _memo_put(_OVERRIDES_MEMO, df, {})
-    return df
-
-
-def _parse_override_rows(
-    rows,
-) -> dict[int, tuple[list[np.ndarray], list[np.ndarray], list[np.ndarray]]]:
-    from img2dataset_spark.operators.similarity import (
-        FLAT_CODEBOOK_MAX_CELLS,
-    )
-
-    by_cell: dict[int, dict[int, dict[int, list[float]]]] = {}
-    for r in rows:
-        by_cell.setdefault(int(r["cell"]), {}).setdefault(
-            int(r["subspace"]), {}
-        )[int(r["code"])] = r["centroid"]
-    if len(by_cell) > FLAT_CODEBOOK_MAX_CELLS:
-        raise ValueError(
-            f"{len(by_cell)} override cells exceed "
-            f"FLAT_CODEBOOK_MAX_CELLS={FLAT_CODEBOOK_MAX_CELLS}; refit in "
-            "bounded batches (the flagged set is a schedule, not one job)"
-        )
-    out = {}
-    for cell, by_sub in by_cell.items():
-        if sorted(by_sub) != list(range(len(by_sub))):
-            raise ValueError(
-                f"override cell {cell} missing subspaces: {sorted(by_sub)}"
-            )
-        code_ids, QC, nc = [], [], []
-        for j in range(len(by_sub)):
-            ids = np.array(sorted(by_sub[j]), dtype=np.int64)
-            C = np.stack(
-                [np.asarray(by_sub[j][int(c)], dtype=np.float64) for c in ids]
-            )
-            Q = np.floor(C * _QUANT + 0.5).astype(np.int64)
-            code_ids.append(ids)
-            QC.append(Q)
-            nc.append((Q * Q).sum(axis=1))
-        out[cell] = (code_ids, QC, nc)
-    return out
-
-
-def ivfpq_topk_versioned(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    overrides: DataFrame,
-    query_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    id_col: str = "vec_id",
-    packed: bool = False,
-    probe_metric: str | None = None,
-    residual: bool = False,
-) -> DataFrame:
-    """IVF+PQ search over a SELECTIVELY-REFIT index — the versioned-
-    codebook composition that makes :func:`maintain.pq_refit_cells`
-    usable: cells present in ``overrides`` were re-encoded with their
-    own per-cell books (version 1), every other cell still carries
-    global-book codes (version 0), and the scan must score each row
-    against the book that MINTED its codes.
-
-    Same probe rule and scan shape as :func:`ivfpq_topk`; the distance
-    expression is an nprobe-way CASE (the residual-path machinery):
-    probed cells with an override get an ADC table computed from their
-    per-cell book, the rest share the global table — still pure
-    codegen, nprobe·m·k literal longs in the plan.  Bounded collects
-    only: the nprobe probe rows and the override books for the PROBED
-    cells (nprobe × m × k rows via a broadcast semi-join — never the
-    whole override relation).  ``nprobe=None`` auto-sizes like
-    :func:`ivfpq_topk` (ceil(sqrt(num_cells)),
-    similarity.recommended_nprobe); ``probe_metric=None`` resolves to
-    ``"l2"`` — the assignment metric (similarity.probe_cells), the
-    production default since round 12 and the rule the refit-recovery
-    measurement needs: a DRIFTED cell is exactly the one whose
-    centroid direction stops tracking its mass.
-
-    ``residual=True`` serves a RESIDUAL-coded index maintained by the
-    true-LOPQ refit (``pq_refit_cells(residual=True)`` — the family
-    the clustered recall matrix endorses, SCALE.md §11): every probed
-    cell's ADC table is computed from the QUERY'S RESIDUAL against
-    that cell's centroid — override cells through their per-cell
-    residual book, the rest through the global residual book — so the
-    CASE covers every probed cell (nprobe branches) instead of
-    defaulting unflagged cells to one shared table.  Same plan size
-    as :func:`ivfpq_topk`'s residual path plus the override CASE."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        probe_cells,
-        recommended_nprobe,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    if "level" in ivf_codebook.columns:
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    from img2dataset_spark.operators.similarity import static_prune_cells
-
-    probed = probe_cells(ivf_codebook, query_df, nprobe, probe_metric)
-    # bounded probe rows (job-free for flat codebooks); the probed
-    # cells prune both the index scan and the override read as STATIC
-    # IN-lists — planning-time partition pruning (r14)
-    _probe_rows = _collect_flat_codebook(probed)
-    _pcell_ids = [int(c) for c, _ in _probe_rows]
-    pruned = static_prune_cells(index_df, _pcell_ids)
-    qrow = _collect_query_rows(query_df, ("query_vec",))
-    if len(qrow) != 1:
-        raise ValueError(f"query_df must have exactly 1 row, got {len(qrow)}")
-    qvec = [float(x) for x in qrow[0]["query_vec"]]
-    # bounded collects only: the probed-cell override books (broadcast
-    # semi-join — never the whole override relation), the global book
-    # (memoized), and for the residual path the nprobe probe rows; the
-    # CASE dispatches per probed cell
-    probed_books = _collect_overrides(overrides, cells=_pcell_ids)
-    if residual:
-        qv = np.asarray(qvec, dtype=np.float64)
-        g_cells, g_QC, g_nc = _collect_codebook(pq_codebook)
-        probe_rows = sorted(_probe_rows, key=lambda t: int(t[0]))
-        if not probe_rows:
-            raise ValueError(
-                "ivfpq_topk_versioned: probe returned no cells — is "
-                "the ivf_codebook empty (or all-coarse)?"
-            )
-        branches = []
-        for cell, cent in probe_rows:
-            cell = int(cell)
-            qres = qv - np.asarray(cent, dtype=np.float64)
-            if cell in probed_books:
-                code_ids, QC, nc = probed_books[cell]
-                sql = _adc_expr_sql(
-                    code_ids, _adc_table(QC, nc, qres), packed=packed
-                )
-            else:
-                sql = _adc_expr_sql(
-                    g_cells, _adc_table(g_QC, g_nc, qres), packed=packed
-                )
-            branches.append((cell, sql))
-        # pruned holds only probed cells, so every row matches a branch;
-        # the sentinel otherwise keeps a race-appended unknown cell
-        # rank-last instead of NULL (NULLS-FIRST asc would top-rank it).
-        # One-string CASE (r15): see _adc_expr_sql.
-        dist = F.expr(
-            _cell_case_sql(branches, f"{len(g_cells) * _ADC_SENTINEL}L")
-        )
-    else:
-        g_cells, g_dt = pq_adc_distances(pq_codebook, qvec)
-        g_sql = _adc_expr_sql(g_cells, g_dt, packed=packed)
-        branches = [
-            (
-                int(cell),
-                _adc_expr_sql(
-                    probed_books[cell][0],
-                    _adc_table(
-                        probed_books[cell][1], probed_books[cell][2], qvec
-                    ),
-                    packed=packed,
-                ),
-            )
-            for cell in sorted(probed_books)
-        ]
-        dist = F.expr(
-            _cell_case_sql(branches, g_sql) if branches else g_sql
-        )
-    scored = pruned.select(F.col(id_col), dist.alias("adc_dist"))
-    return scored.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(k)
-
-
-def ivfpq_refine_topk_versioned(
-    index_df: DataFrame,
-    ivf_codebook: DataFrame,
-    pq_codebook: DataFrame,
-    overrides: DataFrame,
-    vectors_df: DataFrame,
-    query_df: DataFrame,
-    k: int = 10,
-    nprobe: int | None = None,
-    refine_factor: int | None = None,
-    residual: bool = False,
-    packed: bool = False,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    probe_metric: str | None = None,
-    refine_target_occupancy: int = 1024,
-) -> DataFrame:
-    """Two-stage refine over the MAINTAINED index — the composition a
-    production refit corpus was missing (r13 verdict item 1: the
-    engine's own 600k ledger put the compressed stage at 0.025-0.16
-    recall at 10× occupancy even post-refit, while the refine stage at
-    the measured auto-rf reached 0.65 on the same shape — but
-    :func:`ivfpq_refine_topk` only composed with the UNVERSIONED
-    screen).  Stage 1 takes the top ``k·refine_factor`` candidates
-    from :func:`ivfpq_topk_versioned` — the mixed-codes scan whose
-    CASE dispatches every probed cell to the book that MINTED its
-    codes (override cells → per-cell books, the rest → the frozen
-    global one; ``residual=True`` = the true-LOPQ family) — and
-    stage 2 re-ranks ONLY those candidates by exact cosine against
-    their raw vectors.
-
-    ``refine_factor=None`` (the production default) sizes the pool
-    from cell occupancy via ``similarity.recommended_refine_factor`` —
-    the corpus-aware knob whose necessity the clustered decay
-    measurement established (SCALE.md §11); the maintained index is
-    exactly the corpus where occupancy has DRIFTED, so the auto-sizing
-    matters more here, not less.
-
-    100 TB shape: identical to :func:`ivfpq_refine_topk` — the
-    corpus-sized pass stays compressed (nprobe cells' code files, DPP
-    partition pruning), the exact pass touches k·refine_factor rows
-    via a BROADCAST semi-join into the vector table.  Output
-    (id, cos_sim), round6 quantized cosine, (desc, id asc) top-k —
-    directly comparable to cosine_topk / ivfpq_refine_topk."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    cand = ivfpq_topk_versioned(
-        index_df, ivf_codebook, pq_codebook, overrides, query_df,
-        k=k * refine_factor, nprobe=nprobe,
-        id_col=id_col, residual=residual, packed=packed,
-        probe_metric=probe_metric,
-    )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    pruned = e.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    q = F.broadcast(query_df.select("query_vec"))
-    scored = pruned.crossJoin(q).select(
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)

@@ -165,7 +165,7 @@ def with_global_index(
     # dense literal ARRAY indexed by bucket id — NOT a CreateMap of
     # literal columns: Catalyst constant-folds CreateArray of literals
     # into one Literal but rebuilds CreateMap PER ROW, so the map grew
-    # the corpus-sized pass with the bucket count (the _adc_expr
+    # the corpus-sized pass with the bucket count (the ADC-table
     # lesson, SCALE.md §11).  Empty buckets keep offset 0: no row
     # carries their id, so the filler is never read.
     offsets = [0] * nbuckets

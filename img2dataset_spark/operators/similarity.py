@@ -294,43 +294,48 @@ import threading as _threading
 _MEMO_LOCK = _threading.Lock()
 
 
-def lit_long_array(vals) -> Column:
-    """A literal ``array<bigint>`` column built with ONE Py4J round
-    trip (an ``F.expr`` string the JVM parses) instead of one ``lit``
-    call per element (r15: ``F.lit(list)`` decomposes into per-element
-    gateway calls — a cProfile of one versioned search build showed
-    3,137 Py4J round trips ≈ 1.05 s, over half of them literal-table
-    construction).  Value-identical to ``F.lit([int(v), ...])``: the
-    ``L`` suffix parses to the same int64s."""
-    return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
+def quote_ident(name: str) -> str:
+    """A column name as a backticked SQL identifier (embedded backticks
+    doubled), safe to interpolate into generated SQL and to pass where
+    Spark parses a column name, whatever characters the name holds."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def lit_long_array_2d(rows) -> Column:
-    """2-level ``array<array<bigint>>`` literal in one gateway round
-    trip — the batch searchers' ``lit[qid][code]`` tables."""
-    inner = ",".join(
-        "array(" + ",".join(f"{int(v)}L" for v in r) + ")" for r in rows
-    )
-    return F.expr(f"array({inner})")
+def long_array_sql(vals) -> str:
+    """SQL text of a literal ``array<bigint>`` — the one-string form
+    every literal table of the searchers is built from, so the JVM
+    parses a whole table in one round trip (r15: ``F.lit(list)``
+    decomposes into per-element gateway calls — a cProfile of one
+    versioned search build showed 3,137 Py4J round trips ≈ 1.05 s, over
+    half of them literal-table construction).  The ``L`` suffix parses
+    to the same int64s as ``F.lit``.  An empty list is a TYPED empty
+    array: a bare ``array()`` is ``array<void>``."""
+    body = ",".join(f"{int(v)}L" for v in vals)
+    return f"array({body})" if body else "CAST(array() AS ARRAY<BIGINT>)"
+
+
+def long_array_2d_sql(rows) -> str:
+    """SQL text of a 2-level ``array<array<bigint>>`` literal — the
+    batch searchers' ``lit[qid][code]`` tables."""
+    body = ",".join(long_array_sql(r) for r in rows)
+    return f"array({body})" if body else "CAST(array() AS ARRAY<ARRAY<BIGINT>>)"
+
+
+def double_array_sql(vals) -> str:
+    """SQL text of a literal ``array<double>``.  repr() of a float is
+    the shortest string that round-trips to the same IEEE-754 double,
+    and the string-to-double cast reads it correctly rounded — so the
+    values are bit-identical to ``F.lit(float(v))``'s.  Quoted-string
+    casts, not bare literals: a bare -0.0 would parse as DECIMAL first
+    (which has no signed zero), and the cast also reads repr()'s
+    ``inf``/``-inf``/``nan``."""
+    body = ",".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vals)
+    return f"array({body})" if body else "CAST(array() AS ARRAY<DOUBLE>)"
 
 
 def lit_double_array(vals) -> Column:
-    """Literal ``array<double>`` in one gateway round trip.  repr() of
-    a finite float is the shortest string that round-trips to the same
-    IEEE-754 double, and Spark's parser reads it with
-    Double.parseDouble (correctly-rounded) — so the literal values are
-    bit-identical to ``F.lit(float(v))``'s.  Non-finite values fall
-    back to the per-element form (SQL has no inf/nan literals)."""
-    fv = [float(v) for v in vals]
-    if not all(math.isfinite(v) for v in fv):
-        return F.array(*[F.lit(v) for v in fv])
-    # quoted-string casts: a bare -0.0 would parse as DECIMAL first
-    # (which has no signed zero); CAST('<repr>' AS DOUBLE) goes through
-    # the string-to-double path (Double.parseDouble semantics) and
-    # round-trips every finite double bit-exactly
-    return F.expr(
-        "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in fv) + ")"
-    )
+    """Literal ``array<double>`` in one round trip."""
+    return F.expr(double_array_sql(vals))
 
 
 def _memo_get(memo: dict, df: DataFrame):
@@ -374,7 +379,7 @@ def collect_query_rows(query_df: DataFrame, cols: tuple[str, ...]):
     cached = _memo_get(_QUERY_ROWS_MEMO, query_df)
     if cached is not None and cached[0] == key:
         return cached[1]
-    rows = query_df.select(*cols).collect()
+    rows = query_df.select(*[quote_ident(c) for c in cols]).collect()
     _memo_put(_QUERY_ROWS_MEMO, query_df, (key, rows))
     return rows
 
@@ -396,23 +401,25 @@ def literal_query_frame(spark, vec) -> DataFrame:
     return df
 
 
-def literal_multi_query_frame(spark, vecs) -> DataFrame:
+def literal_multi_query_frame(spark, vecs, qid_col: str = "qid") -> DataFrame:
     """A (qid, query_vec) probe frame built from DRIVER-LOCAL vectors
     (qid = list position, dense 0..q-1 as every ``*_multi_topk``
     searcher requires), with the query-rows memo pre-seeded so
     ``collect_dense_qids`` is job-free — the batch twin of
     :func:`literal_query_frame` (r15, the recall ledgers' per-family
-    batched searches)."""
+    batched searches; the chunked batch route's chunk frames)."""
     vals = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(vals, "qid bigint, query_vec array<double>")
+    df = spark.createDataFrame(
+        vals, f"{quote_ident(qid_col)} bigint, query_vec array<double>"
+    )
     from pyspark.sql import Row
 
     _memo_put(
         _QUERY_ROWS_MEMO,
         df,
         (
-            (("qid", "query_vec"),),
-            [Row(qid=i, query_vec=v) for i, v in vals],
+            ((qid_col, "query_vec"),),
+            [Row(**{qid_col: i, "query_vec": v}) for i, v in vals],
         ),
     )
     return df
@@ -1002,18 +1009,19 @@ def multi_probe_cells(
     )
     if pairs is not None:
         return ivf_codebook.sparkSession.createDataFrame(
-            pairs, schema=f"{qid_col} bigint, cell bigint"
+            pairs, schema=f"{quote_ident(qid_col)} bigint, cell bigint"
         )
     ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    q = F.broadcast(queries_df.select(qid_col, "query_vec"))
+    qq = quote_ident(qid_col)
+    q = F.broadcast(queries_df.select(qq, "query_vec"))
     joined = ivf_codebook.crossJoin(q)
     if metric == "cosine":
         scored = joined.select(
-            qid_col,
+            qq,
             "cell",
             round6(cosine(F.col("centroid"), F.col("query_vec"))).alias("_s"),
         )
-        wp = Window.partitionBy(qid_col).orderBy(F.desc("_s"), F.asc("cell"))
+        wp = Window.partitionBy(qq).orderBy(F.desc("_s"), F.asc("cell"))
     elif metric == "l2":
 
         def _quant(c: Column) -> Column:
@@ -1031,14 +1039,14 @@ def multi_probe_cells(
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
         )
-        scored = joined.select(qid_col, "cell", d.alias("_s"))
-        wp = Window.partitionBy(qid_col).orderBy(F.asc("_s"), F.asc("cell"))
+        scored = joined.select(qq, "cell", d.alias("_s"))
+        wp = Window.partitionBy(qq).orderBy(F.asc("_s"), F.asc("cell"))
     else:
         raise ValueError(f"multi_probe_cells: unknown metric {metric!r}")
     return (
         scored.withColumn("_rn", F.row_number().over(wp))
         .filter(F.col("_rn") <= nprobe)
-        .select(qid_col, "cell")
+        .select(qq, "cell")
     )
 
 

@@ -42,8 +42,20 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from img2dataset_spark.operators.ivf_search import (
+    Codec,
+    assignment,
+    chunk_kw,
+    chunk_size,
+    collect_overrides,
+    empty_overrides_frame,
+    group_override_rows,
+    query_table_sql,
+    search,
+)
 from img2dataset_spark.operators.similarity import (
-    collect_query_rows as _collect_query_rows,
+    _QUANT,
+    double_array_sql,
 )
 
 
@@ -92,24 +104,28 @@ def _collect_bounds(bounds: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """(lo, hi) float64 arrays in dim order — d values, the whole
     artifact (the ONE driver materialization, bounded by dimension).
     Memoized per bounds-DataFrame object."""
-    from img2dataset_spark.operators.similarity import _memo_get
+    from img2dataset_spark.operators.similarity import _memo_get, _memo_put
 
     hit = _memo_get(_BOUNDS_MEMO, bounds)
-    if hit is not None:
-        return hit
-    rows = bounds.select("dim", "lo", "hi").collect()
-    dims = sorted(r["dim"] for r in rows)
+    if hit is None:
+        hit = _bounds_arrays(bounds.select("dim", "lo", "hi").collect(), "bounds")
+        # LRU-evicting, lock-guarded put (shared helper, r15 — r10 nit:
+        # evict least-recently-used, not the whole memo)
+        _memo_put(_BOUNDS_MEMO, bounds, hit)
+    return hit
+
+
+def _bounds_arrays(rows, what: str) -> tuple[np.ndarray, np.ndarray]:
+    """(lo, hi) float64 arrays in dim order from (dim, lo, hi) rows,
+    whose dims must be exactly 1..d: a partial row set would silently
+    mis-encode every dimension after the gap."""
+    dims = sorted(int(r["dim"]) for r in rows)
     if dims != list(range(1, len(rows) + 1)):
-        raise ValueError(f"bounds dims not contiguous 1..d: {dims[:5]}...")
+        raise ValueError(f"{what} dims not contiguous 1..d: {dims[:5]}...")
     lo, hi = np.empty(len(rows)), np.empty(len(rows))
     for r in rows:
-        lo[r["dim"] - 1] = float(r["lo"])
-        hi[r["dim"] - 1] = float(r["hi"])
-    from img2dataset_spark.operators.similarity import _memo_put
-
-    # LRU-evicting, lock-guarded put (shared helper, r15 — r10 nit:
-    # evict least-recently-used, not the whole memo)
-    _memo_put(_BOUNDS_MEMO, bounds, (lo, hi))
+        lo[int(r["dim"]) - 1] = float(r["lo"])
+        hi[int(r["dim"]) - 1] = float(r["hi"])
     return lo, hi
 
 
@@ -172,6 +188,136 @@ def encode_query(bounds_lo: np.ndarray, bounds_hi: np.ndarray,
     return codes.astype(np.int64)
 
 
+class _SQCodec(Codec):
+    """The symmetric SQ8 codec of the IVF search core: the query is
+    encoded with the corpus bounds (driver-side, the same float64 IEEE
+    expression as the distributed encode) and each row scores the exact
+    int64 code-domain squared-L2 ``Σ (code_i − qcode_i)²`` —
+    ``aggregate(zip_with(...))`` over longs, whole-stage codegen."""
+
+    out_col = "sq_dist"
+    probe_metric = "l2"
+    chunked = "ivfsq_multi_topk_chunked"
+    override_cols = ("cell", "dim", "lo", "hi")
+
+    def __init__(self, bounds: DataFrame):
+        self.bounds = bounds
+
+    def book(self):
+        return _collect_bounds(self.bounds)
+
+    def dim(self) -> int:
+        return len(self.book()[0])
+
+    def dist_sql(self, book, qvecs, qid_sql):
+        lo, hi = book
+        q = query_table_sql([encode_query(lo, hi, qv) for qv in qvecs], qid_sql)
+        return (
+            f"aggregate(zip_with(`codes`, {q}, (x, y) -> (x - y) * (x - y)), "
+            "CAST(0 AS BIGINT), (x, y) -> x + y)"
+        )
+
+    def literals(self, nq, n_tables):
+        return nq * self.dim(), f"{nq} queries x dim {self.dim()}"
+
+    def width(self):
+        return self.dim(), f"bounds dim {self.dim()}"
+
+    @staticmethod
+    def parse_overrides(rows) -> dict:
+        """{cell: (lo, hi)} — :func:`_collect_bounds`'s artifact keyed
+        by cell."""
+        return {
+            cell: _bounds_arrays(cell_rows, f"override cell {cell} bounds")
+            for cell, cell_rows in group_override_rows(rows).items()
+        }
+
+    def check_overrides(self, books):
+        _check_bounds_dim(books, self.dim())
+
+
+class _SQAsymCodec(_SQCodec):
+    """The ASYMMETRIC SQ8 codec — the versioned searchers' distance.
+    The symmetric code-domain (c−q)² is meaningless across cells whose
+    codes were minted with DIFFERENT bounds (a wide-bounds cell
+    compresses every distance), so each code is reconstructed through
+    ITS bounds (``lo_i + c_i·(hi_i−lo_i)/255``, FAISS's asymmetric SQ
+    decode) and measured against the 2^-20 fixed-point quantized query:
+    exact int64 per-dimension squares, comparable across any bounds.
+    The reconstruction's float64 expression order (lo + (c·span)/255,
+    then ·2^20 + 0.5, floor) is mirrored verbatim in the SQL twin."""
+
+    out_col = "sq_adist"
+
+    def dist_sql(self, book, qvecs, qid_sql):
+        lo, hi = book
+        Q = []
+        for qv in qvecs:
+            if qv.shape[0] != lo.shape[0]:
+                raise ValueError(
+                    f"query dim {qv.shape[0]} != bounds dim {lo.shape[0]}"
+                )
+            Q.append(np.floor(qv * _QUANT + 0.5).astype(np.int64))
+        # lambda (x, y) = (code, 0-based dimension)
+        q = f"element_at({query_table_sql(Q, qid_sql)}, y + 1)"
+        recon = (
+            f"(element_at({double_array_sql(lo)}, y + 1) + "
+            f"((CAST(x AS DOUBLE) * element_at({double_array_sql(hi - lo)}, "
+            "y + 1)) / 255.0D))"
+        )
+        diff = f"({q} - CAST(floor(((({recon}) * {float(_QUANT)!r}D) + 0.5D)) AS BIGINT))"
+        return (
+            f"aggregate(transform(`codes`, (x, y) -> ({diff} * {diff})), "
+            "CAST(0 AS BIGINT), (x, y) -> x + y)"
+        )
+
+    def literals(self, nq, n_tables):
+        d = self.dim()
+        return (
+            nq * d + n_tables * 2 * d,
+            f"{nq} queries x dim {d} + {n_tables} bounds tables x 2*{d}",
+        )
+
+
+def _check_bounds_dim(books: dict, expected_dim: int | None) -> None:
+    """An override relation fit at a different dimensionality passes
+    the contiguity check alone, and ``element_at`` past its shorter
+    arrays would yield NULL distances that NULLS-FIRST asc silently
+    top-ranks — applied per call, since the memo stores raw parsed
+    bounds and callers may know different global dims (r13 advice)."""
+    if expected_dim is None:
+        return
+    for cell, (lo, _hi) in books.items():
+        if len(lo) != expected_dim:
+            raise ValueError(
+                f"override cell {cell} carries bounds for {len(lo)} "
+                f"dims but the global bounds have {expected_dim} — the "
+                "override relation was fit at a different dimensionality"
+            )
+
+
+def _collect_cell_bounds(
+    overrides: DataFrame, expected_dim: int | None = None, cells=None
+) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """{cell: (lo, hi)} of a per-cell bounds override relation
+    (cell, dim, lo, hi), parsed by the SQ codec — see
+    :func:`ivf_search.collect_overrides` for the collect and memo
+    rules — with every returned cell checked against ``expected_dim``."""
+    books = collect_overrides(overrides, _SQCodec, cells)
+    _check_bounds_dim(books, expected_dim)
+    return books
+
+
+def empty_cell_bounds_frame(spark) -> DataFrame:
+    """The canonical EMPTY per-cell bounds relation, memo-seeded so the
+    version-0 side of a versioned SQ search runs no collect job."""
+    return empty_overrides_frame(spark, "cell long, dim int, lo double, hi double")
+
+
+def _codec(bounds: DataFrame, overrides) -> _SQCodec:
+    return _SQCodec(bounds) if overrides is None else _SQAsymCodec(bounds)
+
+
 def sq_topk(
     codes_df: DataFrame,
     bounds: DataFrame,
@@ -179,43 +325,13 @@ def sq_topk(
     k: int = 10,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Symmetric SQ8 top-k: encode the query with the corpus bounds,
-    inline its d byte codes as a literal array, and rank by the exact
-    int64 code-domain squared-L2 — ``aggregate(zip_with(...))`` over
-    longs, whole-stage codegen, TakeOrdered.  Returns (id, sq_dist),
+    """Symmetric SQ8 top-k over a whole corpus: the query's d byte codes
+    ride the plan as a literal array and each row scores the exact int64
+    code-domain squared-L2 (:class:`_SQCodec`), TakeOrdered.  A codes
+    row of the wrong width fails loudly.  Returns (id, sq_dist),
     (sq_dist asc, id asc), limit k."""
-    qrow = _collect_query_rows(query_df, ("query_vec",))
-    if len(qrow) != 1:
-        raise ValueError(f"query_df must have exactly 1 row, got {len(qrow)}")
-    lo, hi = _collect_bounds(bounds)
-    qc = encode_query(lo, hi, [float(x) for x in qrow[0]["query_vec"]])
-    from img2dataset_spark.operators.similarity import lit_long_array
-
-    q_arr = lit_long_array(qc)
-    dist = F.aggregate(
-        F.zip_with(F.col("codes"), q_arr, lambda c, q: (c - q) * (c - q)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # width guard: zip_with null-pads a short codes array -> null dist,
-    # and NULLS-FIRST asc would silently rank misencoded rows top-k.
-    # NULL codes must hit this branch too: size(NULL) is NULL, the !=
-    # predicate evaluates NULL, and the when() would otherwise fall
-    # through to a NULL dist — the same hazard, different spelling.
-    dist = F.when(
-        F.col("codes").isNull() | (F.size(F.col("codes")) != len(qc)),
-        F.raise_error(
-            F.concat(
-                F.lit(f"sq_topk: codes width != bounds dim {len(qc)} — got "),
-                # coalesce: concat(NULL) nulls the whole message
-                F.coalesce(
-                    F.size(F.col("codes")).cast("string"), F.lit("NULL")
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(dist)
-    scored = codes_df.select(F.col(id_col), dist.alias("sq_dist"))
-    return scored.orderBy(F.asc("sq_dist"), F.asc(id_col)).limit(k)
+    return search(_SQCodec(bounds), "sq_topk", codes_df, None, query_df,
+                  k=k, id_col=id_col)
 
 
 def ivfsq_index(
@@ -234,16 +350,10 @@ def ivfsq_index(
     Write partitioned by cell; a query then reads nprobe cells' code
     files.  Flat and hierarchical coarse codebooks both work
     (ivf_assign dispatches)."""
-    from img2dataset_spark.operators.similarity import ivf_assign
-
     lo, hi = _collect_bounds(bounds)
     # `assigned` (r14): reuse a pre-computed assignment pass, see
     # maintain.pq_refit_cells
-    tagged = (
-        assigned
-        if assigned is not None
-        else ivf_assign(df, ivf_codebook, vec_col, id_col)
-    )
+    tagged = assignment(df, ivf_codebook, vec_col, id_col, assigned)
     return tagged.select(
         F.col(id_col),
         "cell",
@@ -263,43 +373,13 @@ def ivfsq_topk(
 ) -> DataFrame:
     """IVF-pruned symmetric SQ8 search: rank coarse cells by the probe
     metric, keep the top ``nprobe``, and scan ONLY those cells' byte
-    codes against the query's own codes.  The cell filter is a
-    broadcast join that becomes partition pruning over a
-    cell-partitioned index; the scan is exact int64 arithmetic in
-    whole-stage codegen.  Returns (id, sq_dist), (asc, id asc), top k.
-    ``nprobe=None`` auto-sizes ceil(sqrt(num_cells)) via
-    similarity.recommended_nprobe — the measured sf1 probe-loss fix
-    (ivfsq 0.55 → 0.85, SCALE.md §10) made the default.
-    ``probe_metric=None`` resolves to ``"l2"`` — the assignment
-    metric (similarity.probe_cells), the L2-family production default
-    since round 12 (the cosine probe mis-ranked a drifted query's own
-    cell on the measured clustered scenario); pass ``"cosine"`` for
-    the pre-r12 angle probe."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        probe_cells,
-        recommended_nprobe,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    if "level" in ivf_codebook.columns:
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    from img2dataset_spark.operators.similarity import (
-        _collect_flat_codebook,
-        static_prune_cells,
-    )
-
-    probed = probe_cells(ivf_codebook, query_df, nprobe, probe_metric)
-    # bounded probe rows (job-free for flat codebooks); the probed
-    # cells prune the scan as a STATIC IN-list — planning-time
-    # partition pruning (r14)
-    pruned = static_prune_cells(
-        index_df, (c for c, _ in _collect_flat_codebook(probed))
-    )
-    return sq_topk(pruned, bounds, query_df, k=k, id_col=id_col)
+    codes against the query's own codes.  Returns (id, sq_dist),
+    (asc, id asc), top k.  Probe defaults as :func:`ivf_search.search`
+    (the sqrt(cells) nprobe was the measured sf1 probe-loss fix, ivfsq
+    0.55 → 0.85, SCALE.md §10)."""
+    return search(_SQCodec(bounds), "ivfsq_topk", index_df, ivf_codebook,
+                  query_df, k=k, nprobe=nprobe, id_col=id_col,
+                  probe_metric=probe_metric)
 
 
 def ivfsq_multi_topk(
@@ -313,277 +393,15 @@ def ivfsq_multi_topk(
     qid_col: str = "qid",
     probe_metric: str | None = None,
 ) -> DataFrame:
-    """Batch IVF+SQ8 search — every probe vector answered from ONE
-    pass over the byte codes (pq.ivfpq_multi_topk's one-scan shape for
-    the SQ family; the byte scan amortizes identically to the ADC
-    scan, r11 verdict item 7):
-
-    - probe: :func:`similarity.multi_probe_cells` — per-qid ranking in
-      one codebook × queries crossJoin (``probe_metric=None`` → "l2",
-      the L2-family production default), row_number ≤ nprobe;
-    - scan: index ⋈ broadcast (qid, cell) pairs, each row's distance
-      the exact int64 code-domain squared-L2 against ITS query's byte
-      codes, read from a constant-folded 2-level literal
-      ``lit[qid]`` (q·d longs riding the plan once — CreateArray
-      folds, the _adc_expr lesson) via one ``zip_with`` aggregate;
-      the sq_topk width/NULL raise_error guard applies per row;
-    - top-k: one row_number window per qid.
-
-    ``queries_df`` is (qid, query_vec) with qid DENSE 0..q-1 — a
-    bounded probe set.  Returns (qid, id, sq_dist), per-qid
-    (sq_dist asc, id asc) top-k."""
-    from pyspark.sql import Window
-
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        collect_dense_qids,
-        flat_multi_probe_pairs,
-        multi_probe_cells,
-        recommended_nprobe,
-        static_prune_cells,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    qrows = collect_dense_qids(queries_df, qid_col)
-    lo, hi = _collect_bounds(bounds)
-    qcodes = {
-        int(r[qid_col]): encode_query(
-            lo, hi, [float(x) for x in r["query_vec"]]
-        )
-        for r in qrows
-    }
-    d = len(lo)
-    # the q·d quantized-query table rides the plan as one 2-level
-    # literal — priced against the shared budget with the chunked
-    # route named (r13 verdict item 2: the ceiling was PQ-only)
-    from img2dataset_spark.operators.pq import _check_plan_literal_budget
-
-    _check_plan_literal_budget(
-        len(qrows) * d,
-        f"ivfsq_multi_topk: {len(qrows)} queries x dim {d}",
-        "chunk the probe set with ivfsq_multi_topk_chunked (each "
-        "chunk is still answered from one scan)",
-    )
-    lit2d = F.lit([[int(c) for c in qcodes[qi]]
-                   for qi in range(len(qrows))])
-    # flat codebooks: driver-ranked probe pairs + STATIC IN-list prune
-    # (planning-time partition pruning); hierarchical: distributed
-    # probe, broadcast join only (r14)
-    pairs = flat_multi_probe_pairs(
-        ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-    )
-    if pairs is not None:
-        probed = ivf_codebook.sparkSession.createDataFrame(
-            pairs, schema=f"{qid_col} bigint, cell bigint"
-        )
-        pre = static_prune_cells(index_df, (c for _, c in pairs))
-    else:
-        probed = multi_probe_cells(
-            ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-        )
-        pre = index_df
-    pruned = pre.join(F.broadcast(probed), "cell")
-    q_arr = F.element_at(lit2d, F.col(qid_col).cast("int") + F.lit(1))
-    dist = F.aggregate(
-        F.zip_with(F.col("codes"), q_arr, lambda c, q: (c - q) * (c - q)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # sq_topk's width guard, per-qid: zip_with null-pads a short codes
-    # array -> null dist -> NULLS-FIRST top-k hazard
-    dist = F.when(
-        F.col("codes").isNull() | (F.size(F.col("codes")) != d),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"ivfsq_multi_topk: codes width != bounds dim {d} "
-                    "— got "
-                ),
-                F.coalesce(
-                    F.size(F.col("codes")).cast("string"), F.lit("NULL")
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(dist)
-    scored = pruned.select(qid_col, F.col(id_col), dist.alias("sq_dist"))
-    wk = Window.partitionBy(qid_col).orderBy(F.asc("sq_dist"), F.asc(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-# (id(df) -> (df, bounds)) memo for override-bounds collects — the SQ
-# analog of pq._OVERRIDES_MEMO (r14 opt 2): a refit composite's
-# re-encode pass collects the whole bounded relation, so the versioned
-# searcher's probed slice becomes a driver-local dict filter instead of
-# its own Spark job.  Payloads stay gated by FLAT_CODEBOOK_MAX_CELLS
-# inside the parse.
-_CELL_BOUNDS_MEMO: dict[int, tuple[DataFrame, dict]] = {}
-
-
-def _collect_cell_bounds(
-    overrides: DataFrame,
-    expected_dim: int | None = None,
-    cells=None,
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    from img2dataset_spark.operators.similarity import _memo_get, _memo_put
-
-    hit = _memo_get(_CELL_BOUNDS_MEMO, overrides)
-    if hit is not None:
-        # copy: callers must never mutate the cached mapping (r14
-        # advice); payload arrays are shared and treated as immutable
-        full = dict(hit)
-        if cells is not None:
-            want = {int(c) for c in cells}
-            full = {c: v for c, v in full.items() if c in want}
-        _check_bounds_dim(full, expected_dim)
-        return full
-    if cells is not None:
-        ids = sorted({int(c) for c in cells})
-        out = _parse_cell_bounds_rows(
-            overrides.filter(F.col("cell").isin(ids))
-            .select("cell", "dim", "lo", "hi")
-            .collect()
-        )
-        _check_bounds_dim(out, expected_dim)
-        return out
-    full = _parse_cell_bounds_rows(
-        overrides.select("cell", "dim", "lo", "hi").collect()
-    )
-    _memo_put(_CELL_BOUNDS_MEMO, overrides, full)
-    full = dict(full)
-    _check_bounds_dim(full, expected_dim)
-    return full
-
-
-def empty_cell_bounds_frame(spark) -> DataFrame:
-    """The canonical EMPTY per-cell bounds relation — the version-0
-    ("pre") side of every versioned SQ search, memo-seeded at creation
-    (the pq.empty_overrides_frame twin, r15) so no searcher runs a
-    filter+collect job just to discover zero rows."""
-    df = spark.createDataFrame([], "cell long, dim int, lo double, hi double")
-    from img2dataset_spark.operators.similarity import _memo_put
-
-    _memo_put(_CELL_BOUNDS_MEMO, df, {})
-    return df
-
-
-def _check_bounds_dim(
-    out: dict[int, tuple[np.ndarray, np.ndarray]], expected_dim: int | None
-) -> None:
-    """The r13-advice dimensionality guard, applied per CALL to the
-    returned cells (the memo stores raw parsed bounds; different
-    callers may know different global dims)."""
-    if expected_dim is None:
-        return
-    for cell, (lo, _hi) in out.items():
-        if len(lo) != expected_dim:
-            raise ValueError(
-                f"override cell {cell} carries bounds for {len(lo)} "
-                f"dims but the global bounds have {expected_dim} — the "
-                "override relation was fit at a different dimensionality"
-            )
-
-
-def _parse_cell_bounds_rows(
-    rows,
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """{cell: (lo, hi)} from a per-cell bounds override relation
-    (cell, dim, lo, hi) — :func:`_collect_bounds`'s artifact keyed by
-    cell, the SQ analog of ``pq._collect_overrides``.  Bounded by
-    flagged-cells × d rows; the flat-codebook ceiling gates the
-    flagged cell count so this collect can never grow corpus-shaped.
-    Each cell's dims must be contiguous 1..d (a partial bounds row set
-    would silently mis-encode every dimension after the gap), and —
-    when the caller knows the GLOBAL dimensionality — each cell's d
-    must equal ``expected_dim``: an override relation fit at a
-    different dimensionality passes the contiguity check alone, and
-    downstream ``element_at`` past the shorter arrays yields NULL
-    (non-ANSI) distances that NULLS-FIRST asc would silently top-rank
-    (r13 advice, enforced per call by :func:`_check_bounds_dim`)."""
-    from img2dataset_spark.operators.similarity import (
-        FLAT_CODEBOOK_MAX_CELLS,
-    )
-
-    by_cell: dict[int, dict[int, tuple[float, float]]] = {}
-    for r in rows:
-        by_cell.setdefault(int(r["cell"]), {})[int(r["dim"])] = (
-            float(r["lo"]),
-            float(r["hi"]),
-        )
-    if len(by_cell) > FLAT_CODEBOOK_MAX_CELLS:
-        raise ValueError(
-            f"{len(by_cell)} override cells exceed "
-            f"FLAT_CODEBOOK_MAX_CELLS={FLAT_CODEBOOK_MAX_CELLS}; refit in "
-            "bounded batches (the flagged set is a schedule, not one job)"
-        )
-    out = {}
-    for cell, dims in by_cell.items():
-        if sorted(dims) != list(range(1, len(dims) + 1)):
-            raise ValueError(
-                f"override cell {cell} bounds dims not contiguous 1..d: "
-                f"{sorted(dims)[:5]}..."
-            )
-        lo = np.array([dims[i][0] for i in range(1, len(dims) + 1)])
-        hi = np.array([dims[i][1] for i in range(1, len(dims) + 1)])
-        out[cell] = (lo, hi)
-    return out
-
-
-def _asym_dist_expr(codes, lo: np.ndarray, hi: np.ndarray,
-                    qvec: np.ndarray):
-    """ASYMMETRIC SQ distance in quantized VECTOR units — the
-    cross-bounds-comparable distance the versioned search needs: the
-    symmetric code-domain (c−q)² is meaningless across cells whose
-    codes were minted with DIFFERENT bounds (a wide-bounds cell
-    compresses every distance), so the versioned scan reconstructs
-    each code through ITS bounds (``lo_i + c_i·(hi_i−lo_i)/255``,
-    FAISS's asymmetric SQ decode) and measures against the 2^-20
-    fixed-point quantized query — exact int64 per-dimension squares
-    summed by ``aggregate``, order-independent, so the relation
-    strict-compares against a SQL twin (the repo-wide quantized-
-    exactness rule).  The reconstruction's float64 expression order
-    (lo + (c·span)/255, then ·2^20 + 0.5, floor) is mirrored verbatim
-    in the twin — identical IEEE doubles in any engine."""
-    from img2dataset_spark.operators.similarity import _QUANT
-
-    q = np.asarray(qvec, dtype=np.float64)
-    if q.shape[0] != lo.shape[0]:
-        raise ValueError(
-            f"query dim {q.shape[0]} != bounds dim {lo.shape[0]}"
-        )
-    Q = np.floor(q * _QUANT + 0.5).astype(np.int64)
-    from img2dataset_spark.operators.similarity import (
-        lit_double_array,
-        lit_long_array,
-    )
-
-    # one gateway round trip per array, not one per element (r15);
-    # values are bit-identical to the per-element F.lit form (pinned)
-    lo_arr = lit_double_array(lo)
-    span_arr = lit_double_array(h - l for h, l in zip(hi, lo))
-    q_arr = lit_long_array(Q)
-
-    def term(c, i):
-        recon = (
-            F.element_at(lo_arr, i + 1)
-            + c.cast("double") * F.element_at(span_arr, i + 1)
-            / F.lit(255.0)
-        )
-        qr = F.floor(recon * F.lit(float(_QUANT)) + F.lit(0.5)).cast("long")
-        diff = F.element_at(q_arr, i + 1) - qr
-        return diff * diff
-
-    return F.aggregate(
-        F.transform(codes, term),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    """Batch IVF+SQ8 search — every probe vector answered from ONE pass
+    over the byte codes, each row scored against ITS query's codes read
+    from a 2-level literal ``lit[qid]`` (q·d longs; past the literal
+    budget the call names :func:`ivfsq_multi_topk_chunked`).
+    ``queries_df`` is (qid, query_vec) with qid DENSE 0..q-1.  Returns
+    (qid, id, sq_dist), per-qid (sq_dist asc, id asc) top-k."""
+    return search(_SQCodec(bounds), "ivfsq_multi_topk", index_df,
+                  ivf_codebook, queries_df, k=k, nprobe=nprobe,
+                  id_col=id_col, qid_col=qid_col, probe_metric=probe_metric)
 
 
 def ivfsq_topk_versioned(
@@ -597,93 +415,19 @@ def ivfsq_topk_versioned(
     id_col: str = "vec_id",
     probe_metric: str | None = None,
 ) -> DataFrame:
-    """IVF+SQ8 search over a SELECTIVELY-REFIT index — the maintained
-    SQ index (:func:`maintain.sq_refit_cells` + rewrite) made
-    servable, closing the SQ half of the maintenance loop (the r12
-    verdict's #2 gap: drifted IVF+SQ cells clip against stale bounds
-    with no remedy short of a full re-index): cells present in
-    ``overrides`` were re-encoded with their own per-cell [lo, hi]
-    bounds (version 1), every other cell still carries global-bounds
-    codes (version 0), and the scan must decode each row through the
-    bounds that MINTED its codes.
-
-    Same probe rule as :func:`ivfsq_topk` (``nprobe=None`` →
-    ceil(sqrt(num_cells)), ``probe_metric=None`` → "l2", hierarchical
-    codebooks filtered to fine rows).  The distance CANNOT stay
-    symmetric: code-domain (c−q)² across two bounds versions compares
-    incommensurable units, so the versioned scan ranks by the
-    ASYMMETRIC reconstruction distance (:func:`_asym_dist_expr` —
-    exact int64 over 2^-20 fixed-point, vector units, comparable
-    across any bounds) with a CASE dispatching override cells to their
-    bounds and everything else to the global ones — still pure
-    codegen, (override_probed + 1)·d literal doubles in the plan.
-    Bounded collects only: the probe rows and the PROBED cells'
-    override bounds (broadcast semi-join).  Returns (id, sq_adist),
+    """IVF+SQ8 search over a SELECTIVELY-REFIT index
+    (:func:`maintain.sq_refit_cells` + rewrite): cells in ``overrides``
+    were re-encoded with their own [lo, hi] bounds, every other cell
+    still carries global-bounds codes, and each row is decoded through
+    the bounds that MINTED its codes.  The distance cannot stay
+    symmetric across two bounds versions, so the scan ranks by the
+    ASYMMETRIC reconstruction distance (:class:`_SQAsymCodec`), a CASE
+    over the probed override cells with the global bounds as ELSE.
+    Probe and defaults as :func:`ivfsq_topk`.  Returns (id, sq_adist),
     (sq_adist asc, id asc), top k."""
-    from img2dataset_spark.operators.similarity import (
-        codebook_num_cells,
-        probe_cells,
-        recommended_nprobe,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    if "level" in ivf_codebook.columns:
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    from img2dataset_spark.operators.similarity import (
-        _collect_flat_codebook,
-        static_prune_cells,
-    )
-
-    probed = probe_cells(ivf_codebook, query_df, nprobe, probe_metric)
-    # bounded probe rows (job-free for flat codebooks); the probed
-    # cells prune both the index scan and the override read as STATIC
-    # IN-lists — planning-time partition pruning (r14)
-    _pcell_ids = [int(c) for c, _ in _collect_flat_codebook(probed)]
-    pruned = static_prune_cells(index_df, _pcell_ids)
-    qrow = _collect_query_rows(query_df, ("query_vec",))
-    if len(qrow) != 1:
-        raise ValueError(f"query_df must have exactly 1 row, got {len(qrow)}")
-    qvec = np.asarray(
-        [float(x) for x in qrow[0]["query_vec"]], dtype=np.float64
-    )
-    g_lo, g_hi = _collect_bounds(bounds)
-    d = len(g_lo)
-    # bounded collect: the PROBED cells' override bounds only
-    # (broadcast semi-join — never the whole override relation);
-    # expected_dim rejects a mismatched-dimensionality override fit
-    probed_bounds = _collect_cell_bounds(
-        overrides, expected_dim=d, cells=_pcell_ids
-    )
-    dist = None
-    for cell in sorted(probed_bounds):
-        lo, hi = probed_bounds[cell]
-        cond = F.col("cell") == int(cell)
-        expr = _asym_dist_expr(F.col("codes"), lo, hi, qvec)
-        dist = F.when(cond, expr) if dist is None else dist.when(cond, expr)
-    g_expr = _asym_dist_expr(F.col("codes"), g_lo, g_hi, qvec)
-    dist = g_expr if dist is None else dist.otherwise(g_expr)
-    # sq_topk's width guard: a short/NULL codes array would otherwise
-    # aggregate over missing dims (transform just stops) or null out —
-    # fail loudly with the row's actual width
-    dist = F.when(
-        F.col("codes").isNull() | (F.size(F.col("codes")) != d),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"ivfsq_topk_versioned: codes width != bounds dim {d}"
-                    " — got "
-                ),
-                F.coalesce(
-                    F.size(F.col("codes")).cast("string"), F.lit("NULL")
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(dist)
-    scored = pruned.select(F.col(id_col), dist.alias("sq_adist"))
-    return scored.orderBy(F.asc("sq_adist"), F.asc(id_col)).limit(k)
+    return search(_SQAsymCodec(bounds), "ivfsq_topk_versioned", index_df,
+                  ivf_codebook, query_df, k=k, nprobe=nprobe, id_col=id_col,
+                  probe_metric=probe_metric, overrides=overrides)
 
 
 def ivfsq_multi_topk_versioned(
@@ -698,151 +442,16 @@ def ivfsq_multi_topk_versioned(
     qid_col: str = "qid",
     probe_metric: str | None = None,
 ) -> DataFrame:
-    """Batch search over the SELECTIVELY-REFIT SQ index — the
-    maintained byte-code index served at batch shape (the
-    ivfpq_multi_topk_versioned symmetry for the SQ family): every
-    probe vector answered from ONE pass over the mixed codes, each
-    probed cell CASE-dispatched to the BOUNDS that minted its codes,
-    every row ranked by the asymmetric reconstruction distance against
-    ITS query (:func:`_asym_dist_expr`'s math with the quantized
-    queries riding the plan as ONE 2-level ``lit[qid][dim]`` table —
-    q·d longs — shared by every branch; per-branch literals are just
-    the cell's 2·d bounds).  Bounded collects: the dense qid probe
-    set, the probe pairs, and the PROBED cells' override bounds.
-    Returns (qid, id, sq_adist), per-qid (sq_adist asc, id asc)
-    top-k."""
-    from pyspark.sql import Window
-
-    from img2dataset_spark.operators.similarity import (
-        _QUANT,
-        codebook_num_cells,
-        collect_dense_qids,
-        flat_multi_probe_pairs,
-        multi_probe_cells,
-        recommended_nprobe,
-        static_prune_cells,
-    )
-
-    if probe_metric is None:
-        probe_metric = "l2"
-    if nprobe is None:
-        nprobe = recommended_nprobe(codebook_num_cells(ivf_codebook))
-    if "level" in ivf_codebook.columns:
-        ivf_codebook = ivf_codebook.filter(F.col("level") == "fine")
-    qrows = sorted(
-        collect_dense_qids(queries_df, qid_col),
-        key=lambda r: int(r[qid_col]),
-    )
-    g_lo, g_hi = _collect_bounds(bounds)
-    d = len(g_lo)
-    Q2d = []
-    for r in qrows:
-        q = np.asarray([float(x) for x in r["query_vec"]],
-                       dtype=np.float64)
-        if q.shape[0] != d:
-            raise ValueError(f"query dim {q.shape[0]} != bounds dim {d}")
-        Q2d.append(
-            [int(v) for v in np.floor(q * _QUANT + 0.5).astype(np.int64)]
-        )
-    from img2dataset_spark.operators.similarity import lit_long_array_2d
-
-    q2d = lit_long_array_2d(Q2d)
-    # flat codebooks: driver-ranked probe pairs + STATIC IN-list prune
-    # (planning-time partition pruning); hierarchical: distributed
-    # probe, broadcast join only (r14)
-    pairs = flat_multi_probe_pairs(
-        ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-    )
-    if pairs is not None:
-        probed = ivf_codebook.sparkSession.createDataFrame(
-            pairs, schema=f"{qid_col} bigint, cell bigint"
-        )
-        pre = static_prune_cells(index_df, (c for _, c in pairs))
-        _pcell_ids = sorted({int(c) for _, c in pairs})
-    else:
-        probed = multi_probe_cells(
-            ivf_codebook, queries_df, nprobe, probe_metric, qid_col
-        )
-        pre = index_df
-        _pcell_ids = sorted(
-            int(r["cell"])
-            for r in probed.select("cell").distinct().collect()
-        )
-    pruned = pre.join(F.broadcast(probed), "cell")
-    probed_bounds = _collect_cell_bounds(
-        overrides, expected_dim=d, cells=_pcell_ids
-    )
-    # plan literals: the shared q·d quantized-query table plus 2d
-    # bounds doubles per CASE branch (override cells + the global
-    # otherwise) — a large flagged probe set must fail naming the
-    # chunked route, not opaquely in codegen (r13 advice + verdict 2)
-    from img2dataset_spark.operators.pq import _check_plan_literal_budget
-
-    _check_plan_literal_budget(
-        len(qrows) * d + (len(probed_bounds) + 1) * 2 * d,
-        f"ivfsq_multi_topk_versioned: {len(qrows)} queries x dim {d} "
-        f"+ {len(probed_bounds)} override branches x 2*{d} bounds",
-        "chunk the probe set with ivfsq_multi_topk_chunked("
-        "overrides=...) (each chunk is still answered from one scan)",
-    )
-
-    def branch(lo: np.ndarray, hi: np.ndarray):
-        lo_arr = F.array(*[F.lit(float(v)) for v in lo])
-        span_arr = F.array(*[F.lit(float(h - l)) for h, l in zip(hi, lo)])
-
-        def term(c, i):
-            recon = (
-                F.element_at(lo_arr, i + 1)
-                + c.cast("double") * F.element_at(span_arr, i + 1)
-                / F.lit(255.0)
-            )
-            qr = F.floor(
-                recon * F.lit(float(_QUANT)) + F.lit(0.5)
-            ).cast("long")
-            qv = F.element_at(
-                F.element_at(q2d, F.col(qid_col).cast("int") + F.lit(1)),
-                i + 1,
-            )
-            diff = qv - qr
-            return diff * diff
-
-        return F.aggregate(
-            F.transform(F.col("codes"), term),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    dist = None
-    for cell in sorted(probed_bounds):
-        lo, hi = probed_bounds[cell]
-        cond = F.col("cell") == int(cell)
-        expr = branch(lo, hi)
-        dist = F.when(cond, expr) if dist is None else dist.when(cond, expr)
-    g_expr = branch(g_lo, g_hi)
-    dist = g_expr if dist is None else dist.otherwise(g_expr)
-    dist = F.when(
-        F.col("codes").isNull() | (F.size(F.col("codes")) != d),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "ivfsq_multi_topk_versioned: codes width != bounds "
-                    f"dim {d} — got "
-                ),
-                F.coalesce(
-                    F.size(F.col("codes")).cast("string"), F.lit("NULL")
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(dist)
-    scored = pruned.select(qid_col, F.col(id_col), dist.alias("sq_adist"))
-    wk = Window.partitionBy(qid_col).orderBy(
-        F.asc("sq_adist"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    """Batch search over the SELECTIVELY-REFIT SQ index: one pass over
+    the mixed codes, each probed override cell CASE-dispatched to the
+    bounds that minted its codes, every row ranked by the asymmetric
+    reconstruction distance against ITS query (the quantized queries
+    ride the plan as a 2-level ``lit[qid][dim]`` table).  Returns
+    (qid, id, sq_adist), per-qid (sq_adist asc, id asc) top-k."""
+    return search(_SQAsymCodec(bounds), "ivfsq_multi_topk_versioned",
+                  index_df, ivf_codebook, queries_df, k=k, nprobe=nprobe,
+                  id_col=id_col, qid_col=qid_col, probe_metric=probe_metric,
+                  overrides=overrides)
 
 
 def ivfsq_multi_topk_chunked(
@@ -856,74 +465,19 @@ def ivfsq_multi_topk_chunked(
     overrides: DataFrame | None = None,
     **kw,
 ) -> DataFrame:
-    """The SQ family's sanctioned route past the shared plan-literal
-    budget (``pq._MULTI_TOPK_MAX_LITERALS``) — the exact shape of
-    :func:`operators.pq.ivfpq_multi_topk_chunked` (r13 verdict item 2:
-    only the PQ family had a chunked escape; the SQ batch searchers
-    failed opaquely past the same codegen budget): split the probe set
-    into dense-qid chunks, answer each chunk from ONE scan, and union
-    with the original qids restored.  Each chunk still amortizes its
-    scan; what is NOT amortized across chunks is the scan count itself
-    — the plan-size-vs-scans trade the ceiling prices.
-
-    ``overrides`` (a :func:`maintain.sq_refit_cells` relation) routes
-    every chunk through :func:`ivfsq_multi_topk_versioned` — the
-    maintained-index batch search at any probe-set size; the per-chunk
-    plan then carries chunk·d query literals plus the probed override
-    branches' 2d bounds each.
-
-    ``max_queries_per_scan=None`` sizes chunks from the budget and the
-    bounds dimensionality (plain route only: literals = q·d exactly);
-    the versioned CASE adds probed-override-cell branches whose count
-    depends on the probe, so pass an explicit chunk size there (the
-    sizing refuses to guess, mirroring the PQ wrapper)."""
-    from img2dataset_spark.operators.pq import _MULTI_TOPK_MAX_LITERALS
-    from img2dataset_spark.operators.similarity import collect_dense_qids
-
-    spark = queries_df.sparkSession
-    # collect() returns partition order, NOT qid order (the r12 PQ
-    # chunking lesson): sort, or a multi-partition queries_df hands
-    # each chunk the wrong query under qid lo+i
-    qrows = sorted(
-        collect_dense_qids(queries_df, qid_col),
-        key=lambda r: int(r[qid_col]),
-    )
+    """The SQ route past the shared plan-literal budget: dense-qid
+    chunks, each answered from ONE scan (:func:`ivfsq_multi_topk`, or
+    :func:`ivfsq_multi_topk_versioned` with ``overrides``; ``kw``
+    takes their other arguments: nprobe, id_col, probe_metric).
+    ``max_queries_per_scan=None`` sizes chunks from the budget (plain
+    route only, ivf_search.chunk_size)."""
+    codec, name = _codec(bounds, overrides), "ivfsq_multi_topk_chunked"
+    kw = chunk_kw(name, kw)
     if max_queries_per_scan is None:
-        if overrides is not None:
-            raise ValueError(
-                "ivfsq_multi_topk_chunked: the versioned mode adds "
-                "probed-override-cell branches to every chunk's plan — "
-                "pass an explicit max_queries_per_scan"
-            )
-        d = len(_collect_bounds(bounds)[0])
-        max_queries_per_scan = max(1, _MULTI_TOPK_MAX_LITERALS // d)
-    if overrides is not None and len(qrows) > max_queries_per_scan:
-        # one bounded full collect (memoizing) instead of one
-        # filter+collect job per chunk — the pq chunked wrapper's r15
-        # move; each chunk's probed slice becomes a driver-local filter
-        _collect_cell_bounds(overrides)
-    out = None
-    schema = "qid long, query_vec array<double>"
-    for lo_i in range(0, len(qrows), max_queries_per_scan):
-        chunk = qrows[lo_i : lo_i + max_queries_per_scan]
-        cdf = spark.createDataFrame(
-            [(i, [float(x) for x in r["query_vec"]])
-             for i, r in enumerate(chunk)],
-            schema,
-        ).withColumnRenamed("qid", qid_col)
-        if overrides is not None:
-            res = ivfsq_multi_topk_versioned(
-                index_df, ivf_codebook, bounds, overrides, cdf,
-                k=k, qid_col=qid_col, **kw,
-            )
-        else:
-            res = ivfsq_multi_topk(
-                index_df, ivf_codebook, bounds, cdf, k=k,
-                qid_col=qid_col, **kw,
-            )
-        res = res.withColumn(qid_col, F.col(qid_col) + F.lit(lo_i))
-        out = res if out is None else out.unionByName(res)
-    return out
+        max_queries_per_scan = chunk_size(codec, name, overrides)
+    return search(codec, name, index_df, ivf_codebook, queries_df, k=k,
+                  qid_col=qid_col, overrides=overrides,
+                  max_queries_per_scan=max_queries_per_scan, **kw)
 
 
 def ivfsq_refine_topk(
@@ -940,48 +494,15 @@ def ivfsq_refine_topk(
     probe_metric: str | None = None,
     refine_target_occupancy: int = 1024,
 ) -> DataFrame:
-    """Two-stage refine for the SQ family (r14 — the composition PQ
-    and BQ already had: pq.ivfpq_refine_topk / bq.bq_refine_topk; SQ8
-    loses less per code than either, but at high occupancy its byte
-    resolution still ties more rows than k separates and the exact
-    re-rank is the same measured remedy): stage 1 takes the top
-    ``k·refine_factor`` candidates by the probe-pruned symmetric byte
-    scan (:func:`ivfsq_topk`), stage 2 re-ranks ONLY those candidates
-    by exact cosine via a BROADCAST semi-join into the vector table.
-    ``refine_factor=None`` sizes the pool from cell occupancy
-    (similarity.recommended_refine_factor).  Output (id, cos_sim),
-    round6 quantized cosine, (desc, id asc) top-k — directly
-    comparable to cosine_topk and the other families' refines."""
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    cand = ivfsq_topk(
-        index_df, ivf_codebook, bounds, query_df,
-        k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-        probe_metric=probe_metric,
-    )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    pruned = e.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    q = F.broadcast(query_df.select("query_vec"))
-    scored = pruned.crossJoin(q).select(
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    """Two-stage refine for the SQ family: the top ``k·refine_factor``
+    candidates of :func:`ivfsq_topk` (at high occupancy the byte
+    resolution ties more rows than k separates), re-ranked by exact
+    cosine.  Output (id, cos_sim)."""
+    return search(_SQCodec(bounds), "ivfsq_refine_topk", index_df,
+                  ivf_codebook, query_df, k=k, nprobe=nprobe, id_col=id_col,
+                  probe_metric=probe_metric, vectors_df=vectors_df,
+                  vec_col=vec_col, refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
 
 
 def ivfsq_refine_topk_versioned(
@@ -999,46 +520,15 @@ def ivfsq_refine_topk_versioned(
     probe_metric: str | None = None,
     refine_target_occupancy: int = 1024,
 ) -> DataFrame:
-    """Refine over the MAINTAINED SQ index (r14 — the SQ sibling of
-    pq.ivfpq_refine_topk_versioned, completing the remedy across both
-    maintained codebook families): stage 1 screens ``k·refine_factor``
-    candidates through :func:`ivfsq_topk_versioned`'s mixed-bounds
-    asymmetric CASE (each probed cell decoded through the bounds that
-    MINTED its codes), stage 2 exact-cosine re-ranks only those rows
-    via a broadcast semi-join.  ``refine_factor=None`` auto-sizes from
-    occupancy — the maintained index is exactly the corpus where
-    occupancy has drifted.  Output (id, cos_sim), round6, (desc,
-    id asc) top-k."""
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    cand = ivfsq_topk_versioned(
-        index_df, ivf_codebook, bounds, overrides, query_df,
-        k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-        probe_metric=probe_metric,
-    )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    pruned = e.join(F.broadcast(cand.select(id_col)), id_col, "left_semi")
-    q = F.broadcast(query_df.select("query_vec"))
-    scored = pruned.crossJoin(q).select(
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    """Refine over the MAINTAINED SQ index: the top ``k·refine_factor``
+    candidates of :func:`ivfsq_topk_versioned`'s mixed-bounds scan,
+    re-ranked by exact cosine.  Output (id, cos_sim)."""
+    return search(_SQAsymCodec(bounds), "ivfsq_refine_topk_versioned",
+                  index_df, ivf_codebook, query_df, k=k, nprobe=nprobe,
+                  id_col=id_col, probe_metric=probe_metric,
+                  overrides=overrides, vectors_df=vectors_df,
+                  vec_col=vec_col, refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)
 
 
 def ivfsq_multi_refine_topk(
@@ -1058,69 +548,16 @@ def ivfsq_multi_refine_topk(
     overrides: DataFrame | None = None,
     max_queries_per_scan: int | None = None,
 ) -> DataFrame:
-    """Batch two-stage refine for the SQ family (r14 — completing the
-    batch menu's symmetry: PQ has ivfpq_multi_refine_topk, BQ's flat
-    screen composes via bq_refine_topk): stage 1 answers EVERY query's
-    top ``k·refine_factor`` candidates from ONE pass over the byte
-    codes (:func:`ivfsq_multi_topk`; ``overrides`` routes through
-    :func:`ivfsq_multi_topk_versioned` — the maintained index;
-    ``max_queries_per_scan`` through :func:`ivfsq_multi_topk_chunked`),
-    stage 2 re-ranks all queries' candidates in ONE pass over the
-    vector table — (qid, id) pairs broadcast into an id-join, exact
-    round6 cosine per pair, one window top-k per qid.
-    ``refine_factor=None`` sizes the pool from cell occupancy.
-    Returns (qid, id, cos_sim), per-qid (cos_sim desc, id asc) top-k —
-    directly comparable to cosine_topk / the PQ batch refine."""
-    from pyspark.sql import Window
-
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        codebook_num_cells,
-        cosine,
-        memoized_count,
-        recommended_refine_factor,
-        round6,
-    )
-
-    if refine_factor is None:
-        refine_factor = recommended_refine_factor(
-            memoized_count(index_df),
-            codebook_num_cells(ivf_codebook),
-            target_occupancy=refine_target_occupancy,
-        )
-    if max_queries_per_scan is not None:
-        cand = ivfsq_multi_topk_chunked(
-            index_df, ivf_codebook, bounds, queries_df,
-            k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-            qid_col=qid_col, probe_metric=probe_metric,
-            overrides=overrides,
-            max_queries_per_scan=max_queries_per_scan,
-        )
-    elif overrides is not None:
-        cand = ivfsq_multi_topk_versioned(
-            index_df, ivf_codebook, bounds, overrides, queries_df,
-            k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-            qid_col=qid_col, probe_metric=probe_metric,
-        )
-    else:
-        cand = ivfsq_multi_topk(
-            index_df, ivf_codebook, bounds, queries_df,
-            k=k * refine_factor, nprobe=nprobe, id_col=id_col,
-            qid_col=qid_col, probe_metric=probe_metric,
-        )
-    e = vectors_df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
-    paired = e.join(F.broadcast(cand.select(qid_col, id_col)), id_col)
-    q = F.broadcast(queries_df.select(qid_col, "query_vec"))
-    scored = paired.join(q, qid_col).select(
-        qid_col,
-        F.col(id_col),
-        round6(cosine(F.col("_v"), F.col("query_vec"))).alias("cos_sim"),
-    )
-    wk = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    """Batch two-stage refine for the SQ family: every query's top
+    ``k·refine_factor`` candidates from ONE pass over the byte codes
+    (:func:`ivfsq_multi_topk`; ``overrides`` → the versioned scan,
+    ``max_queries_per_scan`` → chunked), re-ranked in ONE pass over the
+    vector table.  Returns (qid, id, cos_sim)."""
+    return search(_codec(bounds, overrides), "ivfsq_multi_refine_topk",
+                  index_df, ivf_codebook, queries_df, k=k, nprobe=nprobe,
+                  id_col=id_col, qid_col=qid_col, probe_metric=probe_metric,
+                  overrides=overrides,
+                  max_queries_per_scan=max_queries_per_scan,
+                  vectors_df=vectors_df, vec_col=vec_col,
+                  refine_factor=refine_factor,
+                  refine_target_occupancy=refine_target_occupancy)

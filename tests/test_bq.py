@@ -302,7 +302,7 @@ def test_bq_multi_literal_ceiling(spark, monkeypatch):
     """The shared plan-literal budget prices the BQ batch scan too
     (r13 verdict item 2): past the ceiling, a named error instead of
     an opaque plan failure."""
-    from img2dataset_spark.operators import pq as pq_mod
+    from img2dataset_spark.operators import ivf_search
     from img2dataset_spark.operators.bq import ivfbq_index, ivfbq_multi_topk
     from img2dataset_spark.operators.similarity import _as_double, ivf_fit
 
@@ -314,7 +314,7 @@ def test_bq_multi_literal_ceiling(spark, monkeypatch):
         _as_double(F.col("embedding")).alias("query_vec"),
     )
     # 3 queries x 2 packed words = 6 literals > 5
-    monkeypatch.setattr(pq_mod, "_MULTI_TOPK_MAX_LITERALS", 5)
+    monkeypatch.setattr(ivf_search, "_MULTI_TOPK_MAX_LITERALS", 5)
     with pytest.raises(ValueError, match="packed words"):
         ivfbq_multi_topk(idx, ivf_cb, qs, k=5, nprobe=2,
                          num_planes=64, dim=64)

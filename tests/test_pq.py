@@ -303,7 +303,7 @@ def test_pq_packed_byte7_sign_safe(spark):
     arithmetic shiftright sign-extends, and the & 255 mask must drop
     exactly those bits — pinned with a code >= 128 in slot 7 (negative
     word) against a local recompute."""
-    from img2dataset_spark.operators.pq import _adc_expr
+    from img2dataset_spark.operators.pq import _adc_sql
 
     m = 8
     codes = [7, 1, 2, 3, 4, 5, 6, 200]
@@ -316,7 +316,9 @@ def test_pq_packed_byte7_sign_safe(spark):
     df = spark.createDataFrame([(1, [word])], "vec_id long, codes array<long>")
     cells = [np.arange(256, dtype=np.int64) for _ in range(m)]
     dt = [np.arange(256, dtype=np.int64) * (j + 1) for j in range(m)]
-    got = df.select(_adc_expr(cells, dt, packed=True).alias("d")).collect()[0]["d"]
+    got = df.select(
+        F.expr(_adc_sql(cells, [dt], None, packed=True)).alias("d")
+    ).collect()[0]["d"]
     assert got == sum(codes[j] * (j + 1) for j in range(m))
 
 
@@ -548,6 +550,7 @@ def test_multi_topk_literal_ceiling(spark, emb, fitted, monkeypatch):
     """The plan-literal q ceiling is ENFORCED, not just documented
     (r11 verdict nit): past _MULTI_TOPK_MAX_LITERALS the searcher
     names the problem and tells the caller to chunk."""
+    from img2dataset_spark.operators import ivf_search
     from img2dataset_spark.operators import pq as pqmod
     from img2dataset_spark.operators.similarity import _as_double, ivf_fit
 
@@ -558,7 +561,7 @@ def test_multi_topk_literal_ceiling(spark, emb, fitted, monkeypatch):
         F.col("vec_id").alias("qid"),
         _as_double(F.col("embedding")).alias("query_vec"),
     )
-    monkeypatch.setattr(pqmod, "_MULTI_TOPK_MAX_LITERALS", 10)
+    monkeypatch.setattr(ivf_search, "_MULTI_TOPK_MAX_LITERALS", 10)
     with pytest.raises(ValueError, match="chunk"):
         pqmod.ivfpq_multi_topk(idx, ivf_cb, cb, qs, k=5, nprobe=2)
 

@@ -275,15 +275,10 @@ def test_override_collect_memo_slice_matches_fresh_collect(spark, emb):
         pq_refit_cells,
         sq_refit_cells,
     )
-    from img2dataset_spark.operators.pq import (
-        _OVERRIDES_MEMO,
-        _collect_overrides,
-    )
+    from img2dataset_spark.operators.ivf_search import _OVERRIDES_MEMO
+    from img2dataset_spark.operators.pq import _collect_overrides
     from img2dataset_spark.operators.similarity import ivf_fit
-    from img2dataset_spark.operators.sq import (
-        _CELL_BOUNDS_MEMO,
-        _collect_cell_bounds,
-    )
+    from img2dataset_spark.operators.sq import _collect_cell_bounds
 
     ivf_cb = ivf_fit(emb, num_cells=4, iters=1)
     flagged = spark.createDataFrame([(0,), (2,), (3,)], "cell long")
@@ -313,7 +308,7 @@ def test_override_collect_memo_slice_matches_fresh_collect(spark, emb):
 
     sovr = sq_refit_cells(emb, ivf_cb, flagged)
     sfull = _collect_cell_bounds(sovr)  # seeds the memo
-    assert id(sovr) in _CELL_BOUNDS_MEMO
+    assert id(sovr) in _OVERRIDES_MEMO
     ssliced = _collect_cell_bounds(sovr, expected_dim=64, cells=[0, 3])
     sfresh = _collect_cell_bounds(
         sovr.filter(F.col("cell").isin([0, 3])), expected_dim=64

@@ -234,10 +234,8 @@ class TestEmptyOverridesFastPath:
         """r14 advice: a memo full-hit must not alias the cached dict —
         caller-side mutation of the returned mapping cannot corrupt
         later searches."""
-        from img2dataset_spark.operators.pq import (
-            _OVERRIDES_MEMO,
-            _collect_overrides,
-        )
+        from img2dataset_spark.operators.ivf_search import _OVERRIDES_MEMO
+        from img2dataset_spark.operators.pq import _collect_overrides
 
         ovr = spark.createDataFrame(
             [(0, 0, 0, [0.5, 0.5])],
@@ -260,15 +258,15 @@ class TestLitArrayHelpers:
 
     def test_long_arrays_value_identical(self, spark):
         from img2dataset_spark.operators.similarity import (
-            lit_long_array,
-            lit_long_array_2d,
+            long_array_2d_sql,
+            long_array_sql,
         )
 
         vals = [0, 1, -7, 2**62, -(2**62), 255, 9007199254740993]
         row = spark.range(1).select(
-            lit_long_array(vals).alias("a"),
+            F.expr(long_array_sql(vals)).alias("a"),
             F.array(*[F.lit(int(v)).cast("long") for v in vals]).alias("b"),
-            lit_long_array_2d([vals, [5, 6]]).alias("a2"),
+            F.expr(long_array_2d_sql([vals, [5, 6]])).alias("a2"),
         ).first()
         assert row["a"] == row["b"] == vals
         assert row["a2"] == [vals, [5, 6]]

@@ -307,7 +307,7 @@ def test_sq_multi_literal_ceiling(spark, emb, fitted, monkeypatch):
     with a NAMED error pointing at ivfsq_multi_topk_chunked instead of
     an opaque codegen/plan failure — and the chunked route itself
     stays under budget per chunk."""
-    from img2dataset_spark.operators import pq as pq_mod
+    from img2dataset_spark.operators import ivf_search
     from img2dataset_spark.operators.similarity import _as_double, ivf_fit
     from img2dataset_spark.operators.sq import (
         ivfsq_index,
@@ -323,7 +323,7 @@ def test_sq_multi_literal_ceiling(spark, emb, fitted, monkeypatch):
         _as_double(F.col("embedding")).alias("query_vec"),
     )
     # 3 queries x 64 dims = 192 literals > 100
-    monkeypatch.setattr(pq_mod, "_MULTI_TOPK_MAX_LITERALS", 100)
+    monkeypatch.setattr(ivf_search, "_MULTI_TOPK_MAX_LITERALS", 100)
     with pytest.raises(ValueError, match="ivfsq_multi_topk_chunked"):
         ivfsq_multi_topk(idx, ivf_cb, bounds, qs, k=5, nprobe=2)
     # one query per scan = 64 literals <= 100: the named remedy works
