@@ -10,6 +10,21 @@ Supported: bit depth 8; color types 0 (gray), 2 (RGB), 3 (palette),
 Interlaced (Adam7) and 16-bit images raise ValueError — detected, not
 silently mis-decoded.
 
+Unfiltering, row by row (each row may use its own filter):
+  - None rows are the filtered bytes themselves: the whole image starts
+    as one copy of the scanlines, and None rows are never visited again.
+  - Up rows are one uint8 add of the row above, Sub rows one uint8
+    cumsum along each channel; uint8 arithmetic wraps mod 256 exactly
+    as the spec's byte arithmetic does.
+  - Average and Paeth rows stay a scalar loop: each byte's predictor
+    reads the DECODED byte to its left through a floor or a three-way
+    choice, so the row is a non-linear recurrence with no numpy scan.
+    The loop runs per channel over `bytes` with Python ints, not over
+    numpy scalars (5-6x faster on the Average rows libpng writes).  A
+    wavefront over anti-diagonals would vectorize them, but needs
+    image-sized skewed buffers and makes the all-None output of
+    `encode_png` tens of times slower to decode.
+
 Encoding writes filter-type-0 rows with one zlib stream — bytes are
 deterministic for a given array (fixed zlib level), which the sink tests
 rely on.
@@ -67,61 +82,82 @@ def decode_png(data: bytes) -> np.ndarray:
     if len(raw) != height * (stride + 1):
         raise ValueError("truncated PNG pixel data")
 
-    out = np.empty((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    bpp = nch  # bytes per pixel at bit depth 8
-    for y in range(height):
-        off = y * (stride + 1)
-        ftype = raw[off]
-        row = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=off + 1).copy()
-        if ftype == 0:  # None
-            pass
-        elif ftype == 2:  # Up
-            row += prev
-        elif ftype == 1:  # Sub — sequential in x
-            _unfilter_sub(row, bpp)
-        elif ftype == 3:  # Average
-            _unfilter_avg(row, prev, bpp)
-        elif ftype == 4:  # Paeth
-            _unfilter_paeth(row, prev, bpp)
-        else:
-            raise ValueError(f"bad filter type {ftype}")
-        out[y] = row
-        prev = row
-
-    img = out.reshape(height, width, nch) if nch > 1 else out.reshape(height, width)
+    out = _unfilter(raw, height, stride, nch)  # bytes per pixel = nch at depth 8
+    img = out.reshape(height, width, nch) if nch > 1 else out
     if color_type == 3:
         if palette is None:
             raise ValueError("palette image without PLTE")
-        img = palette[img.reshape(height, width)]
+        img = palette[img]
     return img
 
 
-def _unfilter_sub(row: np.ndarray, bpp: int) -> None:
-    for i in range(bpp, len(row)):
-        row[i] = (int(row[i]) + int(row[i - bpp])) & 0xFF
-
-
-def _unfilter_avg(row: np.ndarray, prev: np.ndarray, bpp: int) -> None:
-    for i in range(len(row)):
-        a = int(row[i - bpp]) if i >= bpp else 0
-        row[i] = (int(row[i]) + ((a + int(prev[i])) >> 1)) & 0xFF
-
-
-def _unfilter_paeth(row: np.ndarray, prev: np.ndarray, bpp: int) -> None:
-    for i in range(len(row)):
-        a = int(row[i - bpp]) if i >= bpp else 0
-        b = int(prev[i])
-        c = int(prev[i - bpp]) if i >= bpp else 0
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            pred = a
-        elif pb <= pc:
-            pred = b
+def _unfilter(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
+    """Filtered scanlines (one filter-type byte + ``stride`` bytes each)
+    -> (height, stride) uint8 rows.  Every row starts as its filtered
+    bytes, which is already the answer for None rows; only the others
+    are visited, in order, since each reads the decoded row above."""
+    lines = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
+    out = lines[:, 1:].copy()
+    for y in np.flatnonzero(lines[:, 0]).tolist():
+        ftype = raw[y * (stride + 1)]
+        row = out[y]
+        if ftype == 1:  # Sub: a running sum along each channel, mod 256
+            row[:] = np.cumsum(row.reshape(-1, bpp), axis=0, dtype=np.uint8).reshape(-1)
+        elif ftype == 2:  # Up
+            if y:
+                row += out[y - 1]
+        elif ftype in (3, 4):  # Average, Paeth
+            prior = out[y - 1].tobytes() if y else bytes(stride)
+            undo = _average_row if ftype == 3 else _paeth_row
+            row[:] = np.frombuffer(undo(row.tobytes(), prior, bpp), dtype=np.uint8)
         else:
-            pred = c
-        row[i] = (int(row[i]) + pred) & 0xFF
+            raise ValueError(f"bad filter type {ftype}")
+    return out
+
+
+def _average_row(line: bytes, prior: bytes, bpp: int) -> bytearray:
+    """Undo the Average filter of one row: x + floor((left + up) / 2),
+    walked per channel so the left neighbour `a` stays a local int."""
+    out = bytearray(len(line))
+    for ch in range(bpp):
+        a = 0
+        res = bytearray()
+        put = res.append
+        for x, b in zip(line[ch::bpp], prior[ch::bpp]):
+            a = (x + ((a + b) >> 1)) & 0xFF
+            put(a)
+        out[ch::bpp] = res
+    return out
+
+
+def _paeth_row(line: bytes, prior: bytes, bpp: int) -> bytearray:
+    """Undo the Paeth filter: x + whichever of left (a), up (b) and
+    upper-left (c) is nearest p = a + b - c, ties to a then b.  With
+    d = a - c: |p - a| = |b - c|, |p - b| = |d|, |p - c| = |b - c + d|."""
+    out = bytearray(len(line))
+    for ch in range(bpp):
+        a = c = 0
+        res = bytearray()
+        put = res.append
+        for x, b in zip(line[ch::bpp], prior[ch::bpp]):
+            bc = b - c
+            d = a - c
+            pa = bc if bc >= 0 else -bc
+            pb = d if d >= 0 else -d
+            pc = bc + d
+            if pc < 0:
+                pc = -pc
+            if pa <= pb and pa <= pc:
+                pred = a
+            elif pb <= pc:
+                pred = b
+            else:
+                pred = c
+            a = (x + pred) & 0xFF
+            put(a)
+            c = b
+        out[ch::bpp] = res
+    return out
 
 
 def encode_png(img: np.ndarray, compress_level: int = 6) -> bytes:

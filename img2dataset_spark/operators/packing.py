@@ -14,7 +14,11 @@ problem — fully declarative, no UDF:
      tree bucket assignment, per-bucket totals inlined as literal
      offsets, then a per-bucket window cumsum.  No single-partition
      window anywhere — the one full-data shuffle is the per-bucket
-     repartition, same as the sharding plan.
+     range exchange of the sharding plan (`sharding.place_buckets`):
+     keyed on the bucket id, so its sampled bounds only pick the
+     partition that holds each bucket, one bucket per task, and the
+     offsets stay plan literals; it costs one sampling job per
+     execution over the bucketed input.
   2. a doc covering token interval [start, end) touches blocks
      floor(start/B) .. floor((end-1)/B): an explode of F.sequence()
      adds at most ceil(tok/B)+1 rows per doc.
@@ -33,7 +37,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
-from img2dataset_spark.operators.sharding import _bucket_expr, _range_boundaries
+from img2dataset_spark.operators.sharding import (
+    _bucket_expr,
+    _range_boundaries,
+    place_buckets,
+)
 
 _BUCKET_COL = "__pack_bucket"
 
@@ -52,8 +60,9 @@ def with_global_cumsum(
 
     Plan shape: literal range boundaries (fixed-seed driver sample) ->
     codegen'd bucket decision tree -> tiny per-bucket SUM agg collected
-    to the driver and inlined as a literal offset map -> repartition by
-    bucket (the one full-data shuffle) -> per-bucket window cumsum.
+    to the driver and inlined as a literal offset map -> range exchange
+    on the bucket id (the one full-data shuffle) -> per-bucket window
+    cumsum.
     Deterministic under partition recomputation: every input to the
     formula is a plan literal or a deterministic window over a total
     order."""
@@ -79,7 +88,7 @@ def with_global_cumsum(
     offset_of_bucket = F.element_at(
         F.lit(offsets), F.col(_BUCKET_COL).cast("int") + F.lit(1)
     )
-    part = bucketed.repartition(nbuckets, F.col(_BUCKET_COL))
+    part = place_buckets(bucketed, _BUCKET_COL, nbuckets)
     w = (
         Window.partitionBy(_BUCKET_COL)
         .orderBy(F.col(order_col))

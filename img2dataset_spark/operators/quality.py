@@ -145,6 +145,9 @@ def _adjacent_bigrams(toks):
     ).otherwise(F.array().cast("array<string>"))
 
 
+_REPETITION_COLS = ("ttf", "tbf", "__qf_tk", "__qf_bg")
+
+
 def with_repetition_fractions(df: DataFrame, text_col: str = "text") -> DataFrame:
     """``df`` plus (ttf, tbf) — the JVM twin of make_repetition_udf:
     tokens are the non-empty pieces of a whitespace split of the
@@ -158,7 +161,19 @@ def with_repetition_fractions(df: DataFrame, text_col: str = "text") -> DataFram
     Staged projections so the arrays are named columns when the plan
     keeps them; every subtree is also safe to INLINE (single-reference
     fold, zip_with bigrams — see the helpers), because a pushed-down
-    filter legitimately collapses these projections."""
+    filter legitimately collapses these projections.
+
+    An input column named like one the function adds (``ttf``, ``tbf``
+    or the staging ``__qf_tk``/``__qf_bg``) would be overwritten or
+    duplicated, so it raises ValueError instead (a schema check, no
+    job); names compare case-insensitively, as Spark resolves them by
+    default."""
+    for name in df.columns:
+        if name.lower() in _REPETITION_COLS:
+            raise ValueError(
+                f"with_repetition_fractions: input column {name!r} collides with "
+                f"a column it adds ({', '.join(_REPETITION_COLS)}); rename it first"
+            )
     toks = F.filter(X.tokens(F.col(text_col)), lambda x: x != F.lit(""))
     return (
         df.withColumn("__qf_tk", toks)

@@ -25,11 +25,23 @@ silently invalidate):
      at thousands of buckets).
   3. Count rows per bucket (column-pruned scan + map-side-combinable
      tiny agg) and inline the prefix-sum offsets as a literal map.
-  4. `repartition(B, _bucket)` — the ONE full-data shuffle — then
+  4. `repartitionByRange(B, _bucket)` (`place_buckets`) — the ONE
+     full-data shuffle — then
      `row_number() OVER (PARTITION BY _bucket ORDER BY order_col)`.
-     HashPartitioning(_bucket) already satisfies the window's required
+     RangePartitioning(_bucket) already satisfies the window's required
      distribution, so Catalyst inserts no second exchange (verified in
      PLANS.md), only the in-partition sort the semantics need anyway.
+     The exchange is keyed on the bucket id, not on `order_col`: its
+     sampled bounds are bucket ids, and a key is never split across
+     partitions, so they decide only WHICH partition holds a bucket,
+     never which rows share one — the indexes stay a function of the
+     plan literals above, however the sample falls.  Buckets are of
+     similar size by construction, so each lands alone in its own
+     partition (one task each); a hash exchange on the ids would not
+     (Murmur3 puts three of the ids 0-3 in one of 4 partitions).  The
+     price is one sampling job per execution, which evaluates the
+     exchange's input (the bucketed source rows, before any per-row
+     work such as fetching) once more.
 
 Index = offset[_bucket] + row_number - 1.  Every input to that formula
 (boundaries, offsets) is a plan literal and every operator is
@@ -140,6 +152,14 @@ def _bucket_expr(order_col: str, boundaries: list[Any]) -> F.Column:
     return build(0, len(boundaries))
 
 
+def place_buckets(bucketed: DataFrame, bucket_col: str, nbuckets: int) -> DataFrame:
+    """The one full-data shuffle of the bucketed index plans: a range
+    exchange on the bucket id into ``nbuckets`` partitions, one bucket
+    per partition (why this is deterministic and what its sampling job
+    costs: step 4 of the module docstring)."""
+    return bucketed.repartitionByRange(nbuckets, F.col(bucket_col))
+
+
 def with_global_index(
     df: DataFrame,
     order_col: str,
@@ -176,7 +196,7 @@ def with_global_index(
     offset_of_bucket = F.element_at(
         F.lit(offsets), F.col(_BUCKET_COL).cast("int") + F.lit(1)
     )
-    part = bucketed.repartition(nbuckets, F.col(_BUCKET_COL))
+    part = place_buckets(bucketed, _BUCKET_COL, nbuckets)
     w = Window.partitionBy(_BUCKET_COL).orderBy(F.col(order_col))
     indexed = part.withColumn(
         index_col,

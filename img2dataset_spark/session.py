@@ -12,6 +12,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+_MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half of this machine's physical memory, at most 48g, as a Spark
+    size string.  In local mode the driver JVM also runs the executors;
+    the other half is left to the Python workers (pandas UDFs, codecs)
+    and the OS, so the heap never outgrows the machine.
+    ``SPARK_DRIVER_MEMORY`` overrides it in :func:`get_spark`."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 // 2**20, _MAX_DRIVER_MEMORY_MB)}m"
+
+
 def get_spark(
     app_name: str = "img2dataset_spark",
     shuffle_partitions: int | None = None,
@@ -36,7 +49,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

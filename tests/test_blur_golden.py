@@ -39,86 +39,6 @@ def test_png_roundtrip_exact():
     assert np.array_equal(orig, again)
 
 
-def test_png_decoder_all_filters():
-    """Exercise Sub/Up/Average/Paeth decode paths: encode a gradient with
-    each filter type by hand and check the decode."""
-    import struct
-    import zlib
-
-    h, w = 5, 7
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-
-    # build raw scanlines with per-row filter types 0..4
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        if pb <= pc:
-            return b
-        return c
-
-    stride = w * 3
-    flat = img.reshape(h, stride).astype(int)
-    raw = bytearray()
-    for y in range(h):
-        ftype = y % 5
-        raw.append(ftype)
-        for i in range(stride):
-            x = flat[y][i]
-            a = flat[y][i - 3] if i >= 3 else 0
-            b = flat[y - 1][i] if y > 0 else 0
-            c = flat[y - 1][i - 3] if (y > 0 and i >= 3) else 0
-            if ftype == 0:
-                v = x
-            elif ftype == 1:
-                v = x - a
-            elif ftype == 2:
-                v = x - b
-            elif ftype == 3:
-                v = x - ((a + b) >> 1)
-            else:
-                v = x - paeth(a, b, c)
-            raw.append(v & 0xFF)
-
-    def chunk(typ, body):
-        r = typ + body
-        return struct.pack(">I", len(body)) + r + struct.pack(
-            ">I", zlib.crc32(r) & 0xFFFFFFFF
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(decode_png(png), img)
-
-
-def test_png_decoder_rejects_unsupported():
-    import struct
-    import zlib
-
-    def chunk(typ, body):
-        r = typ + body
-        return struct.pack(">I", len(body)) + r + struct.pack(
-            ">I", zlib.crc32(r) & 0xFFFFFFFF
-        )
-
-    interlaced = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 1))
-        + chunk(b"IDAT", zlib.compress(b"\x00" * 20))
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="interlaced"):
-        decode_png(interlaced)
-    with pytest.raises(ValueError, match="not a PNG"):
-        decode_png(b"garbage")
-
-
 def test_transform_fn_blurs_png_end_to_end():
     """The fused transform closure runs real pixels for png->png blur."""
     from img2dataset_spark.functions.image import make_transform_fn

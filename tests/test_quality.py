@@ -55,3 +55,15 @@ def test_rules_override(spark, corpus):
                  min_mean_tok_len=0.0, max_mean_tok_len=100.0)
     kept = sorted(r["doc_id"] for r in gopher_filter(corpus, loose).collect())
     assert kept == [1, 2, 3]
+
+
+@pytest.mark.parametrize("name", ["ttf", "tbf", "__qf_tk", "__qf_bg", "TTF"])
+def test_repetition_fractions_refuse_colliding_input_column(spark, name):
+    """An input column named like an added one would be silently
+    overwritten or duplicated; it must be refused when the frame is
+    built, naming the column."""
+    from img2dataset_spark.operators.quality import with_repetition_fractions
+
+    df = spark.createDataFrame([("a b a", 0.5)], f"text string, `{name}` double")
+    with pytest.raises(ValueError, match=f"input column '{name}' collides"):
+        with_repetition_fractions(df)

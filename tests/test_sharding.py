@@ -221,3 +221,41 @@ def test_global_index_many_buckets_plans_linearly(spark):
         "sum(case when _row_idx != k then 1 else 0 end) as bad"
     ).first()["bad"]
     assert mism == 0
+
+
+def _rows_by_partition(rows):
+    parts: dict[int, list[int]] = {}
+    for r in rows:
+        parts.setdefault(r["p"], []).append(r["k"])
+    return sorted(sorted(ks) for ks in parts.values())
+
+
+def test_global_index_places_each_bucket_in_its_own_partition(spark):
+    """Four range buckets of 3 rows must run as four tasks: a hash
+    exchange on the bucket id put 9 of the 12 rows in one partition
+    (largest share 0.75).  The indexes stay the exact rank."""
+    df = spark.range(0, 12).select((F.col("id") * 7 % 12).alias("k"))
+    out = with_global_index(df, "k", num_partitions=4)
+    rows = out.select("k", "_row_idx", F.spark_partition_id().alias("p")).collect()
+    assert {r["k"]: r["_row_idx"] for r in rows} == {k: k for k in range(12)}
+    parts = _rows_by_partition(rows)
+    assert parts == [[0, 1, 2], [3, 4, 5], [6, 7, 8], [9, 10, 11]]
+    assert max(len(ks) for ks in parts) / len(rows) == 0.25
+
+
+def test_global_cumsum_places_each_bucket_in_its_own_partition(spark):
+    from img2dataset_spark.operators.packing import with_global_cumsum
+
+    df = spark.range(0, 12).select(
+        (F.col("id") * 7 % 12).alias("k"), (F.col("id") + 1).alias("v")
+    )
+    out = with_global_cumsum(df, "k", "v", num_partitions=4)
+    rows = out.select("k", "v", "_cumsum", F.spark_partition_id().alias("p")).collect()
+    by_k = sorted(rows, key=lambda r: r["k"])
+    running = 0
+    for r in by_k:
+        running += r["v"]
+        assert r["_cumsum"] == running
+    parts = _rows_by_partition(rows)
+    assert parts == [[0, 1, 2], [3, 4, 5], [6, 7, 8], [9, 10, 11]]
+    assert max(len(ks) for ks in parts) / len(rows) == 0.25
