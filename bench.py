@@ -1,7 +1,8 @@
 """Benchmark driver: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": secs, "unit": "sec",
-"queries": {name: secs}, "sf": ...}.
+"queries": {name: secs}, "sf": ..., "loadavg_start": [1, 5, 15 min],
+"loadavg_end": [...]}.
 
 Each query is materialized with a noop sink (no driver collect, no
 result serialization) so the number measures engine execution.
@@ -9,13 +10,14 @@ result serialization) so the number measures engine execution.
 QUIET-BOX RULE (standing since r14; the r13 local sweep started at
 loadavg 13 and ~12 untouched-operator rows drifted 10-20%): the
 round-close BENCH_r{N}_local.json must be recorded with
-loadavg_start[0] below ~2 and max spread <= ~1.3 — the
-loadavg_start/loadavg_end/spread diagnostics (on STDERR as their own
-JSON line since r15; the stdout contract line stays lean so the
-driver's output-tail capture can never front-truncate it, which is how
-the r13 round-over-round comparison died) exist so a reader can audit
-that, but the RULE is to not record the artifact on a contended box in
-the first place.  Mid-round iteration runs are exempt; the committed
+loadavg_start[0] below ~2 and max spread <= ~1.3.  The load averages
+ride on the stdout contract line, so the committed artifact carries its
+own contention evidence; the per-query spread map goes to STDERR as its
+own JSON line (the stdout line stays short, so the driver's output-tail
+capture can never front-truncate it, which is how the r13
+round-over-round comparison died).  They exist so a reader can audit
+the rule, but the RULE is to not record the artifact on a contended box
+in the first place.  Mid-round iteration runs are exempt; the committed
 round-close artifact is not.
 """
 
@@ -719,21 +721,16 @@ def main() -> None:
 
     total = round(sum(times.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Diagnostics move to STDERR (r15, verdict item 3): the r13
+    # The spread map goes to STDERR (r15, verdict item 3): the r13
     # round-over-round comparison died because the one stdout JSON
     # line, grown to several KB by the 102-entry spread map, was
     # front-truncated by the driver's output-tail capture.  The stdout
-    # contract line is now LEAN (metric/value/unit/queries/sf only) and
-    # printed LAST, so a tail capture always contains it whole.
+    # contract line stays short and is printed LAST, so a tail capture
+    # always contains it whole.
     print(
         json.dumps(
             {
                 "diagnostics": "bench",
-                # contention self-identification: 1/5/15-min load averages
-                # at start and end of the run (32-core box; load >> 32
-                # means the numbers above include neighbor noise)
-                "loadavg_start": [round(x, 2) for x in load_start],
-                "loadavg_end": [round(x, 2) for x in os.getloadavg()],
                 "timing": "adaptive_min_of_2_to_4_runs",
                 # per-query second_fastest/fastest ratio: ~1.0 = stable
                 # samples, >1.3 = still contended after 4 runs
@@ -751,6 +748,11 @@ def main() -> None:
                 "unit": "sec",
                 "queries": times,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                # contention self-identification: 1/5/15-min load averages
+                # at start and end of the run (load above the core count
+                # means the numbers above include neighbour noise)
+                "loadavg_start": [round(x, 2) for x in load_start],
+                "loadavg_end": [round(x, 2) for x in os.getloadavg()],
             }
         ),
         flush=True,

@@ -14,8 +14,12 @@ Public API:
     PipelineConfig         -- the ~40-knob config ("the query")
     load(...)              -- 11-format input reader (reader.py:55-120)
     build_pipeline(...)    -- config -> lazy DataFrame plan
+
+Importing the package also stops Python workers from re-reading Spark's
+own archives on every task (see spark_archives).
 """
 
+import img2dataset_spark.spark_archives  # noqa: F401  (first: installs the override)
 from img2dataset_spark.config import PipelineConfig
 from img2dataset_spark.sources.reader import load
 from img2dataset_spark.plans.pipeline import build_pipeline, download

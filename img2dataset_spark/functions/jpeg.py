@@ -28,12 +28,22 @@ libjpeg/cv2 default the reference's outputs use, ~35% smaller files);
 pass subsampling="444" for full chroma.  Output is deterministic for a
 given array+quality (sink tests rely on byte-stable shards).
 
-The entropy loop is per-symbol Python (Huffman is inherently
-sequential); everything after coefficients is vectorized numpy.  This
-is the dependency-free fallback path — when PIL is importable the
-transform UDF prefers it (functions/image.py) — so per-image decode
-cost in the hundreds of milliseconds is acceptable, and at cluster
-scale the Arrow-batched UDF runs it embarrassingly parallel per core.
+The encoder is numpy end to end.  Once the blocks are quantized every
+Huffman code is known, so the entropy coder (`_entropy_code`) builds
+the scan's block order as index arrays, takes the DC differences and
+the AC (run, size) symbols with array operations, looks the codes up
+in 256-entry tables and packs all bits at once; its bytes equal the
+per-symbol coder it replaced (tests/test_jpeg_encoder_reference.py
+keeps that coder as the reference).  The forward DCT stays an einsum:
+a matmul is faster but sums in another order, and at .5 rounding ties
+that flips quantized coefficients (109 of 9,631,104 q95 luma
+coefficients over perfbench's pixels pools of seeds 1-3 at their native
+sizes), so the files would change.
+The decoder's entropy loop is per-symbol Python (a Huffman stream can
+only be parsed in order); everything after coefficients is vectorized.
+This is the dependency-free fallback path — when PIL is importable the
+transform UDF prefers it (functions/image.py) — and at cluster scale
+the Arrow-batched UDF runs it embarrassingly parallel per core.
 """
 
 from __future__ import annotations
@@ -743,30 +753,6 @@ def scaled_quant_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
     return ql, qc
 
 
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            b = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.buf.append(b)
-            if b == 0xFF:
-                self.buf.append(0x00)  # byte stuffing
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1 if self.nbits else 0
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.write(0x7F, 8 - self.nbits)  # pad with 1s
-
-
 def _blockify(plane: np.ndarray) -> np.ndarray:
     """(H, W) float plane -> (n, 8, 8) blocks, edge-replicated padding."""
     h, w = plane.shape
@@ -780,42 +766,228 @@ def _blockify(plane: np.ndarray) -> np.ndarray:
     )
 
 
-def _magnitude(v: int) -> int:
-    return int(v).bit_length() if v > 0 else int(-v).bit_length()
+def _code_tables(*specs) -> tuple[np.ndarray, np.ndarray]:
+    """(code, length) arrays of shape (len(specs), 256): one row per
+    Huffman table, indexed by symbol."""
+    code = np.zeros((len(specs), 256), np.int64)
+    length = np.zeros((len(specs), 256), np.int64)
+    for t, spec in enumerate(specs):
+        for sym, (c, n) in _huffman_codes(*spec).items():
+            code[t, sym], length[t, sym] = c, n
+    return code, length
 
 
-def _emit_block(bw: _BitWriter, row, dctab, actab, pred: int) -> int:
-    """Huffman-encode one zigzag coefficient row; returns the new DC
-    predictor."""
-    dc = int(row[0])
-    diff = dc - pred
-    s = _magnitude(diff)
-    code, length = dctab[s]
-    bw.write(code, length)
-    if s:
-        v = diff if diff >= 0 else diff + (1 << s) - 1
-        bw.write(v, s)
-    run = 0
-    last_nz = int(np.nonzero(row[1:])[0][-1]) + 1 if row[1:].any() else 0
-    for k in range(1, last_nz + 1):
-        v = int(row[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = actab[0xF0]  # ZRL
-            bw.write(code, length)
-            run -= 16
-        s = _magnitude(v)
-        code, length = actab[(run << 4) | s]
-        bw.write(code, length)
-        vv = v if v >= 0 else v + (1 << s) - 1
-        bw.write(vv, s)
-        run = 0
-    if last_nz < 63:
-        code, length = actab[0x00]  # EOB
-        bw.write(code, length)
-    return dc
+# row 0 luma, row 1 chroma
+_DC_CODE, _DC_LEN = _code_tables(_DC_LUMA, _DC_CHROMA)
+_AC_CODE, _AC_LEN = _code_tables(_AC_LUMA, _AC_CHROMA)
+
+# n ZRL (0xF0) codes in a row, fused, per table, for n = 0..3: a run of
+# at most 62 zeros needs at most three
+_ZRL_LEN = _AC_LEN[:, 0xF0, None] * np.arange(4)
+_ZRL_CODE = (
+    _AC_CODE[:, 0xF0, None] * ((1 << _ZRL_LEN) - 1)
+    // ((1 << _AC_LEN[:, 0xF0, None]) - 1)
+)
+
+
+def _scan_order(
+    nc: int, hs: int, vs: int, mcux: int, total_mcus: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(component, block index) of every data unit of the interleaved
+    scan, in stream order (T.81 A.2.3): per MCU, hs*vs luma blocks in
+    row-major order, then one block of each chroma component.  Without
+    subsampling an MCU is one block of each component."""
+    mcus = np.arange(total_mcus)
+    if (hs, vs) == (1, 1):
+        return np.tile(np.arange(nc), total_mcus), np.repeat(mcus, nc)
+    my, mx = np.divmod(mcus, mcux)
+    v, h = np.divmod(np.arange(vs * hs), hs)
+    luma = (vs * my[:, None] + v) * (hs * mcux) + hs * mx[:, None] + h
+    blk = np.concatenate([luma, mcus[:, None], mcus[:, None]], axis=1)
+    comp = np.tile(np.r_[np.zeros(vs * hs, np.int64), 1, 2], total_mcus)
+    return comp, blk.ravel()
+
+
+def _magnitude_bits(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(size category s, the s low bits T.81 F.1.2.1 appends) of each
+    value: s is the bit length of |v|, negatives are sent as v - 1."""
+    s = np.frexp(np.abs(v))[1].astype(np.int64)
+    return s, np.where(v < 0, v + (1 << s) - 1, v)
+
+
+def _or_segments(words: np.ndarray, idx: np.ndarray, vals: np.ndarray) -> None:
+    """words[idx] |= vals, for a non-decreasing ``idx``."""
+    if len(idx):
+        seg = np.flatnonzero(np.r_[True, idx[1:] != idx[:-1]])
+        words[idx[seg]] |= np.bitwise_or.reduceat(vals, seg)
+
+
+def _block_tokens(
+    rows: np.ndarray, diff: np.ndarray, tbl: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(value, bit length) of every Huffman token of the given blocks, in
+    stream order, and the index of each block's first token.
+
+    A block is a run of tokens: its DC difference, one token per nonzero
+    AC coefficient (with the ZRLs before it fused in) and an EOB unless
+    coefficient 63 is nonzero.  A token is at most 59 bits."""
+    s, bits = _magnitude_bits(diff)
+    dc_val = (_DC_CODE[tbl, s] << s) | bits
+    dc_len = _DC_LEN[tbl, s] + s
+
+    # AC: one (run, size) symbol per nonzero coefficient
+    unit, k = np.nonzero(rows[:, 1:])
+    k += 1
+    v = rows[unit, k]
+    first = np.r_[True, unit[1:] != unit[:-1]]
+    run = k - np.where(first, 0, np.r_[0, k[:-1]]) - 1
+    s, bits = _magnitude_bits(v)
+    t = tbl[unit]
+    sym = ((run & 15) << 4) | s
+    zrl = run >> 4
+    body_len = _AC_LEN[t, sym] + s
+    ac_val = (_ZRL_CODE[t, zrl] << body_len) | (_AC_CODE[t, sym] << s) | bits
+    ac_len = _ZRL_LEN[t, zrl] + body_len
+
+    eob = np.flatnonzero(rows[:, 63] == 0)
+
+    # token slots: per block its DC, its AC tokens, then its EOB
+    nnz = np.bincount(unit, minlength=len(rows))
+    per_block = 1 + nnz
+    per_block[eob] += 1
+    bstart = np.cumsum(per_block) - per_block
+    ac_pos = bstart[unit] + 1 + np.arange(len(unit)) - (np.cumsum(nnz) - nnz)[unit]
+    eob_pos = bstart[eob] + 1 + nnz[eob]
+    ntok = int(per_block.sum())
+    val = np.empty(ntok, np.int64)
+    length = np.empty(ntok, np.int64)
+    val[bstart], length[bstart] = dc_val, dc_len
+    val[ac_pos], length[ac_pos] = ac_val, ac_len
+    val[eob_pos], length[eob_pos] = _AC_CODE[tbl[eob], 0], _AC_LEN[tbl[eob], 0]
+    return val, length, bstart
+
+
+def _ceil8(bits):
+    """``bits`` rounded up to a whole number of bytes, in bits."""
+    return -(-bits // 8) * 8
+
+
+# data units coded per step: bounds the token arrays (~300 B per token,
+# up to 64 tokens per unit) whatever the image size
+_CHUNK_UNITS = 2048
+
+
+def _entropy_code(
+    coefs: list[np.ndarray],
+    comp: np.ndarray,
+    blk: np.ndarray,
+    total_mcus: int,
+    restart_interval: int,
+) -> bytes:
+    """Huffman-code the quantized zigzag rows of every data unit, in
+    scan order, into the stuffed entropy-coded segment with its RSTn
+    markers.
+
+    Every code is known once the blocks are quantized, so the tokens of
+    a chunk of blocks come out of array operations (`_block_tokens`); a
+    cumsum of their lengths gives each token's bit offset, and the tokens
+    are OR-ed into big-endian 64-bit words.  Each restart interval starts
+    on a byte boundary, its last byte padded with 1-bits; then every 0xFF
+    byte gets its 0x00 stuffing and the RSTn markers go in between the
+    intervals."""
+    upm = len(comp) // total_mcus
+    per_interval = upm * (restart_interval or total_mcus)
+    starts = np.cumsum([0] + [len(c) for c in coefs[:-1]])
+    allc = np.concatenate(coefs)
+    gidx = starts[comp] + blk
+    tbl = np.minimum(comp, 1)
+    n = len(comp)
+    interval = np.arange(n) // per_interval
+
+    # DC: the difference to the previous block of the same component;
+    # the predictor restarts at 0 in every restart interval
+    dc = allc[gidx, 0]
+    diff = dc.copy()
+    for c in range(len(coefs)):
+        idx = np.flatnonzero(comp == c)
+        same = interval[idx[1:]] == interval[idx[:-1]]
+        diff[idx[1:]] -= np.where(same, dc[idx[:-1]], 0)
+
+    bitpos = 0  # where the next chunk's first token starts
+    carry = np.zeros(1, np.uint64)  # the partial word holding bitpos
+    done: list[np.ndarray] = []  # complete words
+    ends = []  # bit offset where each interval's tokens end
+    for lo in range(0, n, _CHUNK_UNITS):
+        hi = min(lo + _CHUNK_UNITS, n)
+        val, length, bstart = _block_tokens(
+            allc[gidx[lo:hi]], diff[lo:hi], tbl[lo:hi]
+        )
+        end = np.cumsum(length)
+        local = end - length
+        # the chunk's tokens in segments, one per interval it touches:
+        # segment 0 continues at bitpos, each later one is an interval
+        # that starts on the byte after the previous interval's end
+        first = -(-max(lo, 1) // per_interval) * per_interval
+        seg_tok = bstart[np.arange(first, hi, per_interval) - lo]
+        bounds = np.r_[0, local[seg_tok], end[-1]]
+        seg_bits = np.diff(bounds)
+        seg_start = np.full(len(seg_bits), bitpos)
+        if len(seg_tok):
+            # byte-aligned from segment 1 on, so each later start is the
+            # previous one plus its bits rounded up to whole bytes
+            seg_start[1:] = _ceil8(bitpos + seg_bits[0]) + np.r_[
+                0, np.cumsum(_ceil8(seg_bits[1:-1]))
+            ]
+            ends += [bitpos + seg_bits[0], *(seg_start[1:-1] + seg_bits[1:-1])]
+        start = local + np.repeat(
+            seg_start - bounds[:-1], np.diff(np.r_[0, seg_tok, len(val)])
+        )
+        new_bitpos = int(seg_start[-1] + seg_bits[-1])
+
+        # OR each token into the (at most two) words it spans; start is
+        # increasing, so each word's tokens are one segment
+        base = bitpos // 64
+        words = np.zeros(new_bitpos // 64 - base + 2, np.uint64)
+        words[0] = carry[0]
+        word, off = np.divmod(start, 64)
+        word -= base
+        spill = off + length - 64  # bits that run into the next word
+        val = val.astype(np.uint64)
+        head = np.where(
+            spill > 0,
+            val >> np.maximum(spill, 0).astype(np.uint64),
+            val << np.maximum(-spill, 0).astype(np.uint64),
+        )
+        _or_segments(words, word, head)
+        s = spill > 0
+        _or_segments(
+            words, word[s] + 1, val[s] << (64 - spill[s]).astype(np.uint64)
+        )
+        keep = new_bitpos // 64 - base
+        done.append(words[:keep])
+        carry = words[keep : keep + 1]
+        bitpos = new_bitpos
+    ends.append(bitpos)
+
+    nbytes = _ceil8(bitpos) // 8
+    data = np.concatenate(done + [carry]).astype(">u8").view(np.uint8)[:nbytes]
+    # pad the last byte of every interval with 1-bits
+    ends = np.asarray(ends)
+    part = ends[ends % 8 != 0]
+    data[part // 8] |= ((1 << (-part % 8)) - 1).astype(np.uint8)
+    istart = _ceil8(ends[:-1]) // 8  # byte where intervals 1.. start
+
+    # 0x00 after every 0xFF; RSTn (n = 0..7 cyclic) between intervals
+    ff = data == 0xFF
+    byte_interval = np.zeros(nbytes, np.int64)
+    byte_interval[istart] = 1
+    pos = np.arange(nbytes) + np.cumsum(ff) - ff + 2 * np.cumsum(byte_interval)
+    out = np.zeros(nbytes + int(ff.sum()) + 2 * len(istart), np.uint8)
+    out[pos] = data
+    marker = pos[istart] - 2
+    out[marker] = 0xFF
+    out[marker + 1] = 0xD0 + (np.arange(len(marker)) & 7)
+    return out.tobytes()
 
 
 def encode_jpeg(
@@ -871,11 +1043,6 @@ def encode_jpeg(
         planes = [y - 128.0, cb - 128.0, cr - 128.0]
         qts = [ql, qc, qc]
 
-    dc_specs = [_DC_LUMA] + ([_DC_CHROMA, _DC_CHROMA] if not gray else [])
-    ac_specs = [_AC_LUMA] + ([_AC_CHROMA, _AC_CHROMA] if not gray else [])
-    dc_codes = [_huffman_codes(*s) for s in dc_specs]
-    ac_codes = [_huffman_codes(*s) for s in ac_specs]
-
     # forward DCT + quantize + zigzag, vectorized per plane
     coefs = []
     for plane, q in zip(planes, qts):
@@ -884,51 +1051,9 @@ def encode_jpeg(
         quant = np.rint(F.reshape(-1, 64) / q[None, :]).astype(np.int64)
         coefs.append(quant[:, ZIGZAG])
 
-    bw = _BitWriter()
-    preds = [0] * len(planes)
-    if sub:
-        mcux, mcuy = -(-w // (8 * hs)), -(-h // (8 * vs))
-        total_mcus = mcux * mcuy
-        ybw = hs * mcux
-    else:
-        nby, nbx = -(-h // 8), -(-w // 8)
-        total_mcus = nby * nbx
-    rst_n = 0
-
-    def maybe_restart(done: int) -> None:
-        """Between-interval RSTn: byte-align, emit marker, reset DC."""
-        nonlocal rst_n
-        if restart_interval and done % restart_interval == 0 and done < total_mcus:
-            bw.flush()
-            bw.buf += bytes([0xFF, 0xD0 + rst_n])
-            rst_n = (rst_n + 1) & 7
-            for i in range(len(preds)):
-                preds[i] = 0
-
-    for mcu in range(total_mcus):
-        if sub:
-            # interleaved MCU: hs*vs luma blocks (row-major) + Cb + Cr
-            my, mx = divmod(mcu, mcux)
-            for v in range(vs):
-                for hh in range(hs):
-                    preds[0] = _emit_block(
-                        bw, coefs[0][(vs * my + v) * ybw + (hs * mx + hh)],
-                        dc_codes[0], ac_codes[0], preds[0],
-                    )
-            ci_idx = my * mcux + mx
-            preds[1] = _emit_block(
-                bw, coefs[1][ci_idx], dc_codes[1], ac_codes[1], preds[1]
-            )
-            preds[2] = _emit_block(
-                bw, coefs[2][ci_idx], dc_codes[2], ac_codes[2], preds[2]
-            )
-        else:
-            for ci in range(len(planes)):
-                preds[ci] = _emit_block(
-                    bw, coefs[ci][mcu], dc_codes[ci], ac_codes[ci], preds[ci]
-                )
-        maybe_restart(mcu + 1)
-    bw.flush()
+    mcux, mcuy = -(-w // (8 * hs)), -(-h // (8 * vs))
+    comp, blk = _scan_order(len(planes), hs, vs, mcux, mcux * mcuy)
+    scan = _entropy_code(coefs, comp, blk, mcux * mcuy, restart_interval)
 
     # ---- assemble the file
     out = bytearray(b"\xff\xd8")  # SOI
@@ -973,6 +1098,6 @@ def encode_jpeg(
         sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
     sos += b"\x00\x3f\x00"
     out += b"\xff\xda" + sos
-    out += bw.buf
+    out += scan
     out += b"\xff\xd9"  # EOI
     return bytes(out)

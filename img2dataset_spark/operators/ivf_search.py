@@ -180,28 +180,17 @@ _OVERRIDES_MEMO: dict[int, tuple[DataFrame, dict]] = {}
 
 def collect_overrides(overrides: DataFrame, codec, cells=None) -> dict:
     """{cell: book} from a per-cell override relation, parsed by the
-    codec.  Two collects exist:
+    codec, restricted to ``cells`` (the probed cells) when given.
 
-    - a memo hit (the whole relation was collected before — by the
-      refit composites' re-encode pass, the chunked batch route, or an
-      :func:`empty_overrides_frame`) serves any slice as a driver-local
-      dict filter, with no Spark job;
-    - on a miss, ``cells`` (the probed cells) collects only those
-      cells' rows through a ``cell IN (...)`` filter, and ``cells=None``
-      collects the WHOLE relation once and memoizes it.
-
-    The whole relation is bounded: the codec's parse refuses more than
-    similarity.FLAT_CODEBOOK_MAX_CELLS override cells, so neither
-    collect can grow corpus-shaped.  The returned dict is a copy; the
-    payload arrays are shared and treated as immutable."""
+    The first call collects the WHOLE relation and memoizes it; every
+    later call on the same frame, for any slice, is a driver-local dict
+    filter with no Spark job.  A versioned search therefore pays one
+    collect per override frame, not one filter+collect per build.  The
+    relation is bounded: the codec's parse refuses more than
+    similarity.FLAT_CODEBOOK_MAX_CELLS override cells, so the collect
+    cannot grow corpus-shaped.  The returned dict is a copy; the payload
+    arrays are shared and treated as immutable."""
     full = S._memo_get(_OVERRIDES_MEMO, overrides)
-    if full is None and cells is not None:
-        ids = sorted({int(c) for c in cells})
-        return codec.parse_overrides(
-            overrides.filter(F.col("cell").isin(ids))
-            .select(*codec.override_cols)
-            .collect()
-        )
     if full is None:
         full = codec.parse_overrides(
             overrides.select(*codec.override_cols).collect()
@@ -421,10 +410,6 @@ def _chunked(codec, name, index_df, ivf_codebook, queries_df, k, nprobe,
     literal budget: q/chunk scans instead of one."""
     spark = queries_df.sparkSession
     qrows = _dense_qrows(queries_df, qid_col)
-    if overrides is not None and len(qrows) > max_queries_per_scan:
-        # one bounded whole-relation collect (memoized) instead of one
-        # filter+collect job per chunk
-        collect_overrides(overrides, codec)
     out = None
     for lo in range(0, len(qrows), max_queries_per_scan):
         chunk = qrows[lo : lo + max_queries_per_scan]

@@ -6,6 +6,7 @@ serving images and a /disallowed/ mount that adds X-Robots-Tag headers.
 
 from __future__ import annotations
 
+import glob
 import http.server
 import os
 import struct
@@ -16,6 +17,27 @@ import zlib
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# the six CC0 photos committed with the benchmark (one of them grayscale
+# and progressive); hermetic real-JPEG inputs for the codec tests
+PHOTOS = sorted(glob.glob(os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "perfbench", "data", "photos", "*.jpg",
+)))
+
+
+def sof_dimensions(data: bytes) -> tuple[int, int, int]:
+    """(width, height, SOF marker) from a JPEG's frame header, walking
+    the marker segments by their lengths; independent of the codec."""
+    i = 2
+    while data[i] == 0xFF:
+        marker = data[i + 1]
+        (seglen,) = struct.unpack(">H", data[i + 2 : i + 4])
+        if marker in (0xC0, 0xC1, 0xC2):
+            h, w = struct.unpack(">HH", data[i + 5 : i + 9])
+            return w, h, marker
+        i += 2 + seglen
+    raise ValueError("no SOF marker before the first scan")
 
 
 @pytest.fixture(scope="session")

@@ -4,9 +4,11 @@ Without PIL/cv2 there is no independent JPEG ground truth in this
 container, so correctness is pinned three ways:
   1. encoder->decoder roundtrip PSNR on synthetic images (a wrong
      Huffman table, zigzag, or IDCT shatters PSNR immediately);
-  2. decoding the reference repo's committed baseline test JPEGs
-     (produced by cv2) — dimensions from the entropy-decoded frame must
-     match the filename-encoded ground truth and the header parser;
+  2. decoding real photographs — the reference repo's test JPEGs
+     (produced by cv2, dimensions in the file name) when present, and
+     the six committed under perfbench/data/photos (dimensions from the
+     SOF marker, read here apart from the codec) — the entropy-decoded
+     frame must match those dimensions and the header parser;
   3. cross-codec consistency: a PNG and a JPEG encoded from the same
      array decode to nearly identical pixels (PNG path is already
      golden-verified, so it anchors the JPEG path).
@@ -17,14 +19,25 @@ our decoder against PIL's within JPEG rounding tolerance.
 from __future__ import annotations
 
 import glob
+import os
 
 import numpy as np
 import pytest
+from conftest import PHOTOS, sof_dimensions
 
 from img2dataset_spark.functions.jpeg import decode_jpeg, encode_jpeg
 from img2dataset_spark.functions.png import decode_png, encode_png
 
 REF_JPEGS = sorted(glob.glob("/root/reference/tests/resize_test_image/*.jpg"))
+REAL_JPEGS = REF_JPEGS + PHOTOS
+
+
+def _true_dimensions(path: str) -> tuple[int, int]:
+    if path in REF_JPEGS:
+        w, h = os.path.basename(path)[:-4].split("_")
+        return int(w), int(h)
+    with open(path, "rb") as fh:
+        return sof_dimensions(fh.read())[:2]
 
 
 def _synthetic(h, w, seed=0):
@@ -121,16 +134,17 @@ class TestRoundtrip:
 
 
 class TestReferenceImages:
-    """The reference's committed test JPEGs, filename = {w}_{h}.jpg."""
+    """Real photographs: the reference's test JPEGs (filename =
+    {w}_{h}.jpg) and the committed photos (one grayscale, progressive)."""
 
     @pytest.mark.parametrize(
-        "path", REF_JPEGS, ids=[p.rsplit("/", 1)[-1] for p in REF_JPEGS]
+        "path", REAL_JPEGS, ids=[os.path.basename(p) for p in REAL_JPEGS]
     )
     def test_decode_dims_match_filename(self, path):
         from img2dataset_spark.functions.image import parse_dimensions
 
         data = open(path, "rb").read()
-        w, h = map(int, path.rsplit("/", 1)[-1][:-4].split("_"))
+        w, h = _true_dimensions(path)
         arr = decode_jpeg(data)
         assert arr.shape[:2] == (h, w)
         assert parse_dimensions(data) == (w, h)
@@ -138,13 +152,15 @@ class TestReferenceImages:
         assert arr.std() > 10
 
     @pytest.mark.parametrize(
-        "path", REF_JPEGS, ids=[p.rsplit("/", 1)[-1] for p in REF_JPEGS]
+        "path", REAL_JPEGS, ids=[os.path.basename(p) for p in REAL_JPEGS]
     )
     def test_no_block_seams(self, path):
         """A wrong entropy decode (especially a wrong progressive
         refinement) leaves strong 8x8 seams; a correct decode's
         block-boundary gradients stay close to interior gradients."""
-        arr = decode_jpeg(open(path, "rb").read()).astype(float).mean(axis=2)
+        arr = decode_jpeg(open(path, "rb").read()).astype(float)
+        if arr.ndim == 3:
+            arr = arr.mean(axis=2)
         dv = np.abs(np.diff(arr, axis=0))
         rows = np.arange(arr.shape[0] - 1)
         ratio = dv[rows % 8 == 7].mean() / dv[rows % 8 != 7].mean()

@@ -1,10 +1,14 @@
-"""Whole-engine e2e over REAL images, no mock anywhere: the reference
-repo's committed photos (5 of 7 progressive JPEG) are served over a
-local HTTP server, fetched by the fetch UDF inside Spark executors,
-decoded/resized/re-encoded by the dependency-free codecs, and written
-as webdataset shards + metadata parquet.  This is the reference's own
-end-to-end shape (tests/test_main.py) with zero imaging-library
-dependence."""
+"""Whole-engine e2e over REAL images, no mock anywhere: real photos are
+served over a local HTTP server, fetched by the fetch UDF inside Spark
+executors, decoded/resized/re-encoded by the dependency-free codecs,
+and written as webdataset shards + metadata parquet.  This is the
+reference's own end-to-end shape (tests/test_main.py) with zero
+imaging-library dependence.
+
+Each test runs over the six photos committed under perfbench/data/photos
+(one grayscale and progressive) and, where that checkout exists, over
+the reference repo's test photos (5 of 7 progressive JPEG, file name =
+{w}_{h}.jpg)."""
 
 from __future__ import annotations
 
@@ -14,6 +18,7 @@ import os
 import tarfile
 
 import pytest
+from conftest import PHOTOS, sof_dimensions
 
 from img2dataset_spark import PipelineConfig, download
 from pyspark.sql import functions as F
@@ -21,16 +26,30 @@ from img2dataset_spark.functions.jpeg import decode_jpeg
 
 REF_IMAGES = sorted(glob.glob("/root/reference/tests/resize_test_image/*.jpg"))
 
-pytestmark = pytest.mark.skipif(
-    not REF_IMAGES, reason="reference test images not available"
-)
+
+@pytest.fixture(params=["photos"] + (["reference"] if REF_IMAGES else []))
+def photo_set(request):
+    """(paths, progressive path, its true (w, h)): the committed photos
+    take dimensions from the SOF marker, the reference's from the file
+    name."""
+    if request.param == "reference":
+        prog = REF_IMAGES[1]  # 208_495: progressive
+        w, h = map(int, os.path.basename(prog)[:-4].split("_"))
+        return REF_IMAGES, prog, (w, h)
+    for p in PHOTOS:
+        w, h, marker = sof_dimensions(open(p, "rb").read())
+        if marker == 0xC2:
+            return PHOTOS, p, (w, h)
+    raise AssertionError("no progressive JPEG among the committed photos")
 
 
-def test_download_real_jpegs_end_to_end(spark, http_fixture, tmp_path):
+def test_download_real_jpegs_end_to_end(spark, http_fixture, tmp_path,
+                                        photo_set):
     base, images = http_fixture
-    # mount the reference photos on the session HTTP server
+    paths = photo_set[0]
+    # mount the photos on the session HTTP server
     names = []
-    for p in REF_IMAGES:
+    for p in paths:
         name = "real_" + os.path.basename(p)
         images[name] = open(p, "rb").read()
         names.append(name)
@@ -58,8 +77,10 @@ def test_download_real_jpegs_end_to_end(spark, http_fixture, tmp_path):
     stats = download(cfg, spark=spark)
     assert sum(s["successes"] for s in stats) == len(names)
 
-    # every tar member must be a real JPEG at the requested geometry
-    decoded = 0
+    # every tar member must be a real JPEG at the requested geometry; a
+    # grayscale source stays one channel
+    gray_sources = sum(decode_jpeg(images[n]).ndim == 2 for n in names)
+    decoded = gray = 0
     for tar_path in sorted(glob.glob(out + "/*.tar")):
         with tarfile.open(tar_path) as tf:
             for m in tf.getmembers():
@@ -67,9 +88,11 @@ def test_download_real_jpegs_end_to_end(spark, http_fixture, tmp_path):
                     continue
                 data = tf.extractfile(m).read()
                 arr = decode_jpeg(data)
-                assert arr.shape == (96, 96, 3), m.name
+                assert arr.shape in ((96, 96, 3), (96, 96)), m.name
                 decoded += 1
+                gray += arr.ndim == 2
     assert decoded == len(names)
+    assert gray == gray_sources
 
     # stats sidecars agree with the tar contents
     total = 0
@@ -78,14 +101,16 @@ def test_download_real_jpegs_end_to_end(spark, http_fixture, tmp_path):
     assert total == len(names)
 
 
-def test_original_dims_survive_to_metadata(spark, http_fixture, tmp_path):
+def test_original_dims_survive_to_metadata(spark, http_fixture, tmp_path,
+                                           photo_set):
     """The metadata parquet must carry the entropy-decoded original
-    dims (filename-encoded ground truth), proving the progressive
-    decode ran inside the pipeline, not just a header parse."""
+    dims (ground truth read apart from the codec), proving the
+    progressive decode ran inside the pipeline, not just a header
+    parse."""
     base, images = http_fixture
-    name = "real_" + os.path.basename(REF_IMAGES[1])  # 208_495: progressive
-    images[name] = open(REF_IMAGES[1], "rb").read()
-    w, h = map(int, os.path.basename(REF_IMAGES[1])[:-4].split("_"))
+    _, prog, (w, h) = photo_set
+    name = "real_" + os.path.basename(prog)
+    images[name] = open(prog, "rb").read()
 
     inp = str(tmp_path / "urls.parquet")
     spark.createDataFrame(
@@ -114,7 +139,8 @@ def test_original_dims_survive_to_metadata(spark, http_fixture, tmp_path):
     arr = decode_jpeg(bytes(r["jpg"]))
     assert arr.shape[:2] == (r["height"], r["width"])
 
-def test_compute_phash_dedups_respellings(spark, http_fixture, tmp_path):
+def test_compute_phash_dedups_respellings(spark, http_fixture, tmp_path,
+                                          photo_set):
     """compute_phash=True writes a perceptual hash of the STORED
     payload into the metadata; two spellings of the same photo (the
     original and a recompressed copy) land within a small Hamming
@@ -124,10 +150,11 @@ def test_compute_phash_dedups_respellings(spark, http_fixture, tmp_path):
     from img2dataset_spark.operators.dedup import hamming_pairs64
 
     base, images = http_fixture
-    src = open(REF_IMAGES[0], "rb").read()
+    paths = photo_set[0]
+    src = open(paths[0], "rb").read()
     # a re-encoded spelling: same pixels, different bytes
     respelled = encode_jpeg(decode_jpeg(src), quality=70)
-    other = open(REF_IMAGES[-1], "rb").read()
+    other = open(paths[-1], "rb").read()
     images["ph_a.jpg"] = src
     images["ph_b.jpg"] = respelled
     images["ph_c.jpg"] = other
