@@ -48,6 +48,7 @@ the Arrow-batched UDF runs it embarrassingly parallel per core.
 
 from __future__ import annotations
 
+import re
 import struct
 
 import numpy as np
@@ -163,8 +164,9 @@ def _huffman_codes(bits: list[int], values: list[int]) -> dict[int, tuple[int, i
     return out
 
 
-def _huffman_lut(bits: list[int], values: list[int]) -> tuple[np.ndarray, np.ndarray]:
-    """16-bit peek lookup tables: (length, symbol) per 16-bit prefix."""
+def _huffman_lut(bits: list[int], values: list[int]) -> tuple[bytes, bytes]:
+    """16-bit peek lookup tables: (length, symbol) per 16-bit prefix, as
+    `bytes`, so that a lookup is a Python int with no numpy scalar."""
     lut_len = np.zeros(1 << 16, dtype=np.uint8)
     lut_sym = np.zeros(1 << 16, dtype=np.uint8)
     for sym, (code, length) in _huffman_codes(bits, values).items():
@@ -172,7 +174,7 @@ def _huffman_lut(bits: list[int], values: list[int]) -> tuple[np.ndarray, np.nda
         span = 1 << (16 - length)
         lut_len[base : base + span] = length
         lut_sym[base : base + span] = sym
-    return lut_len, lut_sym
+    return lut_len.tobytes(), lut_sym.tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -186,31 +188,20 @@ class _Component:
         self.cid, self.h, self.v, self.tq = cid, h, v, tq
 
 
+# The end of a scan: the first 0xFF followed by anything but a stuffed
+# 0x00 or an RSTn (including FF FF fill), or a trailing 0xFF.
+_SCAN_END = re.compile(rb"\xff(?:[^\x00\xd0-\xd7]|\Z)")
+_RST = re.compile(rb"\xff[\xd0-\xd7]")
+
+
 def _split_segments(data: bytes, start: int) -> tuple[list[bytes], int]:
     """Unstuff one scan's entropy-coded data, split at RST markers.
-    Returns (segments, position of the terminating marker's 0xFF)."""
-    n = len(data)
-    segments: list[bytes] = []
-    cur = bytearray()
-    i = start
-    while i < n:
-        b = data[i]
-        if b == 0xFF:
-            m = data[i + 1] if i + 1 < n else 0xD9
-            if m == 0x00:
-                cur.append(0xFF)
-                i += 2
-                continue
-            if 0xD0 <= m <= 0xD7:  # RSTn
-                segments.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-            break  # real marker: end of scan
-        cur.append(b)
-        i += 1
-    segments.append(bytes(cur))
-    return segments, i
+    Returns (segments, position of the terminating marker's 0xFF).
+    Inside the scan every 0xFF starts a stuffed FF 00 or an RSTn, so
+    splitting at RSTn first and then unstuffing is exact."""
+    end = _SCAN_END.search(data, start)
+    end = end.start() if end else max(start, len(data))
+    return [seg.replace(b"\xff\x00", b"\xff") for seg in _RST.split(data[start:end])], end
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
@@ -228,7 +219,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG")
     pos = 2
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+    huff: dict[tuple[int, int], tuple[bytes, bytes]] = {}
     comps: list[_Component] = []
     width = height = None
     restart_interval = 0
@@ -443,10 +434,10 @@ def _decode_segment(
                         if nbits < 16
                         else (acc >> (nbits - 16)) & 0xFFFF
                     )
-                    length = int(dc_len[peek])
+                    length = dc_len[peek]
                     if length == 0 or length > nbits:
                         raise ValueError("bad JPEG Huffman code")
-                    s = int(dc_sym[peek])
+                    s = dc_sym[peek]
                     nbits -= length
                     if s:
                         while nbits < s and spos < slen:
@@ -474,10 +465,10 @@ def _decode_segment(
                             if nbits < 16
                             else (acc >> (nbits - 16)) & 0xFFFF
                         )
-                        length = int(ac_len[peek])
+                        length = ac_len[peek]
                         if length == 0 or length > nbits:
                             raise ValueError("bad JPEG Huffman code")
-                        rs = int(ac_sym[peek])
+                        rs = ac_sym[peek]
                         nbits -= length
                         r, s = rs >> 4, rs & 15
                         if s == 0:
@@ -507,6 +498,12 @@ def _decode_segment(
     return mcu
 
 
+# A reader never holds more than 23 unread bits (it refills below 16 and
+# adds a byte at a time), so its accumulator keeps only the low 32 bits
+# instead of growing into a big integer over the whole segment.
+_ACC_MASK = 0xFFFFFFFF
+
+
 class _Bits:
     """Sequential bit reader over one unstuffed entropy segment."""
 
@@ -521,12 +518,12 @@ class _Bits:
     def _fill(self, want: int) -> None:
         seg, pos = self.seg, self.pos
         while self.nbits < want and pos < len(seg):
-            self.acc = (self.acc << 8) | seg[pos]
+            self.acc = ((self.acc << 8) | seg[pos]) & _ACC_MASK
             pos += 1
             self.nbits += 8
         self.pos = pos
 
-    def huff(self, lut: tuple[np.ndarray, np.ndarray]) -> int:
+    def huff(self, lut: tuple[bytes, bytes]) -> int:
         self._fill(16)
         nbits = self.nbits
         # 1-bit fill past end-of-segment (T.81 F.1.2.3) — see the
@@ -537,11 +534,11 @@ class _Bits:
             else (self.acc >> (nbits - 16)) & 0xFFFF
         )
         lut_len, lut_sym = lut
-        length = int(lut_len[peek])
+        length = lut_len[peek]
         if length == 0 or length > nbits:
             raise ValueError("bad JPEG Huffman code")
         self.nbits = nbits - length
-        return int(lut_sym[peek])
+        return lut_sym[peek]
 
     def bits(self, k: int) -> int:
         if k == 0:
@@ -674,51 +671,128 @@ def _dc_unit(br: _Bits, row: np.ndarray, c: _Component, preds, ah: int, al: int)
 
 
 def _ac_first(br, row, ac_lut, ss, se, al, eobrun):
+    """AC first scan of one block (T.81 G.1.2.2), also the AC part of a
+    sequential single-component scan (al = 0, never an EOB run).  The
+    bit reader's state lives in locals for the block; `_Bits.huff`,
+    `bits` and `receive_extend` are inlined."""
     if eobrun > 0:
         return eobrun - 1
+    lut_len, lut_sym = ac_lut
+    seg, pos, acc, nbits = br.seg, br.pos, br.acc, br.nbits
+    slen = len(seg)
     k = ss
+    eobrun = 0
     while k <= se:
-        rs = br.huff(ac_lut)
+        while nbits < 16 and pos < slen:
+            acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+            pos += 1
+            nbits += 8
+        peek = (
+            ((acc << (16 - nbits)) | ((1 << (16 - nbits)) - 1)) & 0xFFFF
+            if nbits < 16
+            else (acc >> (nbits - 16)) & 0xFFFF
+        )
+        length = lut_len[peek]
+        if length == 0 or length > nbits:
+            raise ValueError("bad JPEG Huffman code")
+        nbits -= length
+        rs = lut_sym[peek]
         r, s = rs >> 4, rs & 15
         if s == 0:
             if r != 15:
                 eobrun = (1 << r) - 1
                 if r:
-                    eobrun += br.bits(r)
-                return eobrun
+                    while nbits < r and pos < slen:
+                        acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+                        pos += 1
+                        nbits += 8
+                    if nbits < r:
+                        raise ValueError("truncated JPEG entropy data")
+                    nbits -= r
+                    eobrun += (acc >> nbits) & ((1 << r) - 1)
+                break
             k += 16  # ZRL
             continue
         k += r
         if k > se:
             raise ValueError("JPEG AC index out of range")
-        row[k] = br.receive_extend(s) << al
+        while nbits < s and pos < slen:
+            acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+            pos += 1
+            nbits += 8
+        if nbits < s:
+            raise ValueError("truncated JPEG entropy data")
+        nbits -= s
+        v = (acc >> nbits) & ((1 << s) - 1)
+        if v < (1 << (s - 1)):
+            v -= (1 << s) - 1
+        row[k] = v << al
         k += 1
-    return 0
+    br.pos, br.acc, br.nbits = pos, acc, nbits
+    return eobrun
 
 
 def _ac_refine(br, row, ac_lut, ss, se, al, eobrun):
-    """AC successive-approximation refinement (T.81 G.1.2.3)."""
+    """AC successive-approximation refinement (T.81 G.1.2.3), with the
+    bit reader inlined as in `_ac_first`."""
+    lut_len, lut_sym = ac_lut
+    seg, pos, acc, nbits = br.seg, br.pos, br.acc, br.nbits
+    slen = len(seg)
     p1 = 1 << al
     m1 = -p1
     k = ss
     if eobrun == 0:
         while k <= se:
-            rs = br.huff(ac_lut)
+            while nbits < 16 and pos < slen:
+                acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+                pos += 1
+                nbits += 8
+            peek = (
+                ((acc << (16 - nbits)) | ((1 << (16 - nbits)) - 1)) & 0xFFFF
+                if nbits < 16
+                else (acc >> (nbits - 16)) & 0xFFFF
+            )
+            length = lut_len[peek]
+            if length == 0 or length > nbits:
+                raise ValueError("bad JPEG Huffman code")
+            nbits -= length
+            rs = lut_sym[peek]
             r, s = rs >> 4, rs & 15
             val = 0
             if s == 0:
                 if r != 15:
                     eobrun = 1 << r
                     if r:
-                        eobrun += br.bits(r)
+                        while nbits < r and pos < slen:
+                            acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+                            pos += 1
+                            nbits += 8
+                        if nbits < r:
+                            raise ValueError("truncated JPEG entropy data")
+                        nbits -= r
+                        eobrun += (acc >> nbits) & ((1 << r) - 1)
                     break  # tail handler consumes one EOB unit
                 # r == 15: ZRL — pass 16 zero-history coefficients
             else:
-                val = p1 if br.bit() else m1
+                if not nbits:
+                    if pos == slen:
+                        raise ValueError("truncated JPEG entropy data")
+                    acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+                    pos += 1
+                    nbits = 8
+                nbits -= 1
+                val = p1 if (acc >> nbits) & 1 else m1
             while k <= se:
                 coef = int(row[k])
                 if coef != 0:
-                    if br.bit() and (coef & p1) == 0:
+                    if not nbits:
+                        if pos == slen:
+                            raise ValueError("truncated JPEG entropy data")
+                        acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+                        pos += 1
+                        nbits = 8
+                    nbits -= 1
+                    if (acc >> nbits) & 1 and (coef & p1) == 0:
                         row[k] = coef + (p1 if coef >= 0 else m1)
                 else:
                     if r == 0:
@@ -732,10 +806,18 @@ def _ac_refine(br, row, ac_lut, ss, se, al, eobrun):
         while k <= se:
             coef = int(row[k])
             if coef != 0:
-                if br.bit() and (coef & p1) == 0:
+                if not nbits:
+                    if pos == slen:
+                        raise ValueError("truncated JPEG entropy data")
+                    acc = ((acc << 8) | seg[pos]) & _ACC_MASK
+                    pos += 1
+                    nbits = 8
+                nbits -= 1
+                if (acc >> nbits) & 1 and (coef & p1) == 0:
                     row[k] = coef + (p1 if coef >= 0 else m1)
             k += 1
         eobrun -= 1
+    br.pos, br.acc, br.nbits = pos, acc, nbits
     return eobrun
 
 

@@ -3,8 +3,17 @@ library is installed (PNG path, paired with functions/png.py).
 
 Implements the interpolation families the reference maps to OpenCV
 (resizer.py:49-58: nearest/linear/cubic/area/lanczos4) as separable
-per-axis weight matrices with pixel-center alignment
+per-axis weights with pixel-center alignment
 (src = (dst + 0.5) * scale - 0.5) and replicate borders.
+
+Each axis is banded: an output reads only its few nonzero taps (at most
+ceil(scale) + 1 for area, 2 * taps for the kernels), so `resize` sums
+weight[:, t] * x[first + t] over t in order instead of multiplying by
+the dense n_out x n_in weight matrix.  A 926 -> 256 axis does 5
+multiply-adds per output instead of 926; the uint8 outputs equal the
+dense product's on every perfbench pixels pool measured (seeds 1-3, all
+five modes, tests/test_resample.py keeps the dense product as the
+reference).
 
 Parity status (honest): formula-level parity with the standard
 definitions (area = exact fractional box coverage; cubic = Catmull-Rom
@@ -73,8 +82,36 @@ def _lanczos4(d: np.ndarray) -> np.ndarray:
     return np.sinc(d) * np.sinc(d / 4.0)
 
 
+def _axis_taps(n_in: int, n_out: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
+    """The nonzero band of `_axis_weights`: (first[n_out], weights[n_out, T])
+    with weights[i, t] = W[i, first[i] + t].  T is the widest support of
+    any output, and each band is shifted left where it would run past the
+    last input, so it only gains exact-zero weights."""
+    W = _axis_weights(n_in, n_out, mode)
+    nonzero = W != 0
+    first = nonzero.argmax(axis=1)
+    last = n_in - 1 - nonzero[:, ::-1].argmax(axis=1)
+    T = int((last - first).max()) + 1
+    first = np.minimum(first, n_in - T)
+    return first, W[np.arange(n_out)[:, None], first[:, None] + np.arange(T)]
+
+
+def _resize_axis(x: np.ndarray, n_out: int, mode: str, axis: int) -> np.ndarray:
+    """Resample `x` along `axis` to `n_out` samples in float64: each
+    output is sum_t weights[:, t] * x[first + t], accumulated over t in
+    order (integer input converts exactly as it is gathered)."""
+    first, weights = _axis_taps(x.shape[axis], n_out, mode)
+    shape = [1] * x.ndim
+    shape[axis] = n_out
+    out = weights[:, 0].reshape(shape) * np.take(x, first, axis=axis)
+    for t in range(1, weights.shape[1]):
+        out += weights[:, t].reshape(shape) * np.take(x, first + t, axis=axis)
+    return out
+
+
 def resize(img: np.ndarray, out_w: int, out_h: int, mode: str = "bilinear") -> np.ndarray:
-    """Resize an (H, W[, C]) uint8/float array to (out_h, out_w)."""
+    """Resize an (H, W[, C]) uint8/float array to (out_h, out_w): rows
+    first, then columns, each over its band of nonzero taps."""
     arr = np.asarray(img)
     squeeze = arr.ndim == 2
     if squeeze:
@@ -83,12 +120,7 @@ def resize(img: np.ndarray, out_w: int, out_h: int, mode: str = "bilinear") -> n
     if (out_h, out_w) == (h, w):
         out = arr.astype(np.float64)
     else:
-        Wh = _axis_weights(h, out_h, mode)
-        Ww = _axis_weights(w, out_w, mode)
-        tmp = (Wh @ arr.reshape(h, w * c).astype(np.float64)).reshape(out_h, w, c)
-        out = (Ww @ tmp.transpose(1, 0, 2).reshape(w, out_h * c)).reshape(
-            out_w, out_h, c
-        ).transpose(1, 0, 2)
+        out = _resize_axis(_resize_axis(arr, out_h, mode, 0), out_w, mode, 1)
     if np.issubdtype(img.dtype, np.integer):
         out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
     else:

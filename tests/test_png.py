@@ -1,7 +1,10 @@
 """PNG codec tests that need no fixtures: every filter type, the
 unsupported-input errors, and a property check of the decoder against
 an independent scalar filter encoder written from the spec (RFC 2083
-§6), over every color type, odd widths and per-row filter mixes."""
+§6), over every color type, odd widths and per-row filter mixes.  The
+mixes put None/Sub/Up rows inside Average/Paeth spans, make one-row
+spans, and start images with an Average or Paeth row (zero prior), so
+the decoder's wavefront sees each predictor next to the others."""
 
 from __future__ import annotations
 
@@ -99,7 +102,7 @@ def test_png_decoder_rejects_unsupported():
 
 _COLOR_TYPES = [0, 2, 3, 4, 6]
 _WIDTHS = [1, 2, 7, 300]
-_HEIGHTS = [1, 5]
+_HEIGHTS = [1, 5, 40]
 _NCH = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
@@ -177,7 +180,7 @@ def _samples(color_type: int, width: int, height: int) -> np.ndarray:
     return ((ramp + rng.integers(0, 33, size=ramp.shape)) % 256).astype(np.uint8)
 
 
-@pytest.mark.parametrize("choice", ["random", "min_abs_sum"])
+@pytest.mark.parametrize("choice", ["random", "min_abs_sum", "first_row_average_paeth", "lone_spans"])
 @pytest.mark.parametrize("height", _HEIGHTS)
 @pytest.mark.parametrize("width", _WIDTHS)
 @pytest.mark.parametrize("color_type", _COLOR_TYPES)
@@ -190,8 +193,18 @@ def test_decode_inverts_reference_filters(color_type, width, height, choice):
         palette = np.random.default_rng(width).integers(0, 256, size=(256, 3), dtype=np.uint8)
         plte = palette.tobytes()
         expected = palette[samples]
+    rng = np.random.default_rng([color_type, width, height])
     if choice == "random":
         filters = np.random.default_rng([width, height]).integers(0, 5, size=height).tolist()
+    elif choice == "first_row_average_paeth":
+        filters = rng.integers(0, 5, size=height).tolist()
+        filters[0] = 3 + (color_type + width) % 2
+    elif choice == "lone_spans":
+        # None/Sub/Up rows with every fourth row Average or Paeth: spans
+        # of one row whose prior row another filter decoded
+        filters = rng.integers(0, 3, size=height).tolist()
+        filters[1::4] = rng.integers(3, 5, size=len(filters[1::4])).tolist()
+    if choice != "min_abs_sum":
 
         def choose(y, row, prior, bpp):
             return filters[y]
@@ -222,3 +235,17 @@ def test_bad_filter_type_raises():
     raw = b"\x00" + bytes(6) + b"\x05" + bytes(6)  # 2x2 RGB, row 1 has filter 5
     with pytest.raises(ValueError, match="^bad filter type 5$"):
         decode_png(_png_file(raw, 2, 2, 2))
+
+
+def test_tall_spans_decode_in_bands(monkeypatch):
+    """A span taller than one wavefront's buffer runs as several; each
+    band's prior row is the last row of the band before it."""
+    import img2dataset_spark.functions.png as png
+
+    rng = np.random.default_rng(5)
+    samples = rng.integers(0, 256, size=(40, 7 * 3), dtype=np.uint8)
+    filters = rng.integers(0, 5, size=40).tolist()
+    data = _png_from_samples(samples, 2, lambda y, row, prior, bpp: filters[y])
+    for budget in (1, 60, 400):  # one-row bands, a few rows, ~10 rows
+        monkeypatch.setattr(png, "_SKEW_SAMPLES", budget)
+        assert np.array_equal(decode_png(data).reshape(40, -1), samples), budget

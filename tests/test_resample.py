@@ -1,10 +1,12 @@
-"""Numpy resampling tests: analytically exact cases per mode, plus the
-full png->png resize path through the fused transform closure (T2-T5
+"""Numpy resampling tests: analytically exact cases per mode, the
+banded resize against the dense weight-matrix product it replaced, plus
+the full png->png resize path through the fused transform closure (T2-T5
 pixel semantics, reference resizer.py:178-215)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from img2dataset_spark.functions.png import decode_png, encode_png
 from img2dataset_spark.functions.resample import (
@@ -66,6 +68,82 @@ class TestResize:
         p = pad_center(img, 8, 6, value=255)
         assert p.shape == (6, 8)
         assert p[0, 0] == 255 and np.array_equal(p[1:5, 1:7], img)
+
+
+def _dense_resize(img: np.ndarray, out_w: int, out_h: int, mode: str) -> np.ndarray:
+    """The reference: both axes as dense (n_out, n_in) matrix products,
+    rows first, as `resize` computed them before it went banded."""
+    arr = np.asarray(img)
+    squeeze = arr.ndim == 2
+    if squeeze:
+        arr = arr[:, :, None]
+    h, w, c = arr.shape
+    if (out_h, out_w) == (h, w):
+        out = arr.astype(np.float64)
+    else:
+        Wh = _axis_weights(h, out_h, mode)
+        Ww = _axis_weights(w, out_w, mode)
+        tmp = (Wh @ arr.reshape(h, w * c).astype(np.float64)).reshape(out_h, w, c)
+        out = (Ww @ tmp.transpose(1, 0, 2).reshape(w, out_h * c)).reshape(
+            out_w, out_h, c
+        ).transpose(1, 0, 2)
+    if np.issubdtype(img.dtype, np.integer):
+        out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
+    else:
+        out = out.astype(img.dtype)
+    return out[:, :, 0] if squeeze else out
+
+
+_MODES = ["nearest", "linear", "cubic", "lanczos4", "area"]
+# (in_w, in_h) -> (out_w, out_h)
+_GEOMETRIES = {
+    "downscale": ((37, 29), (11, 8)),
+    "upscale": ((9, 7), (23, 30)),
+    "identity": ((13, 10), (13, 10)),
+    "one_px_side": ((1, 17), (5, 1)),
+}
+
+
+class TestBandedMatchesDense:
+    @pytest.mark.parametrize("channels", [0, 3, 4])
+    @pytest.mark.parametrize("geometry", sorted(_GEOMETRIES))
+    @pytest.mark.parametrize("mode", _MODES)
+    def test_uint8_equal(self, mode, geometry, channels):
+        (w, h), (ow, oh) = _GEOMETRIES[geometry]
+        shape = (h, w, channels) if channels else (h, w)
+        img = np.random.default_rng([w, h, channels]).integers(0, 256, shape, dtype=np.uint8)
+        assert np.array_equal(resize(img, ow, oh, mode), _dense_resize(img, ow, oh, mode))
+
+    @pytest.mark.parametrize("dtype", [np.float32, np.float64])
+    @pytest.mark.parametrize("channels", [0, 3, 4])
+    @pytest.mark.parametrize("geometry", sorted(_GEOMETRIES))
+    @pytest.mark.parametrize("mode", _MODES)
+    def test_float_equal(self, mode, geometry, channels, dtype):
+        """Float outputs are not rounded, so the two summation orders
+        (taps in order against BLAS) may differ in the last bits: equal
+        to within 16 float64 ulps of the input bound, or one ulp of the
+        output dtype when that is coarser."""
+        (w, h), (ow, oh) = _GEOMETRIES[geometry]
+        shape = (h, w, channels) if channels else (h, w)
+        bound = 300.0
+        img = np.random.default_rng([w, h, channels, 1]).uniform(-bound, bound, shape).astype(dtype)
+        got, want = resize(img, ow, oh, mode), _dense_resize(img, ow, oh, mode)
+        assert got.dtype == want.dtype == dtype and got.shape == want.shape
+        tol = bound * max(16 * np.finfo(np.float64).eps, np.finfo(dtype).eps)
+        assert np.abs(got.astype(np.float64) - want).max() <= tol
+
+    def test_photo_sized_downscales_equal(self):
+        """The transform's own geometry: a photo-sized smooth image to a
+        256 long side, every mode."""
+        rng = np.random.default_rng(3)
+        y, x = np.mgrid[0:301, 0:417]
+        img = np.clip(
+            128 + 90 * np.sin(x / 23.0) * np.cos(y / 17.0)
+            + rng.normal(0, 4, (301, 417)), 0, 255,
+        ).astype(np.uint8)
+        img = np.stack([img, img[::-1], img[:, ::-1]], axis=-1)
+        for mode in _MODES:
+            assert np.array_equal(resize(img, 256, 185, mode), _dense_resize(img, 256, 185, mode)), mode
 
 
 class TestPngResizeEndToEnd:

@@ -111,10 +111,10 @@ def test_worker_does_not_reread_spark_archives(spark):
 
 
 # Spark jobs one warm download() call launches over the HTTP fixture,
-# measured at parallelism 2, 4 and 8 (10) and 1 (6, one range bucket);
+# measured at parallelism 2, 4 and 8 (8) and 1 (6, one range bucket);
 # a call may launch fewer, never more
 DOWNLOAD_JOBS = {1: 6}
-DOWNLOAD_JOBS_PARALLEL = 10
+DOWNLOAD_JOBS_PARALLEL = 8
 
 
 def test_warm_download_jobs(spark, http_fixture, tmp_path):
