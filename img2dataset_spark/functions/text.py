@@ -2,15 +2,17 @@
 
 Beyond-reference operators for LLM training-data pipelines (SURVEY §7
 M6): tokenization, n-gram shingling, quality metrics, language-ID
-heuristic, document fingerprinting, and cross-engine hashing helpers.
+heuristic, document fingerprinting, and cross-engine hashing helpers
+(the MinHash coefficients; the signatures themselves are the Arrow
+UDFs of functions/text_fast.py).
 
 Every function here is built exclusively from `pyspark.sql.functions`
 expressions so the hot path stays inside whole-stage codegen, and every
 formula has an ANSI-SQL equivalent (used by the DuckDB oracle in
 __spark_entry__.py).  Cross-engine determinism rules:
 
-  - hashes are md5 hex STRINGS (lexicographic min == uniform minhash;
-    avoids engine-specific 64-bit hash functions)
+  - hashes are md5 hex STRINGS (avoids engine-specific 64-bit hash
+    functions)
   - hex -> int uses an explicit per-hex-digit fold (both engines lack a
     common hex-parse builtin); 8 hex digits = 32 bits, overflow-safe
   - round-half behavior differs between engines, so derived floats are
@@ -101,75 +103,23 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(F.lower(text), F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-MINHASH_PRIME = 2305843009213693951  # 2^61 - 1 (Mersenne): a*h+b < 2^60+2^28 fits int64
+MINHASH_PRIME = 2147483647  # 2^31 - 1 (Mersenne): a*h'+b < 2^62 fits int64
 
 
 def minhash_coeffs(num_hashes: int = 32, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic affine-permutation coefficients (a odd, b) shared
-    verbatim by the Spark expression and the SQL oracle."""
+    """Deterministic Carter–Wegman coefficients (a, b) of the MinHash
+    family h -> (a*(h mod P) + b) mod P over P = MINHASH_PRIME, with
+    a in [1, P) and b in [0, P): drawn over the whole field, so each
+    function reorders the shingles instead of preserving their order.
+    Shared verbatim by the band UDF (text_fast.make_minhash_bands_udf)
+    and the SQL oracle."""
     import random
 
     rng = random.Random(seed)
     return [
-        (rng.randrange(1, 1 << 28) | 1, rng.randrange(0, 1 << 28))
+        (rng.randrange(1, MINHASH_PRIME), rng.randrange(0, MINHASH_PRIME))
         for _ in range(num_hashes)
     ]
-
-
-def shingle_hashes32(shingle_arr: Column) -> Column:
-    """ONE 32-bit integer hash per shingle (hex fold of md5).  All minhash
-    permutations derive from this single digest — higher-order functions
-    run interpreted (outside whole-stage codegen), so the expensive md5
-    must be evaluated once per shingle, not once per (shingle, seed)."""
-    return F.transform(shingle_arr, lambda x: hex_to_int32(F.md5(x.cast("binary"))))
-
-
-def minhash_from_hashes(hashes: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature from a precomputed per-shingle int-hash array:
-    sig[s] = min over shingles of (a_s*h + b_s) mod P, with fixed
-    coefficients from `minhash_coeffs` — the classic single-hash +
-    affine-permutation family, bit-identical across engines in int64.
-
-    IMPORTANT for performance: pass `hashes` as a materialized COLUMN
-    (see `shingle_hashes32`), not an inline expression — this builder
-    references it num_hashes times.
-    """
-    p = F.lit(MINHASH_PRIME)
-
-    def _perm(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % p
-
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _perm(a, b)))
-            for a, b in minhash_coeffs(num_hashes)
-        ]
-    )
-
-
-def seeded_minhash(shingle_arr: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature straight from a shingle array (convenience; for
-    the performant two-step form see shingle_hashes32 + minhash_from_hashes)."""
-    return minhash_from_hashes(shingle_hashes32(shingle_arr), num_hashes)
-
-
-def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Group a minhash signature into band keys 'b:md5(concat(rows))'.
-    Integer signature elements are rendered as decimal strings (identical
-    in DuckDB's array_to_string)."""
-    sig_str = F.transform(signature, lambda v: v.cast("string"))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.concat(
-            b.cast("string"),
-            F.lit(":"),
-            F.md5(
-                F.array_join(
-                    F.slice(sig_str, b * rows_per_band + 1, rows_per_band), ","
-                ).cast("binary")
-            ),
-        ),
-    )
 
 
 def _hex_digit_val(ch: Column) -> Column:
@@ -185,53 +135,6 @@ def hex_to_int32(hex_str: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, i: acc * 16 + _hex_digit_val(hex_str.substr(i, F.lit(1))).cast("long"),
     )
-
-
-def simhash_from_hashes(hashes: Column) -> Column:
-    """32-bit SimHash from a precomputed per-shingle int-hash array: bit b
-    of the output is 1 when the majority of shingle hashes have bit b set
-    (classic Charikar simhash with +/-1 votes).
-
-    Single pass over the hashes: the vote accumulator is a 32-element
-    array updated with zip_with — higher-order functions are interpreted
-    (no codegen), so the per-(shingle, bit) work must be trivial
-    arithmetic and each hash must be visited exactly once.
-    """
-    zeros = F.array_repeat(F.lit(0).cast("long"), 32)
-    bits = F.sequence(F.lit(0), F.lit(31))
-    # ((h div 2^b) mod 2)*2 - 1: +/-1 vote for bit b of hash h — arithmetic
-    # form because the pyspark shiftright wrapper only takes literal shift
-    # amounts, and the same formula runs verbatim in the SQL oracle
-    votes = F.aggregate(
-        hashes,
-        zeros,
-        lambda acc, h: F.zip_with(
-            acc,
-            bits,
-            lambda v, b: v
-            + F.pmod(
-                F.floor(h / F.pow(F.lit(2.0), b).cast("long")).cast("long"), F.lit(2)
-            )
-            * 2
-            - 1,
-        ),
-    )
-    # Fold votes -> int.  `votes` must stay an ARRAY ARGUMENT of the HOFs
-    # (evaluated once per row), never appear inside a lambda body (which
-    # would re-evaluate the whole aggregation per element).
-    powers = F.array(*[F.lit(2**b).cast("long") for b in range(32)])
-    bit_values = F.zip_with(
-        votes,
-        powers,
-        lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bit_values, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
-def simhash32(shingle_arr: Column) -> Column:
-    """32-bit SimHash straight from a shingle array (convenience; for the
-    performant two-step form see shingle_hashes32 + simhash_from_hashes)."""
-    return simhash_from_hashes(shingle_hashes32(shingle_arr))
 
 
 def punct_ratio(text: Column) -> Column:

@@ -1,27 +1,26 @@
 """Arrow-vectorized (pandas UDF) implementations of the dedup hot path.
 
-`functions.text` expresses tokenize -> shingle -> hash -> minhash/simhash
-as pure Catalyst expressions.  That form is the right *specification*
-(and what the SQL oracle mirrors), but Spark evaluates higher-order
-functions (transform/aggregate/zip_with) in INTERPRETED mode — outside
-whole-stage codegen — and the optimizer freely inlines the big lambda
-trees into multiple consumers, so the md5-per-shingle work explodes by
-orders of magnitude on real plans (measured: 5k docs x ~50 shingles
-took minutes instead of seconds).
-
-These UDFs compute the exact same formulas batch-at-a-time with
-hashlib (C md5) + numpy (vectorized affine permutations / bit votes):
+Spark evaluates higher-order functions (transform/aggregate/zip_with)
+in INTERPRETED mode — outside whole-stage codegen — and the optimizer
+freely inlines big lambda trees into multiple consumers, so a Catalyst
+expression form of tokenize -> shingle -> hash -> minhash/simhash
+exploded the md5-per-shingle work by orders of magnitude on real plans
+(measured: 5k docs x ~50 shingles took minutes instead of seconds).
+These UDFs are the only implementation; they compute, batch-at-a-time
+with hashlib (C md5) + numpy:
 
   token     = split(trim(lower(text)), '\\s+')
   shingle   = k consecutive tokens joined by ' ', distinct
   h32       = int(md5(shingle)[:8 hex], 16)            (32-bit fold)
-  minhash_s = min over shingles of (a_s*h32 + b_s) mod (2^61-1)
+  minhash_s = min over shingles of (a_s*(h32 mod P) + b_s) mod P,
+              P = 2^31-1 (Carter–Wegman; < 2^62, exact in int64)
   band key  = '<b>:' || md5(sig[b*r:(b+1)*r] joined by ',')
   simhash   = bit b set iff sum over shingles of ((h>>b & 1)*2-1) > 0
 
-Coefficients (a_s, b_s) come from `text.minhash_coeffs` — shared with
-the expression form and the DuckDB oracle, so all three agree
-bit-for-bit.
+Coefficients (a_s, b_s) come from `text.minhash_coeffs`.  The DuckDB
+oracle (oracles.py) is the reference specification: it recomputes the
+same formulas in SQL with the same coefficients, and the oracle tests
+require bit-identical results.
 
 Factories (not module-level UDFs): pandas_udf registration requires an
 active SparkSession.
@@ -29,6 +28,7 @@ active SparkSession.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 
@@ -58,14 +58,6 @@ def _shingle_set(text: str | None, k: int) -> list[str]:
     return list(seen)
 
 
-def _h32(shingle_list: list[str]) -> np.ndarray:
-    return np.fromiter(
-        (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16) for s in shingle_list),
-        dtype=np.int64,
-        count=len(shingle_list),
-    )
-
-
 def _h32_one(shingle: str) -> int:
     """32-bit md5 fold of one shingle — int(hexdigest[:8], 16), identical
     to functions.text.hex_to_int32(md5(s)) and the SQL oracle's per-digit
@@ -84,20 +76,6 @@ def _h32_set(text: str | None, k: int) -> list[int]:
     return list(seen)
 
 
-def make_shingle_set_udf(k: int = 3):
-    """text -> distinct word-k-gram shingles (array<string>).  The
-    STRING form — kept for callers that need the shingles themselves;
-    the dedup family stores `make_shingle_h32_udf` sets instead (8
-    bytes/shingle vs ~(5 + k·avg_token) — the representation that keeps
-    the persisted frame in memory at corpus scale, SCALE.md §5.3)."""
-
-    @pandas_udf("array<string>")
-    def shingle_set(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _shingle_set(t, k))
-
-    return shingle_set
-
-
 def make_shingle_h32_udf(k: int = 3):
     """text -> distinct 32-bit shingle hashes (array<long>) — the compact
     dedup-family representation.  One md5 per shingle HERE (at set-build
@@ -114,31 +92,45 @@ def make_shingle_h32_udf(k: int = 3):
     return shingle_h32
 
 
+@functools.lru_cache(maxsize=None)
+def _coeff_columns(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
+    coeffs = minhash_coeffs(num_hashes)
+    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
+    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+    return A, B
+
+
+def _permuted(h32, num_hashes: int) -> np.ndarray:
+    """(num_hashes, n) matrix of every MinHash function applied to every
+    shingle hash: (a*(h mod P) + b) mod P, exact in int64 (< 2^62)."""
+    A, B = _coeff_columns(num_hashes)
+    h = np.asarray(h32, dtype=np.int64)[None, :] % MINHASH_PRIME
+    return (A * h + B) % MINHASH_PRIME
+
+
+def _band_keys(h32, num_hashes: int, num_bands: int) -> list[str]:
+    """LSH band keys of one h32 shingle set; [] for an empty set."""
+    if h32 is None or len(h32) == 0:
+        return []
+    rows = num_hashes // num_bands
+    sig = _permuted(h32, num_hashes).min(axis=1)
+    return [
+        f"{b}:" + hashlib.md5(
+            ",".join(str(int(v)) for v in sig[b * rows : (b + 1) * rows]).encode()
+        ).hexdigest()
+        for b in range(num_bands)
+    ]
+
+
 def make_minhash_bands_udf(num_hashes: int = 32, num_bands: int = 8):
     """h32 shingle set (array<long>) -> LSH band keys (array<string>);
     [] for empty sets.  Input is the PRE-HASHED set from
     make_shingle_h32_udf — the md5-per-shingle work happens once at
     set-build time, not per consumer."""
-    rows = num_hashes // num_bands
-    coeffs = minhash_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-
-    def bands_of(h32_list) -> list[str]:
-        if h32_list is None or len(h32_list) == 0:
-            return []
-        h = np.asarray(h32_list, dtype=np.int64)[None, :]
-        sig = ((A * h + B) % MINHASH_PRIME).min(axis=1)
-        return [
-            f"{b}:" + hashlib.md5(
-                ",".join(str(int(v)) for v in sig[b * rows : (b + 1) * rows]).encode()
-            ).hexdigest()
-            for b in range(num_bands)
-        ]
 
     @pandas_udf("array<string>")
     def minhash_bands(sets: pd.Series) -> pd.Series:
-        return sets.map(bands_of)
+        return sets.map(lambda h: _band_keys(h, num_hashes, num_bands))
 
     return minhash_bands
 

@@ -9,8 +9,14 @@ Five dedup families, all DataFrame-native (SURVEY §7 M6):
   embedding_dup_pairs  — cosine near-duplicate pairs (see similarity.py)
 
 Scale design:
-  - Fingerprints/signatures are computed with pure built-in expressions
-    (functions/text.py) — whole-stage codegen, no Python.
+  - The exact-dedup fingerprint is a built-in expression (md5,
+    whole-stage codegen).  Shingle sets, MinHash band keys and simhash
+    are Arrow-vectorized pandas UDFs (functions/text_fast.py): one md5
+    per shingle, numpy for the 32 hash functions.
+  - Each stage is written once and shared by the batch operators and
+    their streaming twins (streaming/dedup.py): the banding
+    (_minhash_bands), the hot-bucket cap (_cap_buckets, next to the
+    ledger capped_bucket_stats) and the exact Jaccard (_jaccard).
   - The only shuffles are (a) the band explode + repartition by band key
     and (b) the bucket self-join; both are keyed on high-cardinality
     hashes, so skew is bounded by design (a band bucket is a candidate
@@ -35,6 +41,7 @@ from img2dataset_spark.functions.text_fast import (
     make_shingle_h32_udf,
     make_simhash_udf,
 )
+from img2dataset_spark.operators.similarity import quote_ident, round6
 
 # Stack of active dedup_cache_scope() collectors; _persisted registers
 # into the innermost one so the scope can unpersist on exit.  Stored
@@ -51,15 +58,6 @@ def _scope_stack() -> list[list[DataFrame]]:
     if stack is None:
         stack = _SCOPE_TL.stack = []
     return stack
-
-
-def round6(col: Column) -> Column:
-    """Floor-round to 6 dp — floor(x*1e6 + 0.5)/1e6, identical in the
-    SQL oracles.  The ONE rounding expression every similarity verdict
-    (batch minhash/ngram verify, streaming wave admission) compares to
-    its threshold, so batch and stream can never disagree on a
-    boundary-jaccard pair."""
-    return F.floor(col * 1e6 + F.lit(0.5)) / 1e6
 
 
 def _persisted(df: DataFrame) -> DataFrame:
@@ -167,6 +165,39 @@ def doc_shingles(
     )
 
 
+def _nonempty_shingles(
+    df: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """:func:`doc_shingles` without the documents too short to shingle,
+    which can neither band nor verify."""
+    return doc_shingles(df, text_col, id_col, k).filter(
+        F.size("shingle_set") > 0
+    )
+
+
+def _minhash_bands(
+    shingle_set: Column, num_hashes: int, num_bands: int
+) -> Column:
+    """LSH band keys (array<string>) of an h32 shingle set — the ONE
+    banding every MinHash plan runs (batch self-join, wave probe,
+    corpus index, streaming screens), so a stream-side band hit means
+    exactly that the batch plan would have joined the pair."""
+    return make_minhash_bands_udf(num_hashes, num_bands)(shingle_set)
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of the h32 shingle-set columns ``a`` and ``b``,
+    floor-rounded to 6 dp (:func:`round6`, identical in the SQL
+    oracles) — the value every batch and streaming verdict compares to
+    its threshold, so the two can never disagree on a boundary pair.
+    |A ∪ B| is |A| + |B| − |A ∩ B| (avoids engine-specific union dedup
+    semantics in the oracle); both sets must not be empty.  One SQL
+    string: the JVM parses it in one round trip."""
+    a, b = quote_ident(a), quote_ident(b)
+    inter = f"size(array_intersect({a}, {b}))"
+    return round6(F.expr(f"{inter} / (size({a}) + size({b}) - {inter})"))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -198,15 +229,9 @@ def minhash_lsh_pairs(
     the bucket, and its vectors (fixed 64 floats) dwarf a thin pair
     row; h32 shingle sets have neither property.
     """
-    docs = _persisted(
-        doc_shingles(df, text_col, id_col, k).filter(F.size("shingle_set") > 0)
-    )
-    minhash_bands = make_minhash_bands_udf(num_hashes, num_bands)
-    banded = _persisted(
-        docs.select(
-            id_col, F.explode(minhash_bands(F.col("shingle_set"))).alias("band")
-        )
-    )
+    docs = _persisted(_nonempty_shingles(df, text_col, id_col, k))
+    bands = _minhash_bands(F.col("shingle_set"), num_hashes, num_bands)
+    banded = _persisted(docs.select(id_col, F.explode(bands).alias("band")))
     # cap degenerate buckets (giant near-dup clusters) to bound the
     # self-join.  NOTE (measured, round 5): replacing this persist +
     # bucket-stats side-join with the band-partitioned window cap that
@@ -215,11 +240,7 @@ def minhash_lsh_pairs(
     # UDF subtree re-executes per self-join side, which dwarfs the join
     # it saves.  The two operators differ in per-row banding cost, so
     # they get different cap plans on purpose.
-    bucket_sizes = banded.groupBy("band").count()
-    banded = banded.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("band"),
-        "band",
-    )
+    banded = _cap_buckets(banded, ["band"], max_bucket_size)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(b, "band")
@@ -257,45 +278,34 @@ def minhash_lsh_pairs_vs(
     themselves).  Returns (id_a = new id, id_b = corpus id, jaccard
     >= threshold), 6-dp floor-rounded.
 
-    Plan shape at 100 TB: both sides' shingle frames persist once
-    (each feeds its banding subtree AND the verify join — the measured
-    minhash trade-off, see minhash_lsh_pairs); hot bands are capped on
-    the CORPUS side only (a giant corpus bucket is a degenerate
-    boilerplate cluster; the cap bounds join fan-out at
+    It is :func:`build_minhash_index` over the corpus, persisted once
+    (it feeds the band probe AND the verify join, so the shingle and
+    band UDFs run once per corpus row — the measured minhash trade-off,
+    see minhash_lsh_pairs), probed by :func:`minhash_lsh_pairs_vs_index`.
+
+    Plan shape at 100 TB: the wave's shingle frame persists once too;
+    hot bands are capped on the CORPUS side only (a giant corpus bucket
+    is a degenerate boilerplate cluster; the cap bounds join fan-out at
     max_bucket_size x new-side band rows, and capping the small wave
     side would cost recall without bounding anything the corpus cap
     has not); the band equi-join is a plain shuffle join AQE sizes —
     a small wave against a huge index broadcasts the WAVE, never the
     index.  Corpus-side banding cost is paid once per wave; amortize
-    across waves by persisting the banded corpus to parquet
-    (streaming.dedup.static_band_index has the write-once shape)."""
-    docs_new = _persisted(
-        doc_shingles(new, text_col, id_col, k).filter(F.size("shingle_set") > 0)
+    across waves by writing the index to parquet once and probing it
+    with minhash_lsh_pairs_vs_index."""
+    index = _persisted(
+        build_minhash_index(corpus, text_col, id_col, k, num_hashes, num_bands)
     )
-    docs_ref = _persisted(
-        doc_shingles(corpus, text_col, id_col, k).filter(
-            F.size("shingle_set") > 0
-        )
-    )
-    minhash_bands = make_minhash_bands_udf(num_hashes, num_bands)
-    banded_new = docs_new.select(
-        id_col, F.explode(minhash_bands(F.col("shingle_set"))).alias("band")
-    )
-    banded_ref = _persisted(
-        docs_ref.select(
-            id_col, F.explode(minhash_bands(F.col("shingle_set"))).alias("band")
-        )
-    )
-    bucket_sizes = banded_ref.groupBy("band").count()
-    banded_ref = banded_ref.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("band"),
-        "band",
-    )
-    a = banded_new.select(F.col(id_col).alias("id_a"), "band")
-    b = banded_ref.select(F.col(id_col).alias("id_b"), "band")
-    cand = a.join(b, "band").select("id_a", "id_b").distinct()
-    return _verified_jaccard(
-        cand, docs_new, id_col, jaccard_threshold, docs_b=docs_ref
+    return minhash_lsh_pairs_vs_index(
+        new,
+        index,
+        text_col,
+        id_col,
+        k,
+        num_hashes,
+        num_bands,
+        jaccard_threshold,
+        max_bucket_size,
     )
 
 
@@ -318,13 +328,9 @@ def build_minhash_index(
     rides along because the probe's exact-Jaccard verification needs
     it (the streaming twin static_band_index stores bands only — its
     flagger never verifies)."""
-    docs = doc_shingles(corpus, text_col, id_col, k).filter(
-        F.size("shingle_set") > 0
-    )
-    minhash_bands = make_minhash_bands_udf(num_hashes, num_bands)
-    return docs.select(
-        id_col, "shingle_set", minhash_bands(F.col("shingle_set")).alias("bands")
-    )
+    docs = _nonempty_shingles(corpus, text_col, id_col, k)
+    bands = _minhash_bands(F.col("shingle_set"), num_hashes, num_bands)
+    return docs.select(id_col, "shingle_set", bands.alias("bands"))
 
 
 def minhash_lsh_pairs_vs_index(
@@ -345,20 +351,13 @@ def minhash_lsh_pairs_vs_index(
     k/num_hashes/num_bands arguments here apply to the NEW side's
     shingling/banding and must match the build's.  Only the wave pays
     a shingle/band pass; the corpus cost is the parquet scan."""
-    docs_new = _persisted(
-        doc_shingles(new, text_col, id_col, k).filter(F.size("shingle_set") > 0)
-    )
-    minhash_bands = make_minhash_bands_udf(num_hashes, num_bands)
-    banded_new = docs_new.select(
-        id_col, F.explode(minhash_bands(F.col("shingle_set"))).alias("band")
-    )
-    banded_ref = _persisted(
-        index.select(id_col, F.explode("bands").alias("band"))
-    )
-    bucket_sizes = banded_ref.groupBy("band").count()
-    banded_ref = banded_ref.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("band"),
-        "band",
+    docs_new = _persisted(_nonempty_shingles(new, text_col, id_col, k))
+    bands = _minhash_bands(F.col("shingle_set"), num_hashes, num_bands)
+    banded_new = docs_new.select(id_col, F.explode(bands).alias("band"))
+    banded_ref = _cap_buckets(
+        _persisted(index.select(id_col, F.explode("bands").alias("band"))),
+        ["band"],
+        max_bucket_size,
     )
     a = banded_new.select(F.col(id_col).alias("id_a"), "band")
     b = banded_ref.select(F.col(id_col).alias("id_b"), "band")
@@ -424,9 +423,7 @@ def ngram_jaccard_pairs(
             "self-join; pass block_col=... (the scalable path) or opt in "
             "explicitly with allow_quadratic=True for small verification runs"
         )
-    docs = _persisted(
-        doc_shingles(df, text_col, id_col, k).filter(F.size("shingle_set") > 0)
-    )
+    docs = _persisted(_nonempty_shingles(df, text_col, id_col, k))
     if block_col is not None:
         blocked = docs.join(df.select(id_col, block_col), id_col)
         a, b = blocked.alias("a"), blocked.alias("b")
@@ -452,10 +449,8 @@ def _verified_jaccard(
     threshold: float,
     docs_b: DataFrame | None = None,
 ) -> DataFrame:
-    """Join (h32) shingle sets back and compute exact Jaccard, rounded
-    6 dp.  |A ∪ B| via |A| + |B| − |A ∩ B| (avoids engine-specific
-    union dedup semantics in the oracle); array_intersect on longs is
-    also cheaper than on strings.
+    """Join (h32) shingle sets back and keep the pairs whose
+    :func:`_jaccard` reaches the threshold.
 
     ``docs_b`` supplies the id_b side's shingle sets when the candidate
     pairs span TWO corpora (minhash_lsh_pairs_vs); default is the
@@ -465,21 +460,21 @@ def _verified_jaccard(
     whose set sizes differ by more than the threshold ratio can never
     pass — they skip the O(|A|*|B|) intersection entirely.  Pure pruning
     (never removes a qualifying pair), so the oracle is unchanged."""
-    sa = docs.select(F.col(id_col).alias("id_a"), F.col("shingle_set").alias("sa"))
-    sb = (docs_b if docs_b is not None else docs).select(
-        F.col(id_col).alias("id_b"), F.col("shingle_set").alias("sb")
+    ident = quote_ident(id_col)
+    sa = docs.selectExpr(f"{ident} AS id_a", "shingle_set AS sa")
+    sb = (docs_b if docs_b is not None else docs).selectExpr(
+        f"{ident} AS id_b", "shingle_set AS sb"
     )
-    na, nb = F.size("sa"), F.size("sb")
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = na + nb - inter
-    jacc = inter / union
+    # threshold - 1e-6: the accept filter compares the 6-dp ROUNDED
+    # jaccard, which can round up by half an ulp — keep that margin
+    ratio = f"{float(threshold) - 1e-6!r}D"
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        # threshold - 1e-6: the accept filter compares the 6-dp ROUNDED
-        # jaccard, which can round up by half an ulp — keep that margin
-        .where(F.least(na, nb) >= (threshold - 1e-6) * F.greatest(na, nb))
-        .withColumn("jaccard", round6(jacc))
+        .where(
+            f"least(size(sa), size(sb)) >= greatest(size(sa), size(sb)) * {ratio}"
+        )
+        .withColumn("jaccard", _jaccard("sa", "sb"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -553,11 +548,7 @@ def hamming_pairs64(
     # unlike graph._symmetrize's lesson: it is pure codegen bit
     # arithmetic over an 8-byte hash (no UDF, no join), so the second
     # execution is a cheap re-scan, cheaper than persisting it.
-    bucket_sizes = banded.groupBy("w", "val").count()
-    banded = banded.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("w", "val"),
-        ["w", "val"],
-    )
+    banded = _cap_buckets(banded, ["w", "val"], max_bucket_size)
     a, b = banded.alias("a"), banded.alias("b")
     xor = F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
     return (
@@ -574,6 +565,26 @@ def hamming_pairs64(
     )
 
 
+def _bucket_sizes(banded: DataFrame, key_cols: list[str]) -> DataFrame:
+    return banded.groupBy(*key_cols).count()
+
+
+def _cap_buckets(
+    banded: DataFrame, key_cols: list[str], max_bucket_size: int
+) -> DataFrame:
+    """``banded`` without the rows of buckets (groups of ``key_cols``)
+    holding more than ``max_bucket_size`` rows: a giant bucket is a
+    degenerate near-dup cluster, and dropping it whole bounds the
+    self-join's fan-out.  :func:`capped_bucket_stats` counts what this
+    drops from the same grouping."""
+    ok = (
+        _bucket_sizes(banded, key_cols)
+        .filter(F.col("count") <= max_bucket_size)
+        .select(*key_cols)
+    )
+    return banded.join(ok, key_cols)
+
+
 def capped_bucket_stats(
     banded: DataFrame, key_cols: list[str], max_bucket_size: int
 ) -> DataFrame:
@@ -586,7 +597,7 @@ def capped_bucket_stats(
     path stays output-only); callers that need the recall ledger run
     this one extra agg over the SAME banding expression, so the two
     can never disagree about what was dropped."""
-    sizes = banded.groupBy(*[F.col(c) for c in key_cols]).count()
+    sizes = _bucket_sizes(banded, key_cols)
     over = F.col("count") > max_bucket_size
     return sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),
@@ -707,10 +718,8 @@ def simhash_pairs(
     distinct (id_a, id_b, hamming).
     """
     simhash = make_simhash_udf()
-    docs = (
-        doc_shingles(df, text_col, id_col, k)
-        .filter(F.size("shingle_set") > 0)
-        .select(F.col(id_col), simhash(F.col("shingle_set")).alias("simhash"))
+    docs = _nonempty_shingles(df, text_col, id_col, k).select(
+        F.col(id_col), simhash(F.col("shingle_set")).alias("simhash")
     )
 
     def rotated_block(r: int):

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from img2dataset_spark.functions import text as X
+from img2dataset_spark.operators.similarity import round6
 
 _WS = re.compile(r"\s+")
 
@@ -84,10 +85,6 @@ GOPHER_RULES: dict[str, float] = {
 }
 
 
-def _round6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
 def _gram_mode_fraction(arr):
     """round6(top gram count / total grams) over a token/bigram array;
     NULL when the array is empty (or null) — exactly the
@@ -121,7 +118,7 @@ def _gram_mode_fraction(arr):
             x.alias("prev"),
             (a["n"] + 1).alias("n"),
         ),
-        lambda a: F.when(a["n"] > 0, _round6(a["best"] / a["n"])),
+        lambda a: F.when(a["n"] > 0, round6(a["best"] / a["n"])),
     )
     return frac
 
@@ -205,11 +202,11 @@ def quality_flags(
     n_chars_no_ws = F.length(
         F.regexp_replace(F.trim(F.col(text_col)), r"\s+", "")
     )
-    mean_len = _round6(
+    mean_len = round6(
         F.when(n_tokens > 0, n_chars_no_ws / n_tokens).otherwise(F.lit(0.0))
     )
-    swr = _round6(X.stopword_ratio(toks))
-    pr = _round6(X.punct_ratio(F.col(text_col)))
+    swr = round6(X.stopword_ratio(toks))
+    pr = round6(X.punct_ratio(F.col(text_col)))
 
     j = with_repetition_fractions(
         df.select(F.col(id_col), F.col(text_col)), text_col

@@ -47,7 +47,10 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def round6(c: Column) -> Column:
-    """Engine-portable rounding: floor(x*1e6 + 0.5)/1e6."""
+    """Engine-portable rounding: floor(x*1e6 + 0.5)/1e6, identical in
+    the SQL oracles (round-half behavior differs between engines).  The
+    one rounding every similarity verdict compares to its threshold,
+    so batch and stream can never disagree on a boundary pair."""
     return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 

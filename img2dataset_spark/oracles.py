@@ -388,13 +388,14 @@ WHERE jaccard >= 0.3
 """
 
 def _minhash_sig_sql() -> str:
-    """sig[s] = min((a_s*h + b_s) % P) over the h32 shingle set —
-    same coefficients as the Spark expression
-    (functions.text.minhash_coeffs); ss already holds the h32 values."""
+    """sig[s] = min((a_s*(h % P) + b_s) % P) over the h32 shingle set —
+    same coefficients as the band UDF (functions.text.minhash_coeffs);
+    ss already holds the h32 values."""
     from img2dataset_spark.functions.text import MINHASH_PRIME, minhash_coeffs
 
+    p = MINHASH_PRIME
     elems = ", ".join(
-        f"list_min(list_transform(ss, h -> ({a}::BIGINT * h + {b}) % {MINHASH_PRIME}))"
+        f"list_min(list_transform(ss, h -> ({a}::BIGINT * (h % {p}) + {b}) % {p}))"
         for a, b in minhash_coeffs(32)
     )
     return f"[{elems}]"

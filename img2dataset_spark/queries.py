@@ -20,6 +20,7 @@ from pyspark.sql import Window as W
 
 from img2dataset_spark.functions.eventtime import ensure_event_time
 from img2dataset_spark.operators.sharding import with_key, with_shard_id
+from img2dataset_spark.operators.similarity import round6
 
 
 # Event-time columns in the testdata parquet.  The driver has shipped them
@@ -482,10 +483,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # Beyond-reference: text analysis (M6)
 # ---------------------------------------------------------------------------
 
-def _round6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
 def q_text_stats(spark, sf_dir):
     """Text quality metrics: token counts, ratios, fingerprint — all
     built-in expressions (functions/text.py)."""
@@ -498,8 +495,8 @@ def q_text_stats(spark, sf_dir):
         F.length("text").alias("n_chars"),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        _round6(X.stopword_ratio(toks)).alias("stopword_ratio"),
-        _round6(X.punct_ratio(F.col("text"))).alias("punct_ratio"),
+        round6(X.stopword_ratio(toks)).alias("stopword_ratio"),
+        round6(X.punct_ratio(F.col("text"))).alias("punct_ratio"),
         X.fingerprint(F.col("text")).alias("fingerprint"),
     )
 
@@ -583,7 +580,7 @@ def q_text_vocab(spark, sf_dir):
             "token",
             "tf",
             "df",
-            _round6(F.log(F.col("n_docs").cast("double") / F.col("df"))).alias("idf"),
+            round6(F.log(F.col("n_docs").cast("double") / F.col("df"))).alias("idf"),
         )
         .orderBy(F.desc("tf"), F.asc("token"))
         .limit(50)
@@ -632,8 +629,8 @@ def q_text_repetition(spark, sf_dir):
     )
     return tok_stats.join(bg_stats, "doc_id", "left").select(
         "doc_id",
-        _round6(F.col("top_tok") / F.col("n_tok")).alias("top_token_frac"),
-        _round6(F.col("top_bg") / F.col("n_bg")).alias("top_bigram_frac"),
+        round6(F.col("top_tok") / F.col("n_tok")).alias("top_token_frac"),
+        round6(F.col("top_bg") / F.col("n_bg")).alias("top_bigram_frac"),
     )
 
 
@@ -965,9 +962,9 @@ def q_text_length_quantiles(spark, sf_dir):
             "cnt",
             "min_chars",
             "max_chars",
-            _round6(F.col("_ps")[0]).alias("p50"),
-            _round6(F.col("_ps")[1]).alias("p90"),
-            _round6(F.col("_ps")[2]).alias("p99"),
+            round6(F.col("_ps")[0]).alias("p50"),
+            round6(F.col("_ps")[1]).alias("p90"),
+            round6(F.col("_ps")[2]).alias("p99"),
         )
     )
 

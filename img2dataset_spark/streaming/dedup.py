@@ -23,6 +23,15 @@ from pyspark.sql import functions as F
 
 from img2dataset_spark.functions.eventtime import ensure_event_time
 from img2dataset_spark.functions.text import fingerprint
+from img2dataset_spark.functions.text_fast import make_shingle_h32_udf
+from img2dataset_spark.operators.dedup import (
+    _cap_buckets,
+    _jaccard,
+    _minhash_bands,
+    build_minhash_index,
+    hash64_words,
+)
+from img2dataset_spark.operators.similarity import quote_ident
 
 
 def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -118,27 +127,27 @@ def static_band_index(
     num_bands: int = 8,
 ) -> DataFrame:
     """(band, ref_id) MinHash-LSH index of an EXISTING batch corpus,
-    for stream-static near-dup checks.  Same shingle/minhash/banding
-    formulas as the batch pair generator (operators.dedup) — including
-    the compact h32 shingle-set representation — so a stream-side
-    collision means exactly "this band would have joined in
-    minhash_lsh_pairs".  Persist the result: Spark re-reads the
-    static side every micro-batch, and a persisted tiny index turns
-    that into a memory lookup."""
-    from img2dataset_spark.functions.text_fast import (
-        make_minhash_bands_udf,
-        make_shingle_h32_udf,
-    )
-
-    shingle_h32 = make_shingle_h32_udf(k)
-    bands = make_minhash_bands_udf(num_hashes, num_bands)
-    docs = corpus.select(
-        F.col(id_col).alias("ref_id"),
-        shingle_h32(F.col(text_col)).alias("_ss"),
-    ).filter(F.size("_ss") > 0)
-    return docs.select(
-        "ref_id", F.explode(bands(F.col("_ss"))).alias("band")
+    for stream-static near-dup checks: the bands of
+    operators.dedup.build_minhash_index (the batch pair generator's
+    shingle/minhash/banding), so a stream-side collision means exactly
+    "this band would have joined in minhash_lsh_pairs".  Persist the
+    result: Spark re-reads the static side every micro-batch, and a
+    persisted tiny index turns that into a memory lookup."""
+    idx = build_minhash_index(corpus, text_col, id_col, k, num_hashes, num_bands)
+    return idx.select(
+        F.col(id_col).alias("ref_id"), F.explode("bands").alias("band")
     ).distinct()
+
+
+def _band_stream(
+    df: DataFrame, text_col: str, k: int, num_hashes: int, num_bands: int
+) -> DataFrame:
+    """``df`` + its h32 shingle set ``_ss`` + one row per MinHash band
+    key ``band`` — the batch plan's banding.  A document too short to
+    shingle keeps one NULL-band row, so it still gets a verdict."""
+    ss = df.withColumn("_ss", make_shingle_h32_udf(k)(F.col(text_col)))
+    bands = _minhash_bands(F.col("_ss"), num_hashes, num_bands)
+    return ss.withColumn("band", F.explode_outer(bands))
 
 
 def streaming_neardup_flags(
@@ -166,26 +175,9 @@ def streaming_neardup_flags(
     are streaming_exact_dedup's job (and a periodic batch
     minhash_lsh_pairs compaction covers stream-vs-stream near-dups —
     the same lambda split documented in the module header)."""
-    from img2dataset_spark.functions.text_fast import (
-        make_minhash_bands_udf,
-        make_shingle_h32_udf,
-    )
-
-    shingle_h32 = make_shingle_h32_udf(k)
-    bands = make_minhash_bands_udf(num_hashes, num_bands)
-    banded = (
-        stream.select(
-            F.col(id_col), F.col(ts_col),
-            shingle_h32(F.col(text_col)).alias("_ss"),
-        )
-        .withColumn(
-            "band",
-            F.explode_outer(
-                F.when(F.size("_ss") > 0, bands(F.col("_ss")))
-            ),
-        )
-        .drop("_ss")
-    )
+    banded = _band_stream(
+        stream.select(id_col, ts_col, text_col), text_col, k, num_hashes, num_bands
+    ).select(id_col, ts_col, "band")
     hits = ensure_event_time(banded.join(index, "band", "left"), ts_col)
     return (
         hits.withWatermark(ts_col, watermark)
@@ -194,6 +186,150 @@ def streaming_neardup_flags(
             F.count("ref_id").alias("n_band_hits"),
             F.max(F.col("ref_id").isNotNull()).alias("is_neardup"),
         )
+    )
+
+
+def _text_screen(
+    base: DataFrame,
+    keys: list[str],
+    index: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    num_hashes: int,
+    num_bands: int,
+    jaccard_threshold: float,
+    max_bucket_size: int,
+) -> DataFrame:
+    """(keys…, _match_ref) rows of the MinHash screen against a
+    build_minhash_index frame: band hits on the capped static side,
+    verified with the batch verifier's exact 6-dp Jaccard.  The static
+    side drops hot bands with the same corpus-side max_bucket_size cap
+    as minhash_lsh_pairs_vs_index, computed once on the static frame
+    (the stream-static join stays stateless)."""
+    banded = _band_stream(
+        base.select(*keys, text_col), text_col, k, num_hashes, num_bands
+    )
+    idx = index.select(
+        F.col(id_col).alias("_ref_id"),
+        F.col("shingle_set").alias("_ref_ss"),
+        F.explode("bands").alias("band"),
+    )
+    hits = banded.join(_cap_buckets(idx, ["band"], max_bucket_size), "band", "left")
+    # no band hit (or a short doc): NULL ref set, no verdict
+    jacc = F.when(
+        F.size("_ref_ss") > 0, _jaccard("_ss", "_ref_ss")
+    )
+    return hits.select(
+        *keys, F.when(jacc >= jaccard_threshold, F.col("_ref_id")).alias("_match_ref")
+    )
+
+
+def _image_screen(
+    base: DataFrame,
+    keys: list[str],
+    index: DataFrame,
+    hash_col: str,
+    id_col: str,
+    max_hamming: int,
+    max_bucket_size: int,
+) -> DataFrame:
+    """(keys…, _match_ref) rows of the perceptual screen: hash64_words
+    pigeonhole words (the batch hamming_pairs64 banding, so a
+    <= max_hamming near-dup ALWAYS shares a word) joined against the
+    capped static (id, hash) side and verified with bit_count(xor).  A
+    NULL hash keeps one zero-word row, so it still gets a verdict."""
+    banded = (
+        base.select(*keys, hash_col)
+        .withColumn(
+            "blk",
+            F.explode_outer(
+                F.when(
+                    F.col(hash_col).isNotNull(), hash64_words(hash_col, max_hamming)
+                )
+            ),
+        )
+        .select(
+            *keys, hash_col, F.col("blk.w").alias("w"), F.col("blk.val").alias("val")
+        )
+    )
+    idx = index.select(
+        F.col(id_col).alias("_ref_id"),
+        F.col(hash_col).alias("_ref_hash"),
+    ).select(
+        "_ref_id", "_ref_hash",
+        F.explode(hash64_words("_ref_hash", max_hamming)).alias("blk"),
+    ).select(
+        "_ref_id", "_ref_hash",
+        F.col("blk.w").alias("w"), F.col("blk.val").alias("val"),
+    )
+    hits = banded.join(
+        _cap_buckets(idx, ["w", "val"], max_bucket_size), ["w", "val"], "left"
+    )
+    hd = F.bit_count(F.col(hash_col).bitwiseXOR(F.col("_ref_hash")))
+    return hits.select(
+        *keys,
+        F.when(
+            F.col("_ref_hash").isNotNull() & (hd <= max_hamming), F.col("_ref_id")
+        ).alias("_match_ref"),
+    )
+
+
+def _verdict(keys: list[str], **screens: DataFrame) -> DataFrame:
+    """One row per document at watermark close: for each named screen's
+    (keys…, _match_ref) rows, the number of DISTINCT verified corpus
+    matches — collect_set dedupes a (doc, ref) pair met through several
+    bands/words/cells, the streaming equivalent of the batch pair-level
+    .distinct().  Several screens are UNIONED before the single
+    aggregation, so their fan-outs add instead of multiplying as a
+    chained-join plan would."""
+    cols = [quote_ident(c) for c in keys]
+    rows = None
+    for name, screen in screens.items():
+        tagged = screen.selectExpr(*cols, f"'{name}' AS _screen", "_match_ref")
+        rows = tagged if rows is None else rows.unionByName(tagged)
+    return rows.groupBy(*keys).agg(
+        *[
+            F.expr(
+                "CAST(size(collect_set(CASE WHEN _screen = "
+                f"'{name}' THEN _match_ref END)) AS BIGINT) AS {name}"
+            )
+            for name in screens
+        ]
+    )
+
+
+def _admission_base(
+    stream: DataFrame,
+    bloom: bytes | None,
+    bloom_num_hashes: int,
+    url_col: str,
+    id_col: str,
+    ts_col: str,
+    watermark: str,
+) -> tuple[DataFrame, list[str]]:
+    """(base, keys) of an admission query: :func:`streaming_url_dedup`,
+    then the Bloom exclusion of historical ids as ``_seen`` (map-only
+    probe; False without a filter).  The screens run off ``base`` and
+    their :func:`_admit` verdict groups by ``keys``."""
+    from img2dataset_spark.operators.bloom import probe_bloom
+
+    base = streaming_url_dedup(stream, url_col, id_col, ts_col, watermark)
+    if bloom is None:
+        base = base.withColumn("_seen", F.lit(False))
+    else:
+        base = probe_bloom(base, id_col, bloom, bloom_num_hashes, flag_col="_seen")
+    return base, [id_col, ts_col, "canonical_url", "_seen"]
+
+
+def _admit(keys: list[str], **screens: DataFrame) -> DataFrame:
+    """The screens' :func:`_verdict` plus ``admitted``: no historical
+    id hit and every count zero."""
+    admitted = ~F.coalesce(F.col("_seen"), F.lit(False))
+    for name in screens:
+        admitted = admitted & (F.col(name) == 0)
+    return (
+        _verdict(keys, **screens).withColumn("admitted", admitted).drop("_seen")
     )
 
 
@@ -216,29 +352,26 @@ def streaming_wave_admission(
     """The INGEST admission story as ONE streaming query — the
     streaming twin of the batch ingest_wave_e2e composition:
 
-    1. canonical-URL dedup within the watermark horizon (NULL urls
-       exempt, matching streaming_url_dedup);
+    1. canonical-URL dedup within the watermark horizon
+       (streaming_url_dedup, NULL urls exempt);
     2. Bloom exclusion against historical ids (map-only pandas-UDF
        probe — stateless, the broadcast bit array is the only data);
     3. near-dup screening vs a PREBUILT corpus index
        (operators.dedup.build_minhash_index read from parquet) with
        EXACT stream-static Jaccard verification: the index carries
        shingle_set alongside bands, so a band hit is verified with the
-       same array_intersect expression the batch verifier uses — no
-       state, no UDF, unlike streaming_neardup_flags which only counts
-       band collisions.
+       same expression the batch verifier uses — no state, no UDF,
+       unlike streaming_neardup_flags which only counts band
+       collisions.
 
     Verdict parity with the batch twin (minhash_lsh_pairs_vs) is exact
     by construction, not just on easy data: the corpus side applies the
     SAME max_bucket_size hot-band cap (bounding join fan-out on
-    degenerate bands exactly like the batch plan); the Jaccard is
-    floor-rounded to 6 dp with the shared operators.dedup.round6
-    expression BEFORE the threshold compare (a boundary pair rounds the
-    same way in both engines); and n_matches counts DISTINCT verified
-    corpus documents (collect_set of matched ref ids inside the
-    watermark aggregation — the streaming equivalent of the batch
-    pair-level .distinct(), since a doc sharing three bands with one
-    ref is still one near-dup).
+    degenerate bands exactly like the batch plan); the Jaccard is the
+    batch verifier's 6-dp floor-rounded expression, compared BEFORE the
+    threshold (a boundary pair rounds the same way in both engines);
+    and n_matches counts DISTINCT verified corpus documents (since a
+    doc sharing three bands with one ref is still one near-dup).
 
     Emits one row per admitted-or-rejected document at watermark close:
     (id, ts, canonical_url, n_matches, admitted) where admitted means
@@ -249,76 +382,15 @@ def streaming_wave_admission(
     the static side of a stream-static join (partitioned scan, no
     state), and per-micro-batch cost is the wave's own shingle/band
     pass — identical economics to the batch wave probe."""
-    from img2dataset_spark.functions.text_fast import (
-        make_minhash_bands_udf,
-        make_shingle_h32_udf,
+    base, keys = _admission_base(
+        stream, bloom, num_hashes, url_col, id_col, ts_col, watermark
     )
-    from img2dataset_spark.functions.url import canonical_url
-    from img2dataset_spark.operators.bloom import probe_bloom
-    from img2dataset_spark.operators.dedup import round6
-
-    cu = canonical_url(F.col(url_col))
-    key = _row_exempt_key(cu, id_col, ts_col)
-    deduped = (
-        ensure_event_time(
-            stream.withColumn("canonical_url", cu).withColumn("_dedup_key", key),
-            ts_col,
-        )
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_dedup_key"])
-        .drop("_dedup_key")
-    )
-    probed = probe_bloom(deduped, id_col, bloom, num_hashes, flag_col="_seen")
-
-    shingle_h32 = make_shingle_h32_udf(k)
-    bands = make_minhash_bands_udf(mh_num_hashes, mh_num_bands)
-    banded = probed.withColumn("_ss", shingle_h32(F.col(text_col))).withColumn(
-        "band",
-        F.explode_outer(F.when(F.size("_ss") > 0, bands(F.col("_ss")))),
-    )
-    # static side: explode the index, then drop hot bands — the same
-    # corpus-side max_bucket_size cap as minhash_lsh_pairs_vs, computed
-    # once on the static frame (stream-static join keeps it stateless)
-    idx = index.select(
-        F.col(id_col).alias("_ref_id"),
-        F.col("shingle_set").alias("_ref_ss"),
-        F.explode("bands").alias("band"),
-    )
-    bucket_sizes = idx.groupBy("band").count()
-    idx = idx.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("band"),
-        "band",
-    )
-    hits = banded.join(idx, "band", "left")
-    inter = F.size(F.array_intersect("_ss", "_ref_ss"))
-    union = F.size("_ss") + F.size("_ref_ss") - inter
-    # shared 6-dp rounding BEFORE the threshold compare — bit-identical
-    # to the batch verifier's accept filter on boundary jaccards
-    jacc = F.when(
-        F.col("_ref_ss").isNotNull() & (union > 0), round6(inter / union)
-    ).otherwise(F.lit(None))
-    flagged = hits.withColumn(
-        "_match_ref",
-        F.when(jacc >= jaccard_threshold, F.col("_ref_id")),
-    )
-    return (
-        flagged.groupBy(id_col, ts_col, "canonical_url", "_seen")
-        # collect_set dedupes (doc, ref) across shared bands: n_matches
-        # is the count of DISTINCT verified corpus near-dups, matching
-        # the batch pair-level .distinct()
-        .agg(
-            F.size(F.collect_set("_match_ref")).cast("long").alias("n_matches"),
-        )
-        .select(
-            id_col,
-            ts_col,
-            "canonical_url",
-            "n_matches",
-            (
-                ~F.coalesce(F.col("_seen"), F.lit(False))
-                & (F.col("n_matches") == 0)
-            ).alias("admitted"),
-        )
+    return _admit(
+        keys,
+        n_matches=_text_screen(
+            base, keys, index, text_col, id_col, k, mh_num_hashes,
+            mh_num_bands, jaccard_threshold, max_bucket_size,
+        ),
     )
 
 
@@ -341,13 +413,7 @@ def semantic_static_index(
     from img2dataset_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(corpus, codebook, vec_col, id_col)
-    ok = (
-        assigned.groupBy("cell")
-        .count()
-        .filter(F.col("count") <= max_cell_size)
-        .select("cell")
-    )
-    return assigned.join(ok, "cell").select(
+    return _cap_buckets(assigned, ["cell"], max_cell_size).select(
         "cell",
         F.col(id_col).alias("_ref_id"),
         F.col("v").alias("_ref_v"),
@@ -378,13 +444,7 @@ def semantic_static_codes_index(
 
     encode = make_bq_encode_udf(corpus.sparkSession, num_planes, dim)
     assigned = ivf_assign(corpus, codebook, vec_col, id_col)
-    ok = (
-        assigned.groupBy("cell")
-        .count()
-        .filter(F.col("count") <= max_cell_size)
-        .select("cell")
-    )
-    return assigned.join(ok, "cell").select(
+    return _cap_buckets(assigned, ["cell"], max_cell_size).select(
         "cell",
         F.col(id_col).alias("_ref_id"),
         encode(F.col("v")).alias("_ref_codes"),
@@ -572,6 +632,116 @@ def default_prescreen_hamming(
     return math.ceil(expected + 1.5 * math.sqrt(num_planes))
 
 
+def _semantic_screen(
+    base: DataFrame,
+    keys: list[str],
+    index: DataFrame | None,
+    codes_index: DataFrame | None,
+    ref_vectors: DataFrame | None,
+    codebook: DataFrame,
+    vec_col: str,
+    id_col: str,
+    threshold: float,
+    dim: int,
+    prescreen_max_hamming: int | None,
+    num_planes: int,
+    caller: str,
+) -> DataFrame:
+    """(keys…, _match_ref) rows of the semantic screen: each vector is
+    cell-assigned with the SAME _assign_cells quantized-argmin matmul
+    batch SemDeDup uses (the codebook must be FLAT — a hierarchical
+    codebook's cogroup hop is not a streaming shape), joined on the
+    cell against the static side and verified with the exact 6-dp
+    quantized cosine (make_pair_qcosine_udf).
+
+    With ``codes_index`` (:func:`semantic_static_codes_index`) the
+    static side carries BQ codes; a codegen popcount pre-screen
+    (cutoff ``prescreen_max_hamming``, default
+    :func:`default_prescreen_hamming`) drops non-candidates, and only
+    survivors join ``ref_vectors`` for the exact verdict.  ``caller``
+    names the public function in the errors raised here."""
+    from img2dataset_spark.operators.similarity import (
+        _as_double,
+        _assign_cells,
+        make_pair_qcosine_udf,
+    )
+
+    if "level" in codebook.columns:
+        raise ValueError(
+            f"{caller} requires a FLAT codebook (cell, centroid); the "
+            "hierarchical cogroup hop is not a streaming shape"
+        )
+    e = base.select(*keys, _as_double(F.col(vec_col)).alias("_v"))
+    assigned = _assign_cells(e, codebook, "_v", id_col)
+    if codes_index is not None:
+        from img2dataset_spark.operators.bq import (
+            hamming_between,
+            make_bq_encode_udf,
+        )
+
+        if ref_vectors is None:
+            raise ValueError(
+                f"{caller}: a codes index requires ref_vectors (the raw "
+                "(id, vector) corpus) for the exact re-verify of pre-screen "
+                "survivors"
+            )
+        cutoff = (
+            prescreen_max_hamming
+            if prescreen_max_hamming is not None
+            else default_prescreen_hamming(threshold, num_planes)
+        )
+        # width check at WIRING time: hamming_between returns NULL on a
+        # width mismatch, so a codes_index built with a different
+        # num_planes would silently disable the whole screen (every
+        # _cand NULL -> every duplicate admitted).  One static-side row
+        # names the misconfiguration loudly instead, matching the batch
+        # raise_error width guards.
+        expected_words = (num_planes + 31) // 32
+        probe = codes_index.select(F.size("_ref_codes").alias("_w")).first()
+        if probe is not None and probe["_w"] != expected_words:
+            raise ValueError(
+                f"{caller}: codes_index width {probe['_w']} words != "
+                f"ceil(num_planes/32) = {expected_words} "
+                f"(num_planes={num_planes}) — the index was encoded with a "
+                "different plane count; the pre-screen would silently admit "
+                "all duplicates"
+            )
+        enc = make_bq_encode_udf(base.sparkSession, num_planes, dim)
+        coded = assigned.withColumn("_codes", enc(F.col("_v")))
+        cand = coded.join(codes_index, "cell", "left")
+        ham = hamming_between(F.col("_codes"), F.col("_ref_codes"))
+        cand = cand.withColumn(
+            "_cand",
+            F.when(ham.isNotNull() & (ham <= cutoff), F.col("_ref_id")),
+        )
+        rv = ref_vectors.select(
+            F.col(id_col).alias("_rv_id"),
+            _as_double(F.col(vec_col)).alias("_ref_v"),
+        )
+        hits = cand.join(rv, cand["_cand"] == rv["_rv_id"], "left")
+        ref_present = F.col("_rv_id")
+    else:
+        hits = assigned.join(index, "cell", "left")
+        ref_present = F.col("_ref_id")
+    qcos = make_pair_qcosine_udf(dim)
+    # NULL ref rows (empty/capped corpus cell) ride a zero-vector into
+    # the Arrow verifier so the UDF never sees a None (np.stack would
+    # throw); their cos is NaN, and although Spark orders NaN ABOVE all
+    # numbers the ref null-guard below keeps them from flagging
+    zeros = F.array(*[F.lit(0.0)] * dim)
+    cos6 = qcos(F.col("_v"), F.coalesce(F.col("_ref_v"), zeros))
+    # ~isnan guard: a zero-NORM STREAM vector against a real corpus
+    # neighbor also yields NaN, and Spark orders NaN above every number
+    # (NaN >= t is TRUE) with the ref non-null — without the guard such
+    # a row would be wrongly flagged.  The batch twin's numpy compare
+    # treats NaN >= t as False, so the guard is also batch parity.
+    matched = F.when(
+        ref_present.isNotNull() & ~F.isnan(cos6) & (cos6 >= threshold),
+        ref_present,
+    )
+    return hits.select(*keys, matched.alias("_match_ref"))
+
+
 def streaming_semantic_flags(
     stream: DataFrame,
     index: DataFrame | None,
@@ -615,107 +785,25 @@ def streaming_semantic_flags(
     rows must carry a non-NULL ``dim``-length vector (they come from
     an embedder).
 
-    State knob (mirrors streaming_multimodal_admission): pass
+    State knob (shared with streaming_multimodal_admission): pass
     ``codes_index`` (:func:`semantic_static_codes_index`) +
     ``ref_vectors`` instead of the full-vector ``index`` and the
     per-micro-batch static join side carries 8-byte codes; a codegen
     popcount pre-screen gates the exact verify, which then runs only
     on survivors (probabilistic in the LSH-band sense)."""
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        _assign_cells,
-        make_pair_qcosine_udf,
-    )
-
-    if "level" in codebook.columns:
-        raise ValueError(
-            "streaming_semantic_flags requires a FLAT codebook (cell, "
-            "centroid); the hierarchical cogroup hop is not a streaming "
-            "shape"
-        )
     if index is None and codes_index is None:
         raise ValueError(
             "pass index (full-vector) or codes_index + ref_vectors "
             "(BQ pre-screen)"
         )
-    e = stream.select(
-        F.col(id_col), F.col(ts_col), _as_double(F.col(vec_col)).alias("_v")
+    keys = [id_col, ts_col]
+    rows = _semantic_screen(
+        ensure_event_time(stream, ts_col), keys, index, codes_index,
+        ref_vectors, codebook, vec_col, id_col, threshold, dim,
+        prescreen_max_hamming, num_planes, "streaming_semantic_flags",
     )
-    assigned = _assign_cells(e, codebook, "_v", id_col)
-    if codes_index is not None:
-        from img2dataset_spark.operators.bq import (
-            hamming_between,
-            make_bq_encode_udf,
-        )
-
-        if ref_vectors is None:
-            raise ValueError(
-                "codes_index requires ref_vectors (the raw (id, vector) "
-                "corpus) for the exact re-verify of pre-screen survivors"
-            )
-        cutoff = (
-            prescreen_max_hamming
-            if prescreen_max_hamming is not None
-            else default_prescreen_hamming(threshold, num_planes)
-        )
-        # width check at WIRING time: hamming_between returns NULL on a
-        # width mismatch, so a codes_index built with a different
-        # num_planes would silently disable the whole screen (every
-        # _cand NULL -> every duplicate admitted).  One static-side row
-        # names the misconfiguration loudly instead, matching the batch
-        # raise_error width guards.
-        expected_words = (num_planes + 31) // 32
-        probe = codes_index.select(
-            F.size("_ref_codes").alias("_w")
-        ).first()
-        if probe is not None and probe["_w"] != expected_words:
-            raise ValueError(
-                f"streaming_semantic_flags: codes_index width {probe['_w']} "
-                f"words != ceil(num_planes/32) = {expected_words} "
-                f"(num_planes={num_planes}) — the index was encoded with a "
-                "different plane count; the pre-screen would silently admit "
-                "all duplicates"
-            )
-        enc = make_bq_encode_udf(stream.sparkSession, num_planes, dim)
-        coded = assigned.withColumn("_codes", enc(F.col("_v")))
-        cand = coded.join(codes_index, "cell", "left")
-        ham = hamming_between(F.col("_codes"), F.col("_ref_codes"))
-        cand = cand.withColumn(
-            "_cand",
-            F.when(ham.isNotNull() & (ham <= cutoff), F.col("_ref_id")),
-        )
-        rv = ref_vectors.select(
-            F.col(id_col).alias("_rv_id"),
-            _as_double(F.col(vec_col)).alias("_ref_v"),
-        )
-        joined = cand.join(rv, cand["_cand"] == rv["_rv_id"], "left")
-        ref_present = F.col("_rv_id")
-    else:
-        joined = assigned.join(index, "cell", "left")
-        ref_present = F.col("_ref_id")
-    hits = ensure_event_time(joined, ts_col)
-    qcos = make_pair_qcosine_udf(dim)
-    # NULL ref rows (empty/capped corpus cell) ride a zero-vector into
-    # the Arrow verifier so the UDF never sees a None (np.stack would
-    # throw); their cos is NaN, and although Spark orders NaN ABOVE all
-    # numbers the ref null-guard below keeps them from flagging
-    zeros = F.array(*[F.lit(0.0)] * dim)
-    cos6 = qcos(F.col("_v"), F.coalesce(F.col("_ref_v"), zeros))
-    # ~isnan guard: a zero-NORM STREAM vector against a real corpus
-    # neighbor also yields NaN, and Spark orders NaN above every number
-    # (NaN >= t is TRUE) with the ref non-null — without the guard such
-    # a row would be wrongly flagged.  The batch twin's numpy compare
-    # treats NaN >= t as False, so the guard is also batch parity.
-    matched = F.when(
-        ref_present.isNotNull() & ~F.isnan(cos6) & (cos6 >= threshold),
-        ref_present,
-    )
-    return (
-        hits.withColumn("_m", matched)
-        .withWatermark(ts_col, watermark)
-        .groupBy(id_col, ts_col)
-        .agg(F.size(F.collect_set("_m")).cast("long").alias("n_matches"))
-        .withColumn("is_semantic_dup", F.col("n_matches") > 0)
+    return _verdict(keys, n_matches=rows.withWatermark(ts_col, watermark)).withColumn(
+        "is_semantic_dup", F.col("n_matches") > 0
     )
 
 
@@ -749,52 +837,13 @@ def streaming_phash_flags(
     (degenerate flat-image buckets); the only state is the
     watermark-bounded aggregation — the stream-static join itself is
     stateless, the 100 TB shape."""
-    from img2dataset_spark.operators.dedup import hash64_words
-
-    banded = (
-        stream.select(F.col(id_col), F.col(ts_col), F.col(hash_col))
-        .withColumn(
-            "blk",
-            F.explode_outer(
-                F.when(
-                    F.col(hash_col).isNotNull(),
-                    hash64_words(hash_col, max_hamming),
-                )
-            ),
-        )
-        .select(
-            id_col, ts_col, hash_col,
-            F.col("blk.w").alias("w"), F.col("blk.val").alias("val"),
-        )
+    keys = [id_col, ts_col]
+    rows = _image_screen(
+        ensure_event_time(stream, ts_col), keys, index, hash_col, id_col,
+        max_hamming, max_bucket_size,
     )
-    idx = index.select(
-        F.col(id_col).alias("_ref_id"),
-        F.col(hash_col).alias("_ref_hash"),
-    ).select(
-        "_ref_id", "_ref_hash",
-        F.explode(hash64_words("_ref_hash", max_hamming)).alias("blk"),
-    ).select(
-        "_ref_id", "_ref_hash",
-        F.col("blk.w").alias("w"), F.col("blk.val").alias("val"),
-    )
-    bucket_sizes = idx.groupBy("w", "val").count()
-    idx = idx.join(
-        bucket_sizes.filter(F.col("count") <= max_bucket_size).select("w", "val"),
-        ["w", "val"],
-    )
-    hits = ensure_event_time(
-        banded.join(idx, ["w", "val"], "left"), ts_col
-    )
-    hd = F.bit_count(F.col(hash_col).bitwiseXOR(F.col("_ref_hash")))
-    matched = F.when(
-        F.col("_ref_hash").isNotNull() & (hd <= max_hamming), F.col("_ref_id")
-    )
-    return (
-        hits.withColumn("_m", matched)
-        .withWatermark(ts_col, watermark)
-        .groupBy(id_col, ts_col)
-        .agg(F.size(F.collect_set("_m")).cast("long").alias("n_matches"))
-        .withColumn("is_dup", F.col("n_matches") > 0)
+    return _verdict(keys, n_matches=rows.withWatermark(ts_col, watermark)).withColumn(
+        "is_dup", F.col("n_matches") > 0
     )
 
 
@@ -829,10 +878,11 @@ def streaming_multimodal_admission(
     """The WHOLE multimodal ingest-admission story as ONE streaming
     query: canonical-URL dedup within the watermark, optional Bloom
     exclusion of historical ids, then all three corpus screens —
-    text MinHash+exact-Jaccard (streaming_wave_admission's stage 3),
-    perceptual pHash pigeonhole+bit_count (streaming_phash_flags),
-    and semantic cell+quantized-cosine (streaming_semantic_flags) —
-    each verified with the SAME expressions its batch twin uses.
+    text MinHash+exact-Jaccard (streaming_wave_admission's screen),
+    perceptual pHash pigeonhole+bit_count (streaming_phash_flags'),
+    and semantic cell+quantized-cosine (streaming_semantic_flags') —
+    the same screen functions, each verified with the SAME expressions
+    its batch twin uses.
 
     Semantic state knob (r9 verdict item 4): pass
     ``semantic_codes_index`` (:func:`semantic_static_codes_index`) +
@@ -846,7 +896,9 @@ def streaming_multimodal_admission(
     drops non-candidates, and ONLY survivors join back to full vectors
     for the same exact-cosine verdict.  The pre-screen is
     probabilistic in the LSH-band sense; the parity test pins verdict
-    equality with the unscreened query on the synthetic corpus.
+    equality with the unscreened query on the synthetic corpus.  A
+    codes index whose width does not match ``num_planes`` is refused
+    at wiring time.
 
     Composition shape: the three screens are built as separate
     stream-static left joins off the shared deduped base and then
@@ -866,199 +918,28 @@ def streaming_multimodal_admission(
     (placeholder rows, like the twins); vectors must be non-NULL
     ``dim``-length (they come from an embedder), and the codebook
     must be flat (streaming_semantic_flags' precondition)."""
-    from img2dataset_spark.functions.text_fast import (
-        make_minhash_bands_udf,
-        make_shingle_h32_udf,
-    )
-    from img2dataset_spark.functions.url import canonical_url
-    from img2dataset_spark.operators.dedup import hash64_words, round6
-    from img2dataset_spark.operators.similarity import (
-        _as_double,
-        _assign_cells,
-        make_pair_qcosine_udf,
-    )
-
-    if "level" in codebook.columns:
-        raise ValueError(
-            "streaming_multimodal_admission requires a FLAT codebook "
-            "(streaming_semantic_flags precondition)"
-        )
     if semantic_index is None and semantic_codes_index is None:
         raise ValueError(
             "pass semantic_index (full-vector) or semantic_codes_index "
             "+ ref_vectors (BQ pre-screen) — the semantic screen needs "
             "one of the two static shapes"
         )
-
-    cu = canonical_url(F.col(url_col))
-    key = _row_exempt_key(cu, id_col, ts_col)
-    deduped = (
-        ensure_event_time(
-            stream.withColumn("canonical_url", cu).withColumn("_dedup_key", key),
-            ts_col,
-        )
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_dedup_key"])
-        .drop("_dedup_key")
+    base, keys = _admission_base(
+        stream, bloom, bloom_num_hashes, url_col, id_col, ts_col, watermark
     )
-    if bloom is not None:
-        from img2dataset_spark.operators.bloom import probe_bloom
-
-        base = probe_bloom(deduped, id_col, bloom, bloom_num_hashes, flag_col="_seen")
-    else:
-        base = deduped.withColumn("_seen", F.lit(False))
-    keep = [id_col, ts_col, "canonical_url", "_seen"]
-
-    # --- text screen: minhash bands -> capped index join -> exact jaccard
-    shingle_h32 = make_shingle_h32_udf(k)
-    bands = make_minhash_bands_udf(mh_num_hashes, mh_num_bands)
-    t_banded = base.select(*keep, F.col(text_col)).withColumn(
-        "_ss", shingle_h32(F.col(text_col))
-    ).withColumn(
-        "band",
-        F.explode_outer(F.when(F.size("_ss") > 0, bands(F.col("_ss")))),
-    )
-    t_idx = text_index.select(
-        F.col(id_col).alias("_ref_id"),
-        F.col("shingle_set").alias("_ref_ss"),
-        F.explode("bands").alias("band"),
-    )
-    t_sizes = t_idx.groupBy("band").count()
-    t_idx = t_idx.join(
-        t_sizes.filter(F.col("count") <= max_bucket_size).select("band"), "band"
-    )
-    t_hits = t_banded.join(t_idx, "band", "left")
-    inter = F.size(F.array_intersect("_ss", "_ref_ss"))
-    union = F.size("_ss") + F.size("_ref_ss") - inter
-    jacc = F.when(
-        F.col("_ref_ss").isNotNull() & (union > 0), round6(inter / union)
-    )
-    text_screen = t_hits.select(
-        *keep,
-        F.lit("text").alias("_screen"),
-        F.when(jacc >= jaccard_threshold, F.col("_ref_id")).alias("_match_ref"),
-    )
-
-    # --- image screen: pigeonhole words -> capped index join -> bit_count
-    p_banded = base.select(*keep, F.col(phash_col)).withColumn(
-        "blk",
-        F.explode_outer(
-            F.when(F.col(phash_col).isNotNull(), hash64_words(phash_col, max_hamming))
+    return _admit(
+        keys,
+        n_text_matches=_text_screen(
+            base, keys, text_index, text_col, id_col, k, mh_num_hashes,
+            mh_num_bands, jaccard_threshold, max_bucket_size,
         ),
-    ).select(
-        *keep, phash_col,
-        F.col("blk.w").alias("w"), F.col("blk.val").alias("val"),
-    )
-    p_idx = phash_index.select(
-        F.col(id_col).alias("_ref_id"), F.col(phash_col).alias("_ref_hash")
-    ).select(
-        "_ref_id", "_ref_hash",
-        F.explode(hash64_words("_ref_hash", max_hamming)).alias("blk"),
-    ).select(
-        "_ref_id", "_ref_hash",
-        F.col("blk.w").alias("w"), F.col("blk.val").alias("val"),
-    )
-    p_sizes = p_idx.groupBy("w", "val").count()
-    p_idx = p_idx.join(
-        p_sizes.filter(F.col("count") <= max_bucket_size).select("w", "val"),
-        ["w", "val"],
-    )
-    p_hits = p_banded.join(p_idx, ["w", "val"], "left")
-    hd = F.bit_count(F.col(phash_col).bitwiseXOR(F.col("_ref_hash")))
-    image_screen = p_hits.select(
-        *keep,
-        F.lit("image").alias("_screen"),
-        F.when(
-            F.col("_ref_hash").isNotNull() & (hd <= max_hamming), F.col("_ref_id")
-        ).alias("_match_ref"),
-    )
-
-    # --- semantic screen: cell assign -> index join -> quantized cosine
-    s_base = base.select(*keep, _as_double(F.col(vec_col)).alias("_v"))
-    s_assigned = _assign_cells(s_base, codebook, "_v", id_col)
-    if semantic_codes_index is not None:
-        # BQ pre-screen path: popcount Hamming over 8-byte static codes
-        # gates the expensive exact verify; full vectors join by id for
-        # SURVIVORS only.
-        from img2dataset_spark.operators.bq import (
-            hamming_between,
-            make_bq_encode_udf,
-        )
-
-        if ref_vectors is None:
-            raise ValueError(
-                "semantic_codes_index requires ref_vectors (the raw "
-                "(id, vector) corpus) for the exact re-verify of "
-                "pre-screen survivors"
-            )
-        cutoff = (
-            prescreen_max_hamming
-            if prescreen_max_hamming is not None
-            else default_prescreen_hamming(cosine_threshold, num_planes)
-        )
-        enc = make_bq_encode_udf(stream.sparkSession, num_planes, dim)
-        s_coded = s_assigned.withColumn("_codes", enc(F.col("_v")))
-        cand_hits = s_coded.join(semantic_codes_index, "cell", "left")
-        ham = hamming_between(F.col("_codes"), F.col("_ref_codes"))
-        cand_hits = cand_hits.withColumn(
-            "_cand",
-            F.when(ham.isNotNull() & (ham <= cutoff), F.col("_ref_id")),
-        )
-        rv = ref_vectors.select(
-            F.col(id_col).alias("_rv_id"),
-            _as_double(F.col(vec_col)).alias("_ref_v"),
-        )
-        s_hits = cand_hits.join(
-            rv, cand_hits["_cand"] == rv["_rv_id"], "left"
-        )
-        ref_present = F.col("_rv_id")
-    else:
-        s_hits = s_assigned.join(semantic_index, "cell", "left")
-        ref_present = F.col("_ref_id")
-    qcos = make_pair_qcosine_udf(dim)
-    zeros = F.array(*[F.lit(0.0)] * dim)
-    cos6 = qcos(F.col("_v"), F.coalesce(F.col("_ref_v"), zeros))
-    semantic_screen = s_hits.select(
-        *keep,
-        F.lit("semantic").alias("_screen"),
-        F.when(
-            # ~isnan: zero-norm stream vector vs a real neighbor is NaN,
-            # and NaN >= t is TRUE in Spark (see streaming_semantic_flags)
-            ref_present.isNotNull()
-            & ~F.isnan(cos6)
-            & (cos6 >= cosine_threshold),
-            ref_present,
-        ).alias("_match_ref"),
-    )
-
-    unioned = text_screen.unionByName(image_screen).unionByName(semantic_screen)
-
-    def _count(screen: str):
-        return F.size(
-            F.collect_set(
-                F.when(F.col("_screen") == screen, F.col("_match_ref"))
-            )
-        ).cast("long")
-
-    return (
-        unioned.groupBy(id_col, ts_col, "canonical_url", "_seen")
-        .agg(
-            _count("text").alias("n_text_matches"),
-            _count("image").alias("n_image_matches"),
-            _count("semantic").alias("n_semantic_matches"),
-        )
-        .select(
-            id_col,
-            ts_col,
-            "canonical_url",
-            "n_text_matches",
-            "n_image_matches",
-            "n_semantic_matches",
-            (
-                ~F.coalesce(F.col("_seen"), F.lit(False))
-                & (F.col("n_text_matches") == 0)
-                & (F.col("n_image_matches") == 0)
-                & (F.col("n_semantic_matches") == 0)
-            ).alias("admitted"),
-        )
+        n_image_matches=_image_screen(
+            base, keys, phash_index, phash_col, id_col, max_hamming,
+            max_bucket_size,
+        ),
+        n_semantic_matches=_semantic_screen(
+            base, keys, semantic_index, semantic_codes_index, ref_vectors,
+            codebook, vec_col, id_col, cosine_threshold, dim,
+            prescreen_max_hamming, num_planes, "streaming_multimodal_admission",
+        ),
     )

@@ -1,16 +1,7 @@
 """Build-counter guards for the IVF searchers: the Spark jobs and Py4J
 commands one WARM plan build costs (every codebook, bounds, override
-and query frame already memoized), per searcher shape and codec.
-
-Both counters are deterministic for a given code path, so these are
-performance regression guards that machine load cannot flake:
-
-- jobs: ``statusTracker().getJobIdsForGroup`` over a job group set
-  around the build;
-- Py4J commands: a counting wrapper on the gateway client's
-  ``send_command``.  The release command a garbage-collected JavaObject
-  proxy sends is not counted: when it is sent is up to Python's
-  collector, not to the build.
+and query frame already memoized), per searcher shape and codec,
+counted with ``tests/counters.py``.
 
 Each bound is the count the searcher had before the IVF search core
 (4,000 x 64 vectors, 16 cells, 8 queries), or the lower count the core
@@ -22,15 +13,12 @@ first build memoizes it, so the warm build runs no filter+collect job.
 
 from __future__ import annotations
 
-import gc
-
 import numpy as np
 import pytest
 
-N, DIM, CELLS, NQ = 4000, 64, 16, 8
+from tests.counters import count_build
 
-# py4j's memory-release command prefix (JavaObject finalization)
-_RELEASE = "m\nd\n"
+N, DIM, CELLS, NQ = 4000, 64, 16, 8
 
 # (jobs, Py4J commands) per warm build; "was" is the count before
 # the IVF search core
@@ -150,27 +138,7 @@ def measure(spark, fx: _Fixture, name: str) -> tuple[int, int]:
     build fills every memo, the second is counted."""
     build = fx.build(name)
     build()
-    sc = spark.sparkContext
-    group = f"ivf_counters_{name}"
-    sc.setJobGroup(group, name)
-    client = sc._gateway._gateway_client
-    orig = client.send_command
-    calls = [0]
-
-    def counting(command, *a, **kw):
-        if not command.startswith(_RELEASE):
-            calls[0] += 1
-        return orig(command, *a, **kw)
-
-    gc.collect()
-    client.send_command = counting
-    try:
-        build()
-    finally:
-        client.send_command = orig
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    sc.setJobGroup("", "")
-    return jobs, calls[0]
+    return count_build(spark, build, f"ivf_counters_{name}")
 
 
 @pytest.fixture(scope="module")

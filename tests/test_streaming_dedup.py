@@ -214,7 +214,7 @@ def test_streaming_wave_admission_matches_batch(spark, tmp_path):
     q = (
         streaming_wave_admission(
             stream, index, bloom, 7, k=3, watermark="10 minutes",
-            jaccard_threshold=0.3, max_bucket_size=2,
+            jaccard_threshold=0.3, max_bucket_size=1,
         )
         .writeStream.outputMode("append")
         .format("memory")
@@ -233,7 +233,7 @@ def test_streaming_wave_admission_matches_batch(spark, tmp_path):
         .filter("maybe_seen").collect()
     }
     batch_pairs = minhash_lsh_pairs_vs(
-        wave, corpus, k=3, jaccard_threshold=0.3, max_bucket_size=2
+        wave, corpus, k=3, jaccard_threshold=0.3, max_bucket_size=1
     )
     n_matches_batch = {
         r["id_a"]: r["n"]
@@ -248,7 +248,7 @@ def test_streaming_wave_admission_matches_batch(spark, tmp_path):
     # nothing about cap parity) — some corpus band bucket exceeds it
     hot = (
         index.select(F.explode("bands").alias("band"))
-        .groupBy("band").count().filter("count > 2").count()
+        .groupBy("band").count().filter("count > 1").count()
     )
     assert hot > 0, "test data no longer exercises the bucket cap"
 

@@ -751,13 +751,15 @@ def test_streaming_semantic_flags_rejects_prescreen_width_mismatch(spark):
     """A codes_index encoded with a different num_planes must fail at
     WIRING time: hamming_between returns NULL on a width mismatch, so
     the pre-screen would otherwise silently admit every duplicate
-    (r10 ADVICE)."""
+    (r10 ADVICE).  The multimodal admission's semantic screen carries
+    the same check."""
     import pytest
     from pyspark.sql import functions as F
 
     from img2dataset_spark.operators.similarity import ivf_fit
     from img2dataset_spark.streaming.dedup import (
         semantic_static_codes_index,
+        streaming_multimodal_admission,
         streaming_semantic_flags,
     )
 
@@ -769,11 +771,30 @@ def test_streaming_semantic_flags_rejects_prescreen_width_mismatch(spark):
     stream = corpus.select(
         "vec_id", F.current_timestamp().alias("ts"), "embedding"
     )
+    refs = corpus.select("vec_id", "embedding")
     with pytest.raises(ValueError, match="codes_index width"):
         streaming_semantic_flags(
             stream, index=None, codebook=cb,
             codes_index=narrow_idx,
-            ref_vectors=corpus.select("vec_id", "embedding"),
+            ref_vectors=refs,
+            num_planes=64,
+        )
+    mm_stream = stream.select(
+        "vec_id", "ts", "embedding",
+        F.lit("http://synth.local/a.jpg").alias("url"),
+        F.lit("some text").alias("text"),
+        F.lit(0).cast("long").alias("phash"),
+    )
+    text_index = spark.createDataFrame(
+        [], "vec_id long, shingle_set array<long>, bands array<string>"
+    )
+    phash_index = spark.createDataFrame([], "vec_id long, phash long")
+    with pytest.raises(ValueError, match="codes_index width"):
+        streaming_multimodal_admission(
+            mm_stream, text_index, phash_index, semantic_index=None,
+            codebook=cb, id_col="vec_id",
+            semantic_codes_index=narrow_idx,
+            ref_vectors=refs,
             num_planes=64,
         )
 
